@@ -62,13 +62,15 @@ object MiniSqlCli {
         case e: Exception => println(s"Oops, error - please retry (${e.getMessage})")
       }
 
-    if (args.length > 1) runOne(args(1))
-    else {
-      Iterator.continually { print("SqlEngine> "); Console.flush(); scala.io.StdIn.readLine() }
-        .takeWhile(l => l != null && l.trim != "quit" && l.trim != "q")
-        .filter(_.trim.nonEmpty)
-        .foreach(runOne)
-    }
+    try {
+      if (args.length > 1) runOne(args(1))
+      else {
+        Iterator.continually { print("SqlEngine> "); Console.flush(); scala.io.StdIn.readLine() }
+          .takeWhile(l => l != null && l.trim != "quit" && l.trim != "q")
+          .filter(_.trim.nonEmpty)
+          .foreach(runOne)
+      }
+    } finally engine.close()
     spark.stop()
   }
 }

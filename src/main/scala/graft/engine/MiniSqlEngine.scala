@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
+import graft.operators.Caching
 import graft.sources.CsvCatalog.RowId
 import MiniSql._
 
@@ -13,12 +14,13 @@ import MiniSql._
   * (parse → checkTables → solveCondition → printTable,
   * /root/reference/sqlengine.py:700-718).
   *
-  * Notably there is no hand-built join kernel: multi-table FROM becomes
-  * a cross join and WHERE becomes a filter on top; Catalyst's
-  * PushPredicateThroughJoin + join planning turn `t1,t2 WHERE
-  * t1.B=t2.B` into a real equi-join (broadcast/shuffled-hash/sort-merge
-  * by stats) — replacing the reference's O(n·m) nested loop
-  * (sqlengine.py:483-487) with the planner's choice.
+  * There is no hand-built join kernel: multi-table FROM becomes a cross
+  * join and WHERE becomes a filter on top, which Catalyst pushes into
+  * the join condition. How that join is planned depends on the layout
+  * (see the parity-scale contract below): with `fileOrder` on it is one
+  * in-partition cartesian product plus the filter; with `fileOrder` off
+  * the planner picks the strategy from its statistics (broadcast,
+  * shuffled hash or sort-merge for `t1,t2 WHERE t1.B=t2.B`).
   *
   * Reference-surface semantics kept (SURVEY.md §7.1): uppercase
   * `TABLE.COL` output headers, `*` expansion in FROM/metadata order,
@@ -37,24 +39,69 @@ import MiniSql._
   * HAVING. Groups emit in grouping-key order (file order has no
   * meaning post-aggregation).
   *
-  * '''Parity-scale contract''': plain-projection queries end in a
-  * global `orderBy` on per-table row-ids to reproduce the reference's
-  * file-order output — a total sort, priced for the reference's
-  * fixture scale (10–320-row CSVs), NOT for big tables. Pointing the
-  * dialect at large data: pass `fileOrder = false` to skip the
-  * implicit sort (rows then arrive in partition order, like any
-  * ORDER BY-less SQL engine) or keep a `LIMIT` on the query — with
-  * `fileOrder` on, LIMIT plans as Spark's TakeOrderedAndProject
-  * (per-partition top-k, no global sort materialized).
+  * '''Parity-scale contract''' (`fileOrder = true`, the default): priced
+  * for the reference's fixture scale (10–320-row CSVs), NOT for big
+  * tables.
+  *  - Order: plain-projection queries end in a global `orderBy` on
+  *    per-table row-ids to reproduce the reference's file-order output.
+  *  - Layout: the first statement that reads a table pins it as ONE
+  *    in-memory partition (`coalesce(1)`, then an eager local
+  *    checkpoint); later statements read the pin, so no CSV is
+  *    re-parsed. Every input then reports a single partition, which
+  *    already satisfies the distribution that whole-column aggregates,
+  *    DISTINCT, GROUP BY and sorts require, so no exchange is planned.
+  *    A checkpoint rather than `cache()`: a cached table is read through
+  *    an in-memory columnar scan, which adaptive execution turns into a
+  *    table-cache query stage on every statement (one more async round
+  *    trip and a re-optimization), and whose batch-statistics filter
+  *    is generated code compiled anew for each WHERE literal. The
+  *    checkpoint is a plain row scan with neither.
+  *  - Joins: each frame of a multi-table FROM carries a
+  *    `shuffle_replicate_nl` hint, so the product plans as one
+  *    `CartesianProduct` of single partitions with the WHERE as its
+  *    condition — no broadcast job. The product reports no partitioning,
+  *    so its file-order sort needs no exchange only under a row limit:
+  *    the CLI renders with `take`, a top-k inside the one partition,
+  *    while a plain `collect` of a join range-partitions it first.
   *
-  * @param fileOrder emit rows in reference file order (default). An
-  *        explicit ORDER BY still sorts either way. */
+  * Each statement the CLI renders thus runs as one job of one stage.
+  * The engine owns its pins; [[close]] releases them. For large data
+  * pass `fileOrder = false`: tables stay lazy scans, nothing is pinned,
+  * the planner picks joins by statistics, and the implicit sort is
+  * skipped (rows arrive in partition order, like any ORDER BY-less SQL
+  * engine). Or keep a `LIMIT` on the query — with `fileOrder` on, LIMIT
+  * plans as Spark's TakeOrderedAndProject (top-k, no global sort
+  * materialized).
+  *
+  * @param fileOrder emit rows in reference file order from pinned
+  *        single-partition tables (default). An explicit ORDER BY still
+  *        sorts either way. */
 final class MiniSqlEngine(catalog: Map[String, DataFrame],
-    fileOrder: Boolean = true) {
+    fileOrder: Boolean = true) extends AutoCloseable {
 
   /** table → ordered data columns (metadata order, uppercase). */
   private val tableCols: Map[String, Seq[String]] =
     catalog.map { case (t, df) => t -> df.columns.filterNot(_ == RowId).toSeq }
+
+  /** table → its pin (parity-scale layout; see the class doc). */
+  private val pins = scala.collection.mutable.Map.empty[String, DataFrame]
+
+  /** The frame a statement reads for `t`: under the parity-scale
+    * contract the table's pin, made on first use; else the catalog's. */
+  private def source(t: String): DataFrame =
+    if (!fileOrder) catalog(t)
+    else pins.synchronized(
+      pins.getOrElseUpdate(t, catalog(t).coalesce(1).localCheckpoint()))
+
+  /** Tables pinned so far. */
+  private[graft] def pinned: Set[String] = pins.synchronized(pins.keySet.toSet)
+
+  /** Frees every pin's blocks and waits until they are gone. A later
+    * statement pins its tables again. */
+  def close(): Unit = pins.synchronized {
+    pins.values.foreach(Caching.freeLocalCheckpoint(_, blocking = true))
+    pins.clear()
+  }
 
   private def phys(t: String, c: String) = s"${t}__$c"
   private def physRow(t: String) = s"${t}__$RowId"
@@ -74,7 +121,9 @@ final class MiniSqlEngine(catalog: Map[String, DataFrame],
     }
     val renamed = tables.map { t =>
       val cols = tableCols(t).map(c => col(c).as(phys(t, c))) :+ col(RowId).as(physRow(t))
-      catalog(t).select(cols: _*)
+      val df = source(t).select(cols: _*)
+      // the parity-scale join rule (class doc)
+      if (fileOrder && tables.size > 1) df.hint("shuffle_replicate_nl") else df
     }
     val joined = renamed.reduceLeft(_.crossJoin(_))
 

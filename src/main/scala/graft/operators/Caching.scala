@@ -53,6 +53,20 @@ private[graft] object Caching {
     if (persist) { tracker.add(df); df.persist(StorageLevel.MEMORY_AND_DISK) }
     else df
 
+  /** `df.localCheckpoint(true)`, registered with `tracker` BEFORE the
+    * job that materializes it. If that job throws (a contract check
+    * inside `df` firing), [[PersistTracker.release]] still frees what
+    * it cached; an eager checkpoint would throw before returning the
+    * frame, leaving its RDD to the ContextCleaner. Same single job as
+    * the eager form. */
+  def localCheckpoint(df: DataFrame, tracker: PersistTracker): DataFrame = {
+    val ckpt = tracker.addCheckpoint(df.localCheckpoint(eager = false))
+    ckpt.queryExecution.logical match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.count()
+    }
+    ckpt
+  }
+
   /** Free the storage blocks behind a `localCheckpoint(true)`-ed frame.
     *
     * `Dataset.unpersist()` only releases catalog-cached plans; a local
@@ -67,9 +81,14 @@ private[graft] object Caching {
     * frame is unusable afterwards: its lineage was truncated to the
     * very blocks being freed — never free the loop's final result). */
   def freeLocalCheckpoint(df: DataFrame): Unit =
+    freeLocalCheckpoint(df, blocking = false)
+
+  /** [[freeLocalCheckpoint]]; with `blocking` it returns only once the
+    * blocks are gone. */
+  def freeLocalCheckpoint(df: DataFrame, blocking: Boolean): Unit =
     df.queryExecution.logical match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
+        lr.rdd.unpersist(blocking)
       case _ => () // not a checkpointed frame — nothing to free
     }
 }

@@ -46,22 +46,27 @@ object TextAnalysis {
   def hitCount(toks: Column, words: Seq[String]): Column =
     size(filter(toks, w => array_contains(litArray(words), w))).cast(LongType)
 
+  /** `c / n_tokens` as a double; NULL for a zero-token (empty or
+    * whitespace-only) text instead of an ANSI DIVIDE_BY_ZERO — the
+    * same NULL the DuckDB oracles' division by zero yields. */
+  private def perToken(c: Column): Column =
+    c.cast(DoubleType) / when(col("n_tokens") =!= 0L, col("n_tokens"))
+
   /** Adds n_tokens / n_chars / avg_token_len / distinct_ratio /
     * stopword_ratio columns derived from `textCol`. Map-only, no
     * shuffle; the token array is materialized once (`__toks`) so the
-    * five derived columns don't each re-run the tokenizer. */
+    * five derived columns don't each re-run the tokenizer. The ratios
+    * are NULL for a zero-token text. */
   def withTokenStats(df: DataFrame, textCol: String = "text"): DataFrame = {
     val toks = col("__toks")
     df.withColumn("__toks", tokens(col(textCol)))
       .withColumn("n_tokens", size(toks).cast(LongType))
       .withColumn("n_chars", length(col(textCol)).cast(LongType))
-      .withColumn("avg_token_len",
-        aggregate(toks, lit(0L), (acc, w) => acc + length(w).cast(LongType))
-          .cast(DoubleType) / col("n_tokens"))
-      .withColumn("distinct_ratio",
-        size(array_distinct(toks)).cast(DoubleType) / col("n_tokens"))
+      .withColumn("avg_token_len", perToken(
+        aggregate(toks, lit(0L), (acc, w) => acc + length(w).cast(LongType))))
+      .withColumn("distinct_ratio", perToken(size(array_distinct(toks))))
       .withColumn("stopword_ratio",
-        hitCount(toks, StopwordProfiles("en")).cast(DoubleType) / col("n_tokens"))
+        perToken(hitCount(toks, StopwordProfiles("en"))))
       .drop("__toks")
   }
 
@@ -165,7 +170,10 @@ object TextAnalysis {
     * cheap repetition proxy; [[repetitionStats]] has the full n-gram
     * version). Map-only codegen'd projection — the token array
     * materializes once and all six rules read it; at 100 TB this is a
-    * single scan with no shuffle at all. */
+    * single scan with no shuffle at all. A zero-token (empty or
+    * whitespace-only) text has NULL ratios, so only the count rules
+    * (`too_few_tokens`, `low_stopword_hits`) can fail it; a NULL text
+    * has NULL stats throughout and fails no rule, as in the oracle. */
   def filterBattery(df: DataFrame, idCol: String = "doc_id",
       textCol: String = "text",
       minTokens: Long = 50, maxTokens: Long = 100000,
@@ -176,14 +184,11 @@ object TextAnalysis {
     val stats = df.select(col(idCol), col(textCol))
       .withColumn("__toks", tokens(col(textCol)))
       .withColumn("n_tokens", size(toks).cast(LongType))
-      .withColumn("__avg",
-        aggregate(toks, lit(0L), (acc, w) => acc + length(w).cast(LongType))
-          .cast(DoubleType) / col("n_tokens"))
-      .withColumn("__alpha",
-        size(filter(toks, w => w.rlike("[a-z]"))).cast(DoubleType) / col("n_tokens"))
+      .withColumn("__avg", perToken(
+        aggregate(toks, lit(0L), (acc, w) => acc + length(w).cast(LongType))))
+      .withColumn("__alpha", perToken(size(filter(toks, w => w.rlike("[a-z]")))))
       .withColumn("__stop", hitCount(toks, StopwordProfiles("en")))
-      .withColumn("__dr",
-        size(array_distinct(toks)).cast(DoubleType) / col("n_tokens"))
+      .withColumn("__dr", perToken(size(array_distinct(toks))))
     val rules: Seq[(String, Column)] = Seq(
       "too_few_tokens" -> (col("n_tokens") < minTokens),
       "too_many_tokens" -> (col("n_tokens") > maxTokens),

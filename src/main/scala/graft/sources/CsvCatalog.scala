@@ -25,7 +25,10 @@ import scala.jdk.CollectionConverters._
   * DISTINCT (sqlengine.py:664-665). File order is only stable on a
   * single input split — true for the fixture-scale CSVs this dialect
   * serves; the large-scale surface is the DataFrame API, not this
-  * loader.
+  * loader. The frames stay lazy: every scan re-parses the CSV and
+  * re-derives the row ids, until [[graft.engine.MiniSqlEngine]] pins a
+  * table (parity-scale mode), which fixes its row ids for every later
+  * statement.
   */
 object CsvCatalog {
 

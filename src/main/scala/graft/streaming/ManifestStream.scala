@@ -120,17 +120,18 @@ object ManifestStream {
     val fPrev = SnapshotStore.stateSoFar(spark, s"$rootDir/f", id,
       batch.select(lit(Long.MinValue).as("last_seq")).filter(lit(false)))
     val frontier = SnapshotStore.seqFrontier(fPrev, batch, "ManifestStream")
-    // gate once, consume thrice (cluster fold, meta delta, and the
-    // maintenance-internal key reductions) — eager checkpoint keeps
-    // the batch-bounded curated feed from re-classifying per consumer;
-    // freed in the finally below so a frontier-guard trip or a
-    // classify contract violation cannot strand the blocks (gateFeed's
-    // internal winner-reduction persist rides the same tracker)
-    val gated = Cdc.gateFeed(
-      batch.select(col("seq"), col("op"), col("id"), col("text"),
-        col("lang")), "id", "seq", "op", tracker = tracker)(classify)
-      .localCheckpoint(true)
     try {
+      // gate once, consume thrice (cluster fold, meta delta, and the
+      // maintenance-internal key reductions) — eager checkpoint keeps
+      // the batch-bounded curated feed from re-classifying per
+      // consumer. Inside the try: a classify contract violation throws
+      // from this checkpoint, and the finally must still release it,
+      // gateFeed's winner-reduction persist and the state persists
+      // above, all on the same tracker
+      val gated = Caching.localCheckpoint(Cdc.gateFeed(
+        batch.select(col("seq"), col("op"), col("id"), col("text"),
+          col("lang")), "id", "seq", "op", tracker = tracker)(classify),
+        tracker)
       val upd = Dedup.clustersMaintainUpdate(prev,
         gated.select(col("seq"), col("op"), col("id"), col("text")),
         "id", "text", "seq", "op", maxHamming, chunks, tracker = tracker)
@@ -200,10 +201,7 @@ object ManifestStream {
           .foreach { case (h, k) =>
             DeltaStore.compact(spark, s"$rootDir/$h", k)
           }
-    } finally {
-      tracker.release()
-      Caching.freeLocalCheckpoint(gated)
-    }
+    } finally tracker.release()
   }
 
   /** Sink a document change feed as a continuously-maintained

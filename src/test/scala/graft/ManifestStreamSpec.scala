@@ -197,6 +197,25 @@ class ManifestStreamSpec extends SparkSpec {
     assert(mRows(ManifestStream.readManifest(spark, root)) == before)
   }
 
+  test("a classify contract violation still releases the batch's persists") {
+    val root = java.nio.file.Files.createTempDirectory("mf_cv").toString
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    // a NULL keep value breaks gateFeed's classify contract: the eager
+    // checkpoint of the gated feed throws
+    val nullKeep: DataFrame => DataFrame =
+      _.select(col("id"), lit(null).cast("boolean").as("keep"))
+    val e = intercept[Throwable] {
+      ManifestStream.foldBatch(fDf(fb0), 0L, root, nullKeep,
+        length(col("text")).cast("long"), splits, maxHamming = 0)
+    }
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => Option(t.getMessage).getOrElse("")).toSeq
+    assert(msgs.exists(_.contains("NULL keep value")), s"contract: $msgs")
+    val left = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
+    assert(left.isEmpty, s"persisted RDDs left behind: ${left.values.mkString(", ")}")
+  }
+
   test("real stream with an injected crash replays exactly-once across " +
       "all six homes") {
     val src = java.nio.file.Files.createTempDirectory("mf_src").toString

@@ -1,12 +1,22 @@
 package graft
 
+import org.apache.spark.graft.TestHooks
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.storage.StorageLevel
+import org.scalatest.BeforeAndAfterAll
 
-import graft.engine.{MiniSqlEngine, MiniSql}
+import graft.engine.{AsciiTable, MiniSqlEngine, MiniSql}
 import graft.engine.MiniSql.MiniSqlError
 import graft.sources.CsvCatalog
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
+import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 /** Golden parity suite: the 15 official queries from
@@ -15,12 +25,25 @@ import scala.jdk.CollectionConverters._
   * nothing copied). Expected values are computed from the fixture files
   * by a naive in-memory model, so the assertions hold for any fixture
   * content. Divergences from reference bugs (SURVEY.md §2.12) are
-  * asserted as the REBUILD's semantics, marked `≠ref`. */
-class MiniSqlSpec extends SparkSpec {
+  * asserted as the REBUILD's semantics, marked `≠ref`. The plan-shape
+  * and release tests write their own reference-style catalog instead. */
+class MiniSqlSpec extends SparkSpec with BeforeAndAfterAll
+    with AdaptiveSparkPlanHelper {
 
   private val fixtureDir = "/root/reference/TestCases"
 
-  private lazy val engine = new MiniSqlEngine(CsvCatalog.load(spark, fixtureDir))
+  /** Every engine the suite builds; each is closed in `afterAll`. */
+  private val engines = ArrayBuffer.empty[MiniSqlEngine]
+  private def open(tables: Map[String, DataFrame],
+      fileOrder: Boolean = true): MiniSqlEngine = {
+    val e = new MiniSqlEngine(tables, fileOrder)
+    engines += e
+    e
+  }
+  override def afterAll(): Unit =
+    try engines.foreach(_.close()) finally super.afterAll()
+
+  private lazy val engine = open(CsvCatalog.load(spark, fixtureDir))
 
   /** naive model: table → rows of col → value (metadata + csv re-parse) */
   private lazy val model: Map[String, (Seq[String], Vector[Vector[Long]])] = {
@@ -280,8 +303,7 @@ class MiniSqlSpec extends SparkSpec {
   }
 
   test("extension: fileOrder=false skips the implicit row-id sort (parity-scale contract)") {
-    val unordered = new MiniSqlEngine(CsvCatalog.load(spark, fixtureDir),
-      fileOrder = false)
+    val unordered = open(CsvCatalog.load(spark, fixtureDir), fileOrder = false)
     val df = unordered.execute("select A, B from table1")
     // same multiset of rows…
     val (cols, rws) = model("table1")
@@ -294,6 +316,10 @@ class MiniSqlSpec extends SparkSpec {
     // an explicit ORDER BY still sorts
     val sorted = unordered.execute("select A from table1 order by A desc")
     assert(rows(sorted).flatten == colVals("table1", "A").sortBy(-_))
+    // …and nothing was pinned: the tables stay lazy scans
+    assert(unordered.pinned.isEmpty)
+    assert(collect(sorted.queryExecution.executedPlan) {
+      case s: RDDScanExec => s }.isEmpty)
   }
 
   test("CLI: malformed cells are counted per table (ref per-cell warning, sqlengine.py:146-147)") {
@@ -305,5 +331,167 @@ class MiniSqlSpec extends SparkSpec {
     val counts = CsvCatalog.malformedCellCounts(CsvCatalog.load(spark, dir.toString))
     assert(counts("bad") == 1L)  // the one non-integer cell → NULL, warned
     assert(counts("good") == 0L) // clean table stays silent
+  }
+
+  // -- plan shape and release, over a catalog the suite writes itself --
+
+  /** table → (columns, rows). table1 is written quoted, table2 unquoted;
+    * they share the join key B, and table2 repeats rows. */
+  private val refTables: Map[String, (Seq[String], Vector[Vector[Long]])] = Map(
+    "table1" -> (Seq("A", "B", "C"), Vector(
+      Vector(922L, 158L, 5727L), Vector(640L, 773L, 5058L),
+      Vector(775L, 85L, 10164L), Vector(-551L, 811L, 1534L),
+      Vector(-952L, 311L, 1318L), Vector(-354L, 646L, 7063L),
+      Vector(-497L, 335L, 4549L), Vector(411L, 803L, 10519L),
+      Vector(-900L, 718L, 9020L), Vector(858L, 731L, 3668L))),
+    "table2" -> (Seq("B", "D"), Vector(
+      Vector(158L, 11191L), Vector(773L, 14421L), Vector(85L, 5117L),
+      Vector(811L, 13393L), Vector(311L, 16116L), Vector(158L, 11191L),
+      Vector(646L, 5403L), Vector(335L, 6309L), Vector(773L, 14421L),
+      Vector(803L, 12262L), Vector(85L, 5117L))))
+
+  private def writeRefCatalog(): String = {
+    val dir = Files.createTempDirectory("refcat")
+    Files.writeString(dir.resolve("metadata.txt"), refTables.toSeq.sortBy(_._1)
+      .map { case (t, (cols, _)) =>
+        (Seq("<begin_table>", t) ++ cols :+ "<end_table>").mkString("\n")
+      }.mkString("", "\n", "\n"))
+    def csv(t: String, cell: Long => String): Unit =
+      Files.writeString(dir.resolve(s"$t.csv"),
+        refTables(t)._2.map(_.map(cell).mkString(",")).mkString("", "\n", "\n"))
+    csv("table1", v => "\"" + v + "\"")
+    csv("table2", _.toString)
+    dir.toString
+  }
+
+  /** One statement per REPL statement class, with its naive answer:
+    * file order, first-occurrence DISTINCT, join column printed once. */
+  private final case class Stmt(cls: String, sql: String,
+      header: Seq[String], rows: Seq[Seq[Any]])
+
+  private val refStmts: Seq[Stmt] = {
+    val t1 = refTables("table1")._2
+    val t2 = refTables("table2")._2
+    def pick(rs: Seq[Vector[Long]], is: Int*) = rs.map(r => is.map(r(_)))
+    val joined = for (x <- t1; y <- t2 if x(1) == y(0)) yield (x, y)
+    Seq(
+      Stmt("star", "select * from table1",
+        Seq("TABLE1.A", "TABLE1.B", "TABLE1.C"), t1),
+      Stmt("projection", "select C, A from table1",
+        Seq("TABLE1.C", "TABLE1.A"), pick(t1, 2, 0)),
+      Stmt("max", "select max(A) from table1", Seq("MAX(TABLE1.A)"),
+        Seq(Seq(t1.map(_(0)).max))),
+      Stmt("min", "select min(D) from table2", Seq("MIN(TABLE2.D)"),
+        Seq(Seq(t2.map(_(1)).min))),
+      Stmt("sum", "select sum(C) from table1", Seq("SUM(TABLE1.C)"),
+        Seq(Seq(t1.map(_(2)).sum))),
+      Stmt("avg", "select avg(D) from table2", Seq("AVG(TABLE2.D)"),
+        Seq(Seq(t2.map(_(1)).sum.toDouble / t2.size))),
+      Stmt("distinct", "select distinct(D) from table2", Seq("TABLE2.D"),
+        t2.map(_(1)).distinct.map(Seq(_))),
+      Stmt("where_and", "select A, C from table1 where A > -600 and C < 9000",
+        Seq("TABLE1.A", "TABLE1.C"),
+        pick(t1.filter(r => r(0) > -600 && r(2) < 9000), 0, 2)),
+      Stmt("where_or", "select A, B from table1 where A = 775 or B = 803",
+        Seq("TABLE1.A", "TABLE1.B"),
+        pick(t1.filter(r => r(0) == 775 || r(1) == 803), 0, 1)),
+      Stmt("join_star", "select * from table1, table2 where table1.B = table2.B",
+        Seq("TABLE1.A", "TABLE1.B", "TABLE1.C", "TABLE2.D"),
+        joined.map { case (x, y) => x :+ y(1) }),
+      Stmt("join_projection",
+        "select A, D from table1, table2 where table1.B = table2.B",
+        Seq("TABLE1.A", "TABLE2.D"),
+        joined.map { case (x, y) => Seq(x(0), y(1)) }),
+      Stmt("cartesian", "select A, D from table1, table2",
+        Seq("TABLE1.A", "TABLE2.D"),
+        for (x <- t1; y <- t2) yield Seq(x(0), y(1))))
+  }
+
+  /** What running `sql` through the CLI path (execute, then render)
+    * showed and cost. */
+  private final case class CliRun(header: Seq[String], rows: Seq[Seq[String]],
+      jobs: Int, plans: Seq[SparkPlan])
+
+  private def cli(e: MiniSqlEngine, sql: String): CliRun = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val jobListener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val planListener = new QueryExecutionListener {
+      // the statement's plans, not the checkpoint that pins a table
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f != "localCheckpoint") plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, ex: Exception): Unit = ()
+    }
+    TestHooks.drainListeners(sc)
+    sc.addSparkListener(jobListener)
+    spark.listenerManager.register(planListener)
+    try {
+      val lines = AsciiTable.render(e.execute(sql)).split('\n').toSeq
+      TestHooks.drainListeners(sc)
+      def cells(l: String) = l.split('|').toSeq.drop(1).map(_.trim)
+      CliRun(cells(lines(1)), lines.slice(3, lines.size - 1).map(cells),
+        jobs.get, plans.asScala.toSeq)
+    } finally {
+      sc.removeSparkListener(jobListener)
+      spark.listenerManager.unregister(planListener)
+    }
+  }
+
+  test("parity scale: every statement class is one exchange-free job over pinned tables") {
+    val e = open(CsvCatalog.load(spark, writeRefCatalog()))
+    // pass 1 pins the tables: a statement that reads a fresh pin first
+    // runs the checkpoint's job; every other statement is a single job
+    Seq(1, 2).foreach { pass =>
+      refStmts.foreach { st =>
+        val pinnedBefore = e.pinned
+        val run = cli(e, st.sql)
+        val freshPins = (e.pinned -- pinnedBefore).size
+        val what = s"${st.cls} (pass $pass)"
+        assert(run.header == st.header, what)
+        assert(run.rows == st.rows.map(_.map(_.toString)), what)
+        assert(run.plans.nonEmpty, what)
+        run.plans.foreach { p =>
+          // shuffle and broadcast exchanges alike
+          val exchanges = collect(p) { case x: Exchange => x.nodeName }
+          assert(exchanges.isEmpty, s"$what planned $exchanges:\n$p")
+          assert(collect(p) { case s: RDDScanExec => s }.nonEmpty,
+            s"$what read no pin:\n$p")
+          assert(collect(p) { case s: FileSourceScanExec => s }.isEmpty,
+            s"$what re-read a CSV:\n$p")
+        }
+        assert(run.jobs >= 1 && run.jobs <= 1 + freshPins,
+          s"$what ran ${run.jobs} jobs")
+        if (pass > 1) assert(freshPins == 0)
+      }
+    }
+    assert(e.pinned == Set("table1", "table2"))
+  }
+
+  test("close() leaves no cache entries and no storage behind") {
+    val tables = CsvCatalog.load(spark, writeRefCatalog())
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    def newRdds = sc.getPersistentRDDs.keySet -- before
+    // pins are checkpointed RDDs, never catalog cache entries
+    def cached = tables.values.map(_.coalesce(1).storageLevel).toSet
+    val e = open(tables)
+    refStmts.foreach(st => AsciiTable.render(e.execute(st.sql)))
+    val pinRdds = newRdds
+    assert(pinRdds.size == 2, s"one pinned RDD per table: $pinRdds")
+    assert(pinRdds.forall(TestHooks.rddBlockBytes(_) > 0))
+    assert(cached == Set(StorageLevel.NONE), "pinned through the catalog cache")
+    e.close()
+    assert(e.pinned.isEmpty)
+    assert(cached == Set(StorageLevel.NONE), "cache entries left")
+    assert(newRdds.isEmpty, s"persisted RDDs left: $newRdds")
+    assert(pinRdds.forall(TestHooks.rddBlockBytes(_) == 0), "blocks left")
+    // fileOrder = false pins nothing
+    val unordered = open(tables, fileOrder = false)
+    refStmts.foreach(st => AsciiTable.render(unordered.execute(st.sql)))
+    assert(unordered.pinned.isEmpty)
+    assert(newRdds.isEmpty && cached == Set(StorageLevel.NONE))
   }
 }

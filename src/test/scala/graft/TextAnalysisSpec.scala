@@ -16,6 +16,30 @@ class TextAnalysisSpec extends SparkSpec {
     assert(r == ((4L, 13L, 10.0 / 4, 3.0 / 4)))
   }
 
+  test("zero-token and NULL text: ratios are NULL, no DIVIDE_BY_ZERO") {
+    val df = Seq((1L, Some("")), (2L, Some("   ")), (3L, None: Option[String]))
+      .toDF("doc_id", "text")
+    val stats = TextAnalysis.withTokenStats(df)
+      .select("doc_id", "n_tokens", "avg_token_len", "distinct_ratio",
+        "stopword_ratio")
+      .collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
+    assert(stats(1L) == Seq(0L, null, null, null))
+    assert(stats(2L) == Seq(0L, null, null, null))
+    assert(stats(3L) == Seq(null, null, null, null))
+    def battery(minStopwordHits: Long) =
+      TextAnalysis.filterBattery(df, minStopwordHits = minStopwordHits)
+        .select("doc_id", "failed_rules", "keep")
+        .as[(Long, String, Boolean)].collect().map(r => r._1 -> (r._2, r._3)).toMap
+    // no ratio rule fires on a zero-token text: only the count rules do
+    val fails = battery(minStopwordHits = 2)
+    assert(fails(1L) == ("too_few_tokens,low_stopword_hits" -> false))
+    assert(fails(2L) == ("too_few_tokens,low_stopword_hits" -> false))
+    assert(battery(minStopwordHits = 0)(1L) == ("too_few_tokens" -> false))
+    // NULL text: every stat is NULL, so no rule fires (the oracle's
+    // SQL NULL semantics)
+    assert(fails(3L) == ("" -> true))
+  }
+
   test("language ID picks the profile with the most stopword hits") {
     val df = Seq(
       (1L, "the cat is on the mat and it is happy"),

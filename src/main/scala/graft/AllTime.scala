@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Times EVERY registered query (not just the bench headliners) against
   * a scale dir — the sweep that catches operators whose cost curve bends
@@ -10,11 +9,7 @@ object AllTime {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val only = args.drop(1).toSet
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     // SPARK_GRAFT_REPEAT > 1 reports each query's best-of-N (steady
     // state) — single runs at this scale carry 2-8× JVM noise.
     val repeat = sys.env.getOrElse("SPARK_GRAFT_REPEAT", "1").toInt
@@ -23,10 +18,7 @@ object AllTime {
       try {
         val times = (1 to repeat).map { _ =>
           val t0 = System.nanoTime()
-          q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
-          // Caching contract: release this exec's operator-internal
-          // persists so a full sweep doesn't accumulate storage pressure
-          spark.catalog.clearCache()
+          Harness.exec(q.run(spark, sfDir))
           (System.nanoTime() - t0) / 1e9
         }
         // the full iteration array rides along so a spread (GC, cache

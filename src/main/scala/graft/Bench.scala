@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark entry: runs the headline queries (Queries.Q.bench) on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line for the driver.
   *
@@ -16,27 +14,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // r20 (guide §2.2/§5): let AQE's size-based coalescing apply INSIDE
-      // cached plans too — the operators persist many small intermediate
-      // frames (signatures, buckets, cluster maps), and with the default
-      // (false) every cache freezes the pre-AQE shuffle grid, so every
-      // downstream scan of a tiny cached frame pays cpus× tasks of fixed
-      // overhead. Scale-adaptive by construction: AQE sizes partitions
-      // from bytes, so corpus-sized caches keep their parallelism on a
-      // cluster. Measured on this box: pipeline_incremental_manifest
-      // 22.5 → 17.9 s, pipeline_training_manifest 6.0 → 4.7 s.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     val headline = SparkEntry.all.filter(_.bench)
     // Contention attribution (BENCH_r12: pipeline_training_manifest
@@ -112,17 +90,13 @@ object Bench {
       System.getProperty("java.io.tmpdir"),
       s"graft_bench_io_sentinel_${ProcessHandle.current().pid()}")
       .getAbsolutePath
-    def rmTree(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rmTree))
-      f.delete(); ()
-    }
     // the sentinel dir is tens of MB and pid-scoped (names never
     // reuse): the end-of-run delete below only fires on CLEAN
     // completion, so a crashed or killed bench run would leak one dir
     // per failure — a shutdown hook covers abnormal exits (SIGTERM,
     // uncaught throw) too; kill -9 remains unrecoverable by design
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      rmTree(new java.io.File(ioSentinelPath))))
+      Harness.rmTree(ioSentinelPath)))
     locally {
       import org.apache.spark.sql.functions.{col, xxhash64}
       spark.range(0, 4000000L, 1, 8)
@@ -159,26 +133,7 @@ object Bench {
       threads.foreach(_.join())
       (System.nanoTime() - t0) / 1e9
     }
-    /** Runs the query to completion and returns the storage bytes in
-      * use right after materialization (operator-internal persists +
-      * checkpoint blocks — what the cache clear is about to release). */
-    def exec(q: Queries.Q): Long =
-      try {
-        q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
-        spark.sparkContext.getExecutorMemoryStatus.values
-          .map { case (max, remaining) => max - remaining }.sum
-      } finally {
-        // Caching contract (operators/Caching.scala): operator-internal
-        // persists are released by the CALLER after its terminal action.
-        // Without this, ~85 execs (17 headliners × warmup+pre-exec+iters)
-        // each pin fresh copies of signature/bucket frames — storage
-        // pressure mounts over the run and late iterations degrade into
-        // eviction/GC storms (BENCH_r09: dedup_minhash 1.8→4.8→26.3 s
-        // across its own three iterations). In a finally block so a
-        // deterministically-failing query cannot leak its persists into
-        // every subsequent iteration either.
-        spark.catalog.clearCache()
-      }
+    def exec(q: Queries.Q): Long = Harness.exec(q.run(spark, sfDir))
     def warmExec(q: Queries.Q): Unit =
       try { exec(q); () }
       catch { case e: Throwable =>
@@ -424,6 +379,6 @@ object Bench {
     // drop the sentinel table eagerly on the clean path (the shutdown
     // hook above also covers this, but deleting before JVM teardown
     // keeps the hook a no-op in the common case)
-    rmTree(new java.io.File(ioSentinelPath))
+    Harness.rmTree(ioSentinelPath)
   }
 }

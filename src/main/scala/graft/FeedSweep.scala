@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Cdc, Dedup, Sampling, TextAnalysis}
@@ -31,20 +31,7 @@ object FeedSweep {
     val mods = args.lift(1).map(_.split(',').toSeq.map(_.toInt))
       .getOrElse(Seq(8, 20, 50, 150, 500))
     val iters = sys.env.getOrElse("SPARK_GRAFT_REPEAT", "3").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // same session shape as Bench (r20) — the curve must be measured
-      // under the config the benched capstone rows run with
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val corpusDocs = docs.count()
@@ -60,20 +47,6 @@ object FeedSweep {
           .select("doc_id")
           .join(docs.select("doc_id", "lang"), Seq("doc_id")),
         "doc_id", splits).select("doc_id", "lang", "split")
-    def exec(df: DataFrame): Unit =
-      try df.write.format("noop").mode("overwrite").save()
-      finally spark.catalog.clearCache()
-    def time(body: => Unit): Double = {
-      body // one untimed warmup (Bench discipline)
-      (1 to iters).map { _ =>
-        val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-      }.min
-    }
-    def rmTree(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rmTree))
-      f.delete(); ()
-    }
-
     val points = mods.map { m =>
       val (boot, feed0) = PipelineQueries.incrementalDocFeedMod(docs, m)
       val feed = feed0.localCheckpoint(true) // feed build is not the fold
@@ -89,7 +62,7 @@ object FeedSweep {
       st0.clusters.write.parquet(s"$stDir/cl")
       spark.catalog.clearCache()
       val feedRows = feed.count()
-      val sec = time {
+      val sec = Harness.time(iters) {
         val prev = Dedup.ClusterIndexState(
           spark.read.parquet(s"$stDir/sig"),
           spark.read.parquet(s"$stDir/pairs"),
@@ -100,12 +73,12 @@ object FeedSweep {
           feed.select("seq", "op", "doc_id", "text"),
           "doc_id", "seq", "op")(battery)
           .localCheckpoint(true)
-        try exec(manifest(Dedup.clustersMaintain(prev, gated,
+        try Harness.exec(manifest(Dedup.clustersMaintain(prev, gated,
           "doc_id", "text", "seq", "op").clusters))
         finally graft.operators.Caching.freeLocalCheckpoint(gated)
       }
       graft.operators.Caching.freeLocalCheckpoint(feed)
-      rmTree(new java.io.File(stDir))
+      Harness.rmTree(stDir)
       println(f"[feed-sweep] mod $m%4d: $feedRows%6d feed rows, $sec%.3f s")
       (m, feedRows, sec)
     }
@@ -118,8 +91,8 @@ object FeedSweep {
           .otherwise(col("text")).as("text"))
     val mergedKept = merged.join(
       battery(merged).filter(col("keep")).select("doc_id"), Seq("doc_id"))
-    val rebuildSec = time {
-      exec(manifest(
+    val rebuildSec = Harness.time(iters) {
+      Harness.exec(manifest(
         Dedup.clustersBootstrap(mergedKept, "doc_id", "text").clusters))
     }
 

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.engine.{AsciiTable, MiniSqlEngine}
 import graft.engine.MiniSql.MiniSqlError
 import graft.sources.CsvCatalog
@@ -36,13 +34,9 @@ object MiniSqlCli {
     }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("minisql")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(
+      sys.env.get("SPARK_MASTER").map("spark.master" -> _).toSeq: _*)
+    spark.sparkContext.setLogLevel("ERROR") // keep the REPL's output clean
     val dataDir = resolveDataDir(args.headOption.getOrElse("."),
       () => scala.io.StdIn.readLine())
     val tables = CsvCatalog.load(spark, dataDir)

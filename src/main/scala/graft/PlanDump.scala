@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `.explain("formatted")` for a named set of queries into
   * per-query text files — the before/after plan evidence the
   * optimization rounds commit under `plans/r<N>/`. Usage:
@@ -11,7 +9,7 @@ import org.apache.spark.sql.SparkSession
   * writes `<outDir>/<name>_<suffix>.txt` for each query. Unlike
   * [[Plans]] (the whole-registry PLANS.md audit) this targets the
   * handful of queries a round touches, so a before/after pair diffs
-  * cleanly. Uses the same local session shape as [[Plans]]. */
+  * cleanly. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3,
@@ -20,16 +18,9 @@ object PlanDump {
     val suffix = args(1)
     val names = args(2).split(',').toSet
     val sfDir = args.lift(3).getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // fixed width, so the plans do not depend on the host
+    val spark = Harness.session(
+      "spark.master" -> "local[4]", "spark.sql.shuffle.partitions" -> "4")
     val registered = SparkEntry.all.map(_.name).toSet
     val unknown = names.diff(registered)
     require(unknown.isEmpty, s"not in the registry: $unknown")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps the formatted physical plan of every headline (bench) query —
   * the artifact reviewed for scan pruning (`ReadSchema`/
   * `PushedFilters`), join strategy (broadcast vs shuffle), and
@@ -11,16 +9,9 @@ import org.apache.spark.sql.SparkSession
 object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // fixed width, so the plans do not depend on the host
+    val spark = Harness.session(
+      "spark.master" -> "local[4]", "spark.sql.shuffle.partitions" -> "4")
 
     // TOTAL audit: every registered query plans, no include-list — a
     // newly registered query joins the audit automatically instead of

@@ -1,10 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
-
-import scala.collection.mutable
-
 /** Per-job/per-stage attribution for a named set of registered
   * queries — the "measure first" harness (guide §1): runs each query
   * once untimed (JIT/page-cache warmup), then once instrumented, and
@@ -15,120 +10,28 @@ import scala.collection.mutable
   *
   *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.Prof <sfDir> <name1,name2,...>"
   *
-  * Reads the same env contract as Bench; noop-sink materialization,
-  * same session shape. Diagnostic only — never run by the driver. */
+  * Noop-sink materialization, like Bench. Diagnostic only — never run
+  * by the driver. */
 object Prof {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Prof <sfDir> <name1,name2,...>")
     val sfDir = args(0)
     val names = args(1).split(',').toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // keep the session shape identical to Bench (r21, ADVICE r20):
-      // without this flag default profiling runs under a different
-      // planner config than the benched rows and job/stage attribution
-      // can diverge; the SPARK_GRAFT_EXTRA_CONF overlay can A/B it off
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.ui.enabled", "false")
     // A/B knob: SPARK_GRAFT_EXTRA_CONF="k=v;k=v" overlays session confs
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(';')
-      .filter(_.contains('=')).foreach { kv =>
+    val overlay = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
+      .flatMap(_.split(';')).filter(_.contains('=')).map { kv =>
         val Array(k, v) = kv.split("=", 2)
-        builder.config(k, v)
-      })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    case class JobRow(id: Int, desc: String, start: Long,
-        var end: Long = 0L, var taskTimeMs: Long = 0L,
-        var shuffleReadMb: Double = 0.0, var shuffleWriteMb: Double = 0.0,
-        var tasks: Int = 0)
-    case class StageRow(id: Int, name: String, tasks: Int,
-        runMs: Long, cpuMs: Long, deserMs: Long, shReadMb: Double,
-        shWriteMb: Double)
-    val jobs = mutable.LinkedHashMap.empty[Int, JobRow]
-    val stages = mutable.ArrayBuffer.empty[StageRow]
-    val stageToJob = mutable.HashMap.empty[Int, Int]
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val desc = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("")
-        jobs.synchronized {
-          jobs(js.jobId) = JobRow(js.jobId, desc, js.time)
-          js.stageIds.foreach(s => stageToJob(s) = js.jobId)
-        }
+        k -> v
       }
-      override def onJobEnd(je: SparkListenerJobEnd): Unit =
-        jobs.synchronized {
-          jobs.get(je.jobId).foreach(_.end = je.time)
-        }
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        jobs.synchronized {
-          val m = sc.stageInfo.taskMetrics
-          stages += StageRow(sc.stageInfo.stageId, sc.stageInfo.name,
-            sc.stageInfo.numTasks, m.executorRunTime,
-            m.executorCpuTime / 1000000L,
-            m.executorDeserializeTime,
-            m.shuffleReadMetrics.totalBytesRead / 1048576.0,
-            m.shuffleWriteMetrics.bytesWritten / 1048576.0)
-          for {
-            jid <- stageToJob.get(sc.stageInfo.stageId)
-            row <- jobs.get(jid)
-          } {
-            row.taskTimeMs += m.executorRunTime
-            row.shuffleReadMb +=
-              (m.shuffleReadMetrics.totalBytesRead / 1048576.0)
-            row.shuffleWriteMb +=
-              (m.shuffleWriteMetrics.bytesWritten / 1048576.0)
-            row.tasks += sc.stageInfo.numTasks
-          }
-        }
-    }
+    val spark = Harness.session(overlay: _*)
 
     val byName = SparkEntry.all.map(q => q.name -> q).toMap
     names.foreach { n =>
       val q = byName.getOrElse(n,
         throw new IllegalArgumentException(s"not registered: $n"))
-      def execOnce(): Unit =
-        try q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
-        finally spark.catalog.clearCache()
+      def execOnce(): Unit = Harness.exec(q.run(spark, sfDir))
       execOnce() // warmup (JIT + page cache), unmeasured
-      jobs.clear(); stageToJob.clear(); stages.clear()
-      spark.sparkContext.addSparkListener(listener)
-      val t0 = System.nanoTime()
-      execOnce()
-      val wall = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.removeSparkListener(listener)
-      // let the listener bus drain before reading
-      Thread.sleep(500)
-      println(f"%n=== $n: wall $wall%.3f s, ${jobs.size} jobs ===")
-      println(f"${"job"}%5s ${"wall_ms"}%8s ${"task_ms"}%8s " +
-        f"${"tasks"}%6s ${"shR_MB"}%8s ${"shW_MB"}%8s  desc")
-      jobs.values.toSeq.sortBy(-_.taskTimeMs).take(120).foreach { j =>
-        val w = if (j.end > 0) j.end - j.start else -1L
-        println(f"${j.id}%5d $w%8d ${j.taskTimeMs}%8d ${j.tasks}%6d " +
-          f"${j.shuffleReadMb}%8.1f ${j.shuffleWriteMb}%8.1f  " +
-          j.desc.take(60))
-      }
-      val totalWallMs = jobs.values.map(j =>
-        if (j.end > 0) j.end - j.start else 0L).sum
-      println(f"sum of job walls: ${totalWallMs / 1000.0}%.3f s " +
-        f"(gaps = driver/planning time: ${wall - totalWallMs / 1000.0}%.3f s)")
-      println(s"-- top stages by task run time (${stages.size} stages) --")
-      println(f"${"stage"}%6s ${"tasks"}%6s ${"run_ms"}%8s ${"cpu_ms"}%8s " +
-        f"${"deser"}%6s ${"shR_MB"}%8s ${"shW_MB"}%8s  name/callsite")
-      stages.sortBy(-_.runMs).take(60).foreach { s =>
-        println(f"${s.id}%6d ${s.tasks}%6d ${s.runMs}%8d ${s.cpuMs}%8d " +
-          f"${s.deserMs}%6d ${s.shReadMb}%8.1f ${s.shWriteMb}%8.1f  " +
-          s.name.take(100))
-      }
+      Harness.profiled(n)(execOnce())
     }
     spark.stop()
   }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Builds a `factor`× copy of a testdata scale dir for cost-curve
@@ -53,11 +53,7 @@ object ScaleUp {
     val zipf = args.lift(3).contains("zipf")
     require(factor >= 1)
 
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session("spark.sql.legacy.parquet.nanosAsLong" -> "true")
 
     def read(t: String): DataFrame = spark.read.parquet(s"$srcDir/$t.parquet")
     def write(df: DataFrame, t: String): Unit =

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew-stress sweep: the heaviest user-keyed event queries on a
@@ -30,27 +30,9 @@ object SkewSweep {
     val zipfDir = args.lift(1).getOrElse("scaledata/sf1zipf")
     val salts = args.lift(2).map(_.toInt).getOrElse(16)
     val iters = sys.env.getOrElse("SPARK_GRAFT_REPEAT", "3").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
-    def exec(df: DataFrame): Unit =
-      try df.write.format("noop").mode("overwrite").save()
-      finally spark.catalog.clearCache()
-    /** Best-of-N wall time with one untimed warmup (Bench discipline). */
-    def time(mk: => DataFrame): Double = {
-      exec(mk)
-      (1 to iters).map { _ =>
-        val t0 = System.nanoTime(); exec(mk); (System.nanoTime() - t0) / 1e9
-      }.min
-    }
+    def time(mk: => DataFrame): Double = Harness.time(iters)(Harness.exec(mk))
     def fmt(d: Double): String = f"$d%.2f"
 
     // the five heaviest USER-KEYED registered event queries: per-user

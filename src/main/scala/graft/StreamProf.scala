@@ -1,10 +1,7 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-
-import scala.collection.mutable
 
 /** Per-batch action/job attribution for the streaming sinks' foldBatch
   * paths (ManifestStream + ClusterStream) — the streaming twin of
@@ -20,54 +17,7 @@ import scala.collection.mutable
 object StreamProf {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    case class JobRow(id: Int, desc: String, start: Long, var end: Long = 0L)
-    val jobs = mutable.LinkedHashMap.empty[Int, JobRow]
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val desc = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("")
-        jobs.synchronized { jobs(js.jobId) = JobRow(js.jobId, desc, js.time) }
-      }
-      override def onJobEnd(je: SparkListenerJobEnd): Unit =
-        jobs.synchronized { jobs.get(je.jobId).foreach(_.end = je.time) }
-    }
-
-    def profiled(label: String)(body: => Unit): Unit = {
-      jobs.clear()
-      spark.sparkContext.addSparkListener(listener)
-      val t0 = System.nanoTime()
-      body
-      val wall = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.removeSparkListener(listener)
-      Thread.sleep(300)
-      val walls = jobs.values.map(j =>
-        if (j.end > 0) j.end - j.start else 0L).sum
-      println(f"%n=== $label: wall $wall%.3f s, ${jobs.size} jobs, " +
-        f"job-wall sum ${walls / 1000.0}%.3f s ===")
-      jobs.values.toSeq.sortBy(j => -(j.end - j.start)).take(40)
-        .foreach { j =>
-          println(f"${j.id}%5d ${if (j.end > 0) j.end - j.start else -1L}%7d ms  ${j.desc.take(70)}")
-        }
-    }
-
-    def rmTree(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rmTree))
-      f.delete(); ()
-    }
+    val spark = Harness.session()
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val (boot, feed) = PipelineQueries.manifestStreamFeed(docs)
@@ -85,14 +35,14 @@ object StreamProf {
       val warm = java.nio.file.Files.createTempDirectory("sp_mfw").toString
       streaming.ManifestStream.foldBatch(boot, 0L, warm, battery, lit(0.0), splits)
       streaming.ManifestStream.foldBatch(feed, 1L, warm, battery, lit(0.0), splits)
-      rmTree(new java.io.File(warm))
-      profiled("ManifestStream batch 0 (bootstrap-as-inserts)") {
+      Harness.rmTree(warm)
+      Harness.profiled("ManifestStream batch 0 (bootstrap-as-inserts)") {
         streaming.ManifestStream.foldBatch(boot, 0L, root, battery, lit(0.0), splits)
       }
-      profiled("ManifestStream batch 1 (change batch)") {
+      Harness.profiled("ManifestStream batch 1 (change batch)") {
         streaming.ManifestStream.foldBatch(feed, 1L, root, battery, lit(0.0), splits)
       }
-      rmTree(new java.io.File(root))
+      Harness.rmTree(root)
     }
 
     // ---- ClusterStream ----
@@ -103,14 +53,14 @@ object StreamProf {
       val warm = java.nio.file.Files.createTempDirectory("sp_clw").toString
       streaming.ClusterStream.foldBatch(b0, 0L, warm)
       streaming.ClusterStream.foldBatch(b1, 1L, warm)
-      rmTree(new java.io.File(warm))
-      profiled("ClusterStream batch 0 (bootstrap-as-inserts)") {
+      Harness.rmTree(warm)
+      Harness.profiled("ClusterStream batch 0 (bootstrap-as-inserts)") {
         streaming.ClusterStream.foldBatch(b0, 0L, root)
       }
-      profiled("ClusterStream batch 1 (change batch)") {
+      Harness.profiled("ClusterStream batch 1 (change batch)") {
         streaming.ClusterStream.foldBatch(b1, 1L, root)
       }
-      rmTree(new java.io.File(root))
+      Harness.rmTree(root)
     }
     spark.stop()
   }

@@ -16,11 +16,8 @@ import MiniSql._
   *
   * There is no hand-built join kernel: multi-table FROM becomes a cross
   * join and WHERE becomes a filter on top, which Catalyst pushes into
-  * the join condition. How that join is planned depends on the layout
-  * (see the parity-scale contract below): with `fileOrder` on it is one
-  * in-partition cartesian product plus the filter; with `fileOrder` off
-  * the planner picks the strategy from its statistics (broadcast,
-  * shuffled hash or sort-merge for `t1,t2 WHERE t1.B=t2.B`).
+  * the join condition: one in-partition cartesian product plus the
+  * filter (see the parity-scale contract below).
   *
   * Reference-surface semantics kept (SURVEY.md §7.1): uppercase
   * `TABLE.COL` output headers, `*` expansion in FROM/metadata order,
@@ -39,9 +36,8 @@ import MiniSql._
   * HAVING. Groups emit in grouping-key order (file order has no
   * meaning post-aggregation).
   *
-  * '''Parity-scale contract''' (`fileOrder = true`, the default): priced
-  * for the reference's fixture scale (10–320-row CSVs), NOT for big
-  * tables.
+  * '''Parity-scale contract''': priced for the reference's fixture
+  * scale (10–320-row CSVs), NOT for big tables.
   *  - Order: plain-projection queries end in a global `orderBy` on
   *    per-table row-ids to reproduce the reference's file-order output.
   *  - Layout: the first statement that reads a table pins it as ONE
@@ -65,19 +61,8 @@ import MiniSql._
   *    while a plain `collect` of a join range-partitions it first.
   *
   * Each statement the CLI renders thus runs as one job of one stage.
-  * The engine owns its pins; [[close]] releases them. For large data
-  * pass `fileOrder = false`: tables stay lazy scans, nothing is pinned,
-  * the planner picks joins by statistics, and the implicit sort is
-  * skipped (rows arrive in partition order, like any ORDER BY-less SQL
-  * engine). Or keep a `LIMIT` on the query — with `fileOrder` on, LIMIT
-  * plans as Spark's TakeOrderedAndProject (top-k, no global sort
-  * materialized).
-  *
-  * @param fileOrder emit rows in reference file order from pinned
-  *        single-partition tables (default). An explicit ORDER BY still
-  *        sorts either way. */
-final class MiniSqlEngine(catalog: Map[String, DataFrame],
-    fileOrder: Boolean = true) extends AutoCloseable {
+  * The engine owns its pins; [[close]] releases them. */
+final class MiniSqlEngine(catalog: Map[String, DataFrame]) extends AutoCloseable {
 
   /** table → ordered data columns (metadata order, uppercase). */
   private val tableCols: Map[String, Seq[String]] =
@@ -86,12 +71,10 @@ final class MiniSqlEngine(catalog: Map[String, DataFrame],
   /** table → its pin (parity-scale layout; see the class doc). */
   private val pins = scala.collection.mutable.Map.empty[String, DataFrame]
 
-  /** The frame a statement reads for `t`: under the parity-scale
-    * contract the table's pin, made on first use; else the catalog's. */
-  private def source(t: String): DataFrame =
-    if (!fileOrder) catalog(t)
-    else pins.synchronized(
-      pins.getOrElseUpdate(t, catalog(t).coalesce(1).localCheckpoint()))
+  /** The frame a statement reads for `t`: the table's pin, made on
+    * first use. */
+  private def source(t: String): DataFrame = pins.synchronized(
+    pins.getOrElseUpdate(t, catalog(t).coalesce(1).localCheckpoint()))
 
   /** Tables pinned so far. */
   private[graft] def pinned: Set[String] = pins.synchronized(pins.keySet.toSet)
@@ -123,7 +106,7 @@ final class MiniSqlEngine(catalog: Map[String, DataFrame],
       val cols = tableCols(t).map(c => col(c).as(phys(t, c))) :+ col(RowId).as(physRow(t))
       val df = source(t).select(cols: _*)
       // the parity-scale join rule (class doc)
-      if (fileOrder && tables.size > 1) df.hint("shuffle_replicate_nl") else df
+      if (tables.size > 1) df.hint("shuffle_replicate_nl") else df
     }
     val joined = renamed.reduceLeft(_.crossJoin(_))
 
@@ -158,19 +141,19 @@ final class MiniSqlEngine(catalog: Map[String, DataFrame],
       case AggOperand(fn, r) => throw MiniSqlError(
         s"Aggregate ${fn.toUpperCase}(${r.display}) is not allowed in WHERE (use HAVING)")
     }
-    def predCol(p: Pred): Column = p match {
-      case AndPred(l, r) => predCol(l) && predCol(r)
-      case OrPred(l, r) => predCol(l) || predCol(r)
+    /** WHERE and HAVING alike; `operand` resolves the leaves. */
+    def predCol(p: Pred, operand: Operand => Column): Column = p match {
+      case AndPred(l, r) => predCol(l, operand) && predCol(r, operand)
+      case OrPred(l, r) => predCol(l, operand) || predCol(r, operand)
       case InPred(l, vs, negated) =>
-        val in = operandCol(l).isin(vs.map {
+        val in = operand(l).isin(vs.map {
           case NumLit(v) => v: Any
           case StrLit(v) => v: Any
-          case ColOperand(_) => throw MiniSqlError(
-            "IN list must hold literals, not columns")
+          case _ => throw MiniSqlError("IN list must hold literals, not columns")
         }: _*)
         if (negated) !in else in
       case Cmp(l, op, r) =>
-        val (lc, rc) = (operandCol(l), operandCol(r))
+        val (lc, rc) = (operand(l), operand(r))
         op match {
           case "=" => lc === rc
           case "!=" => lc =!= rc
@@ -180,7 +163,7 @@ final class MiniSqlEngine(catalog: Map[String, DataFrame],
           case ">=" => lc >= rc
         }
     }
-    val filtered = stmt.where.map(p => joined.filter(predCol(p))).getOrElse(joined)
+    val filtered = stmt.where.map(p => joined.filter(predCol(p, operandCol))).getOrElse(joined)
 
     // -- equi-join pairs reachable by pure AND (for `*` dedup) ---------
     def joinPairs(p: Pred): Seq[((String, String), (String, String))] = p match {
@@ -196,6 +179,16 @@ final class MiniSqlEngine(catalog: Map[String, DataFrame],
     // -- projection -----------------------------------------------------
     val rowOrder = tables.map(t => col(physRow(t)))
 
+    def aggExpr(fn: String, tc: (String, String)): Column = {
+      val c = col(phys(tc._1, tc._2))
+      fn match {
+        case "max" => max(c)
+        case "min" => min(c)
+        case "sum" => sum(c)
+        case "avg" => avg(c).cast(DoubleType)
+        case "count" => count(c)
+      }
+    }
     val aggs = stmt.projs.collect { case a: AggCol => a }
     val dists = stmt.projs.collect { case d: DistinctCol => d }
 
@@ -229,16 +222,6 @@ final class MiniSqlEngine(catalog: Map[String, DataFrame],
               s"Column ${display(tc)} must appear in GROUP BY or inside an aggregate")
         case _ => ()
       }
-      def aggExpr(fn: String, tc: (String, String)): Column = {
-        val c = col(phys(tc._1, tc._2))
-        fn match {
-          case "max" => max(c)
-          case "min" => min(c)
-          case "sum" => sum(c)
-          case "avg" => avg(c).cast(DoubleType)
-          case "count" => count(c)
-        }
-      }
       def havingAggs(p: Pred): Seq[(String, (String, String))] = p match {
         case AndPred(l, r) => havingAggs(l) ++ havingAggs(r)
         case OrPred(l, r) => havingAggs(l) ++ havingAggs(r)
@@ -270,28 +253,7 @@ final class MiniSqlEngine(catalog: Map[String, DataFrame],
               s"Column ${display(tc)} in HAVING must appear in GROUP BY or inside an aggregate")
           col(phys(tc._1, tc._2))
       }
-      def havingCol(p: Pred): Column = p match {
-        case AndPred(l, r) => havingCol(l) && havingCol(r)
-        case OrPred(l, r) => havingCol(l) || havingCol(r)
-        case InPred(l, vs, negated) =>
-          val in = havingOperand(l).isin(vs.map {
-            case NumLit(v) => v: Any
-            case StrLit(v) => v: Any
-            case _ => throw MiniSqlError("IN list must hold literals, not columns")
-          }: _*)
-          if (negated) !in else in
-        case Cmp(l, op, r) =>
-          val (lc, rc) = (havingOperand(l), havingOperand(r))
-          op match {
-            case "=" => lc === rc
-            case "!=" => lc =!= rc
-            case "<" => lc < rc
-            case ">" => lc > rc
-            case "<=" => lc <= rc
-            case ">=" => lc >= rc
-          }
-      }
-      val afterHaving = stmt.having.fold(grouped)(h => grouped.filter(havingCol(h)))
+      val afterHaving = stmt.having.fold(grouped)(h => grouped.filter(predCol(h, havingOperand)))
       val sortCols =
         if (stmt.orderBy.nonEmpty) stmt.orderBy.map { oi =>
           val tc = resolve(oi.ref)
@@ -323,15 +285,7 @@ final class MiniSqlEngine(catalog: Map[String, DataFrame],
           "Nonaggregated column alongside an aggregate needs GROUP BY (not in this dialect)")
       val exprs = aggs.map { case AggCol(fn, ref) =>
         val tc = resolve(ref)
-        val c = col(phys(tc._1, tc._2))
-        val e = fn match {
-          case "max" => max(c)
-          case "min" => min(c)
-          case "sum" => sum(c)
-          case "avg" => avg(c).cast(DoubleType)
-          case "count" => count(c)
-        }
-        e.as(s"${fn.toUpperCase}(${display(tc)})")
+        aggExpr(fn, tc).as(s"${fn.toUpperCase}(${display(tc)})")
       }
       filtered.agg(exprs.head, exprs.tail: _*)
     } else if (dists.nonEmpty) {
@@ -355,16 +309,13 @@ final class MiniSqlEngine(catalog: Map[String, DataFrame],
       }
       // explicit ORDER BY (extension) wins; file order breaks ties —
       // otherwise reference file-order / left-major product order
-      // (skipped entirely when the engine was built unordered: see the
-      // parity-scale contract in the class doc)
       val sortCols = stmt.orderBy.map { oi =>
         val tc = resolve(oi.ref)
         val c = col(phys(tc._1, tc._2))
         if (oi.asc) c.asc else c.desc
-      } ++ (if (fileOrder) rowOrder.map(_.asc) else Nil)
+      } ++ rowOrder.map(_.asc)
       val projection = targets.map(tc => col(phys(tc._1, tc._2)).as(display(tc)))
-      if (sortCols.isEmpty) filtered.select(projection: _*)
-      else filtered.orderBy(sortCols: _*).select(projection: _*)
+      filtered.orderBy(sortCols: _*).select(projection: _*)
     }
   }
 }

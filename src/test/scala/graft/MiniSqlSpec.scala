@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.graft.TestHooks
+import org.apache.spark.graft.{SparkHooks, TestHooks}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, RDDScanExec, SparkPlan}
@@ -34,9 +34,8 @@ class MiniSqlSpec extends SparkSpec with BeforeAndAfterAll
 
   /** Every engine the suite builds; each is closed in `afterAll`. */
   private val engines = ArrayBuffer.empty[MiniSqlEngine]
-  private def open(tables: Map[String, DataFrame],
-      fileOrder: Boolean = true): MiniSqlEngine = {
-    val e = new MiniSqlEngine(tables, fileOrder)
+  private def open(tables: Map[String, DataFrame]): MiniSqlEngine = {
+    val e = new MiniSqlEngine(tables)
     engines += e
     e
   }
@@ -302,26 +301,6 @@ class MiniSqlSpec extends SparkSpec with BeforeAndAfterAll
     assert(e4.getMessage.contains("cannot be combined with GROUP BY"))
   }
 
-  test("extension: fileOrder=false skips the implicit row-id sort (parity-scale contract)") {
-    val unordered = open(CsvCatalog.load(spark, fixtureDir), fileOrder = false)
-    val df = unordered.execute("select A, B from table1")
-    // same multiset of rows…
-    val (cols, rws) = model("table1")
-    val (ai, bi) = (cols.indexOf("A"), cols.indexOf("B"))
-    assert(rows(df).map(r => (r(0), r(1))).sortBy(_.toString) ==
-      rws.map(r => (r(ai): Any, r(bi): Any)).sortBy(_.toString))
-    // …with NO global sort in the plan (the big-table guard)
-    assert(!df.queryExecution.optimizedPlan.toString.contains("Sort"),
-      s"unordered dialect query must not plan a sort:\n${df.queryExecution.optimizedPlan}")
-    // an explicit ORDER BY still sorts
-    val sorted = unordered.execute("select A from table1 order by A desc")
-    assert(rows(sorted).flatten == colVals("table1", "A").sortBy(-_))
-    // …and nothing was pinned: the tables stay lazy scans
-    assert(unordered.pinned.isEmpty)
-    assert(collect(sorted.queryExecution.executedPlan) {
-      case s: RDDScanExec => s }.isEmpty)
-  }
-
   test("CLI: malformed cells are counted per table (ref per-cell warning, sqlengine.py:146-147)") {
     val dir = Files.createTempDirectory("badcsv")
     Files.writeString(dir.resolve("metadata.txt"),
@@ -425,12 +404,12 @@ class MiniSqlSpec extends SparkSpec with BeforeAndAfterAll
         if (f != "localCheckpoint") plans.add(qe.executedPlan)
       def onFailure(f: String, qe: QueryExecution, ex: Exception): Unit = ()
     }
-    TestHooks.drainListeners(sc)
+    SparkHooks.drainListeners(sc)
     sc.addSparkListener(jobListener)
     spark.listenerManager.register(planListener)
     try {
       val lines = AsciiTable.render(e.execute(sql)).split('\n').toSeq
-      TestHooks.drainListeners(sc)
+      SparkHooks.drainListeners(sc)
       def cells(l: String) = l.split('|').toSeq.drop(1).map(_.trim)
       CliRun(cells(lines(1)), lines.slice(3, lines.size - 1).map(cells),
         jobs.get, plans.asScala.toSeq)
@@ -488,10 +467,5 @@ class MiniSqlSpec extends SparkSpec with BeforeAndAfterAll
     assert(cached == Set(StorageLevel.NONE), "cache entries left")
     assert(newRdds.isEmpty, s"persisted RDDs left: $newRdds")
     assert(pinRdds.forall(TestHooks.rddBlockBytes(_) == 0), "blocks left")
-    // fileOrder = false pins nothing
-    val unordered = open(tables, fileOrder = false)
-    refStmts.foreach(st => AsciiTable.render(unordered.execute(st.sql)))
-    assert(unordered.pinned.isEmpty)
-    assert(newRdds.isEmpty && cached == Set(StorageLevel.NONE))
   }
 }

@@ -1,14 +1,10 @@
 package org.apache.spark.graft
 
-import org.apache.spark.{SparkContext, SparkEnv}
+import org.apache.spark.SparkEnv
 import org.apache.spark.storage.RDDBlockId
 
 /** Spark-internal reads the specs need, kept in one place. */
 object TestHooks {
-
-  /** Listener events are delivered asynchronously: block until every
-    * posted event was handled, so a listener's tallies are complete. */
-  def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 
   /** Bytes the (local-mode) block manager holds for RDD `rddId`'s blocks,
     * in memory and on disk. */

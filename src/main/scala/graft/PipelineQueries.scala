@@ -2465,11 +2465,7 @@ object PipelineQueries {
           .select(col("id").as("doc_id"), col("lang"), col("split"))
           .orderBy("doc_id")
           .localCheckpoint(true)
-        def rmTree(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rmTree))
-          f.delete(); ()
-        }
-        rmTree(new java.io.File(root))
+        Harness.rmTree(root)
         out
       },
       Some(incrementalManifestOracle)),

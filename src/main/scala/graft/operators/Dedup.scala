@@ -823,10 +823,14 @@ object Dedup {
     *
     * Each round's labels are localCheckpoint'ed: iterative self-joins
     * otherwise double the lineage every round, and the convergence
-    * count would re-execute the whole prefix. */
+    * count would re-execute the whole prefix. The final round's
+    * checkpoint, which the returned frame reads, is registered with
+    * `tracker`, so a per-batch stream fold frees it with its scope. */
   def connectedComponents(vertices: DataFrame, idCol: String,
       pairs: DataFrame, aCol: String = "a", bCol: String = "b",
-      maxIter: Int = 20): DataFrame = {
+      maxIter: Int = 20,
+      tracker: Caching.PersistTracker = new Caching.PersistTracker)
+      : DataFrame = {
     // both edge directions in ONE pass over `pairs` (the shared
     // [[Graph.symmetricEdges]] construction)
     val edges = Graph.symmetricEdges(pairs, aCol, bCol)
@@ -900,6 +904,7 @@ object Dedup {
     }
     sc.setJobDescription(callerDesc)
     edges.unpersist()
+    tracker.addCheckpoint(prevCkpt)
     if (!converged) throw new IllegalStateException(
       s"connectedComponents did not reach a fixpoint in $maxIter rounds; " +
         "raise maxIter (non-converged labels would silently split clusters)")
@@ -1318,9 +1323,8 @@ object Dedup {
     // memberSigs.select(id) IS the member set — the separate member
     // checkpoint added an eager barrier for a frame this projection
     // reproduces exactly.
-    val memberSigs = tracker.addCheckpoint(
-      nextSigs.join(memberIds, Seq(idCol), "left_semi")
-        .localCheckpoint(true))
+    val memberSigs = Caching.localCheckpoint(
+      nextSigs.join(memberIds, Seq(idCol), "left_semi"), tracker)
     val members = memberSigs.select(col(idCol))
     val memberHashes = memberSigs.select(col("simhash")).distinct()
     val inducedHashPairs = nextPairs
@@ -1328,10 +1332,10 @@ object Dedup {
         "left_semi")
       .join(memberHashes.select(col("simhash").as("h_b")), Seq("h_b"),
         "left_semi")
-    val inducedEdges = tracker.addCheckpoint(
-      docEdges(memberSigs, idCol, "simhash", inducedHashPairs)
-        .localCheckpoint(true))
-    val recomputed = connectedComponents(members, idCol, inducedEdges)
+    val inducedEdges = Caching.localCheckpoint(
+      docEdges(memberSigs, idCol, "simhash", inducedHashPairs), tracker)
+    val recomputed = connectedComponents(members, idCol, inducedEdges,
+      tracker = tracker)
       .select(col(idCol), col("cluster_id"))
     // the cluster home's delta: the affected clusters' NEW membership
     // as upserts, their vanished members (deleted docs, and docs whose

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Cdc
 
@@ -36,33 +35,16 @@ import graft.operators.Cdc
   * surface. */
 object CdcStream {
 
-  private def fs(spark: SparkSession, dir: String) =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Committed snapshot versions (batch ids), unsorted. A version
-    * counts as committed only once its `_SUCCESS` marker exists — a
-    * batch that crashes mid-write leaves a partial `v=<id>` directory
-    * with no marker, and it must stay invisible both to readers and to
-    * the next merge's prev-selection, or the torn write would be read
-    * as the newest snapshot. Foreign directories (`v=tmp` from stray
-    * tooling) are ignored rather than thrown on. */
-  private def versions(spark: SparkSession, snapshotDir: String): Seq[Long] = {
-    val path = new Path(snapshotDir)
-    val f = fs(spark, snapshotDir)
-    if (!f.exists(path)) Seq.empty
-    else f.listStatus(path).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .filter(_.startsWith("v="))
-      .flatMap(s => s.stripPrefix("v=").toLongOption)
-      .filter(v => f.exists(new Path(s"$snapshotDir/v=$v/_SUCCESS")))
-  }
+  /** Committed snapshot versions, ascending ([[Fold.versions]]: a
+    * torn `v=<id>` write must not be read as the newest snapshot). */
+  private def versions(spark: SparkSession, snapshotDir: String): Seq[Long] =
+    Fold.committed(spark, snapshotDir, "v=")
 
   /** The snapshot as of the newest committed version — `initial` if no
     * batch has committed yet. */
   def currentSnapshot(spark: SparkSession, snapshotDir: String,
       initial: DataFrame): DataFrame =
-    versions(spark, snapshotDir).sorted.lastOption match {
+    versions(spark, snapshotDir).lastOption match {
       case Some(v) => spark.read.parquet(s"$snapshotDir/v=$v")
       case None    => initial
     }
@@ -76,28 +58,14 @@ object CdcStream {
     require(retain >= 2,
       "retain >= 2: the previous version must survive for batch replay")
     val spark = batch.sparkSession
-    val prev = versions(spark, snapshotDir).filter(_ < id).sorted.lastOption match {
+    val prev = versions(spark, snapshotDir).filter(_ < id).lastOption match {
       case Some(v) => spark.read.parquet(s"$snapshotDir/v=$v")
       case None    => initial
     }
     Cdc.applyChanges(prev, batch, keyCol, seqCol, opCol)
       .write.mode("overwrite").parquet(s"$snapshotDir/v=$id")
-    val keep = versions(spark, snapshotDir).sorted.reverse.take(retain).toSet
-    versions(spark, snapshotDir).filterNot(keep).foreach { v =>
-      fs(spark, snapshotDir).delete(new Path(s"$snapshotDir/v=$v"), true)
+    versions(spark, snapshotDir).dropRight(retain).foreach { v =>
+      Fold.fs(spark, snapshotDir).delete(new Path(s"$snapshotDir/v=$v"), true)
     }
   }
-
-  /** Sink a streaming CDC feed (key, seq, op, payload...) as an
-    * incrementally-maintained snapshot rooted at `snapshotDir`, seeded
-    * from `initial`. Read the result with [[currentSnapshot]]. */
-  def cdcSnapshotSink(changes: DataFrame, snapshotDir: String,
-      checkpoint: String, initial: DataFrame, keyCol: String, seqCol: String,
-      opCol: String): StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        mergeBatch(batch, id, snapshotDir, initial, keyCol, seqCol, opCol)
-      }
-      .start()
 }

@@ -2,9 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.Dedup
+import graft.operators.{Caching, Dedup}
 
 /** Streaming near-dup CLUSTER-MAP maintenance — the continuous twin
   * of [[graft.operators.Dedup.clustersMaintain]], closing the
@@ -26,19 +25,15 @@ import graft.operators.Dedup
   * distinct-hash pairs within the radius — O(docs + near-hash-pairs)
   * state, so an all-duplicates feed persists ZERO pair rows instead
   * of N²/2; see [[graft.operators.Dedup.ClusterIndexState]]), `cl/`
-  * (the cluster map) — plus the 1-row feed frontier `f/`, which stays
-  * a [[SnapshotStore]] snapshot home (rewriting one row per batch is
-  * the snapshot protocol's sweet spot). Each batch WRITES ONLY ITS
-  * DELTAS (the fold computes O(Δ) and now also persists O(Δ) — the
-  * r19 verdict's write-amplification gap); `compactEvery` bounds the
-  * delta-partition count via [[DeltaStore.compact]]'s staged swap.
-  * Every home is read strictly-below the batch id, so a crash between
-  * ANY two commits replays to identical content; the monotone-seq
-  * guard rides the frontier plan and the FRONTIER HOME COMMITS FIRST
-  * (the [[IvmStream]] join-twin lesson). A layout marker under the
-  * root makes a cross-build state-schema change fail with a loud
-  * "rebootstrap" message instead of a bare AnalysisException
-  * (ADVICE r19).
+  * (the cluster map) — plus the [[Fold.guarded]] 1-row feed frontier
+  * `f/`, a [[SnapshotStore]] snapshot home (rewriting one row per
+  * batch is the snapshot protocol's sweet spot). Each batch WRITES
+  * ONLY ITS DELTAS (the fold computes O(Δ) and now also persists O(Δ)
+  * — the r19 verdict's write-amplification gap); `compactEvery` bounds
+  * the delta-partition count via [[DeltaStore.compact]]'s staged swap.
+  * A layout marker under the root makes a cross-build state-schema
+  * change fail with a loud "rebootstrap" message instead of a bare
+  * AnalysisException (ADVICE r19).
   *
   * The reference engine is read-only over static CSVs
   * (/root/reference/sqlengine.py; SURVEY.md §2.9); extension
@@ -55,16 +50,35 @@ object ClusterStream {
   private[streaming] val PairKeys = Seq("h_a", "h_b")
   private[streaming] val ClKeys = Seq("id")
 
-  private[streaming] def emptySigs(batch: DataFrame): DataFrame =
+  private def emptySigs(batch: DataFrame): DataFrame =
     batch.select(col("id"), xxhash64(col("text")).as("simhash"))
       .filter(lit(false))
 
-  private[streaming] def emptyPairs(batch: DataFrame): DataFrame =
+  private def emptyPairs(batch: DataFrame): DataFrame =
     batch.select(xxhash64(col("text")).as("h_a"),
       xxhash64(col("text")).as("h_b")).filter(lit(false))
 
-  private[streaming] def emptyClusters(batch: DataFrame): DataFrame =
+  private def emptyClusters(batch: DataFrame): DataFrame =
     batch.select(col("id"), col("id").as("cluster_id")).filter(lit(false))
+
+  /** The carried index below the batch, sig/pairs persisted on the
+    * batch scope (r21): the maintenance fold reads each TWICE (sigs:
+    * next-state anti-join + affected-hash semi-join; pairs:
+    * carried-pair anti-joins + the pair delta), and an unpersisted
+    * stateSoFar re-runs its latest-wins delta reconstruction — a union
+    * + per-key shuffle over every committed delta partition — once per
+    * consumer, growing with batch count. */
+  private[streaming] def indexSoFar(s: Fold.Scope, rootDir: String,
+      batch: DataFrame): Dedup.ClusterIndexState = {
+    def carried(home: String, empty: DataFrame, keys: Seq[String]) =
+      DeltaStore.stateSoFar(s.spark, s"$rootDir/$home", s.id, empty, keys)
+    Dedup.ClusterIndexState(
+      Caching.maybePersist(carried("sig", emptySigs(batch), SigKeys),
+        persist = true, s.tracker),
+      Caching.maybePersist(carried("pairs", emptyPairs(batch), PairKeys),
+        persist = true, s.tracker),
+      carried("cl", emptyClusters(batch), ClKeys))
+  }
 
   /** Latest committed cluster map (the `cl/` home under `rootDir`). */
   def readClusters(spark: SparkSession, rootDir: String): DataFrame =
@@ -85,63 +99,21 @@ object ClusterStream {
     * injection: fold change-batch `id` onto the carried cluster index
     * and commit the `f/` frontier plus the three homes' DELTAS at
     * `b=<id>`. `compactEvery > 0` folds a [[DeltaStore.compact]] of
-    * each delta home into every Nth batch (replay-safe: the newest
-    * delta is never merged, and foreachBatch serialization means no
-    * reader races the swap). */
+    * each delta home into every Nth batch ([[Fold]]'s cadence). The
+    * maintenance's internal caches and member/edge checkpoints are
+    * released with the batch scope. */
   def foldBatch(batch: DataFrame, id: Long, rootDir: String,
       maxHamming: Int = 3, chunks: Int = 4, retainBelow: Int = 1,
       compactEvery: Int = 0): Unit = {
-    val spark = batch.sparkSession
-    DeltaStore.ensureLayoutMarker(spark, rootDir, LayoutTag)
-    // batch-scoped persist register: a CONTINUOUS sink folding every
-    // micro-batch must release the maintenance's internal caches (and
-    // its eager member/edge checkpoints) once its homes commit, or it
-    // accumulates one set per batch (the caller-clearCache contract
-    // assumes a per-query terminal action the long-running sink never
-    // reaches)
-    val tracker = new graft.operators.Caching.PersistTracker
-    // sig/pairs state reads persisted (r21): the fold reads each twice,
-    // and an unpersisted stateSoFar re-runs its latest-wins delta
-    // reconstruction shuffle once per consumer (see ManifestStream)
-    val prev = Dedup.ClusterIndexState(
-      graft.operators.Caching.maybePersist(
-        DeltaStore.stateSoFar(spark, s"$rootDir/sig", id, emptySigs(batch),
-          SigKeys), persist = true, tracker),
-      graft.operators.Caching.maybePersist(
-        DeltaStore.stateSoFar(spark, s"$rootDir/pairs", id,
-          emptyPairs(batch), PairKeys), persist = true, tracker),
-      DeltaStore.stateSoFar(spark, s"$rootDir/cl", id, emptyClusters(batch),
-        ClKeys))
-    val fPrev = SnapshotStore.stateSoFar(spark, s"$rootDir/f", id,
-      batch.select(lit(Long.MinValue).as("last_seq")).filter(lit(false)))
-    val frontier = SnapshotStore.seqFrontier(fPrev, batch, "ClusterStream")
-    try {
-      val upd = Dedup.clustersMaintainUpdate(prev, batch, "id", "text",
-        "seq", "op", maxHamming, chunks, tracker = tracker)
-      // frontier FIRST — the guard must throw before any state advances
-      SnapshotStore.commit(frontier, s"$rootDir/f", id, retainBelow)
-      DeltaStore.commitDelta(upd.deltas.sigs, s"$rootDir/sig", id)
-      DeltaStore.commitDelta(upd.deltas.pairs, s"$rootDir/pairs", id)
-      DeltaStore.commitDelta(upd.deltas.clusters, s"$rootDir/cl", id)
-      if (compactEvery > 0 && id > 0 && id % compactEvery == 0) {
-        DeltaStore.compact(spark, s"$rootDir/sig", SigKeys)
-        DeltaStore.compact(spark, s"$rootDir/pairs", PairKeys)
-        DeltaStore.compact(spark, s"$rootDir/cl", ClKeys)
-      }
-    } finally tracker.release()
+    DeltaStore.ensureLayoutMarker(batch.sparkSession, rootDir, LayoutTag)
+    Fold.guarded(batch, id, rootDir, "ClusterStream", retainBelow,
+        compactEvery) { s =>
+      val upd = Dedup.clustersMaintainUpdate(
+        indexSoFar(s, rootDir, batch), batch, "id", "text",
+        "seq", "op", maxHamming, chunks, tracker = s.tracker)
+      s.delta(upd.deltas.sigs, s"$rootDir/sig", SigKeys)
+      s.delta(upd.deltas.pairs, s"$rootDir/pairs", PairKeys)
+      s.delta(upd.deltas.clusters, s"$rootDir/cl", ClKeys)
+    }
   }
-
-  /** Sink a document change feed as a continuously-maintained near-dup
-    * cluster map (see [[foldBatch]] for the contract). */
-  def clusterSink(changes: DataFrame, rootDir: String, checkpoint: String,
-      maxHamming: Int = 3, chunks: Int = 4,
-      retainBelow: Int = 1, compactEvery: Int = 0): StreamingQuery =
-    changes.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        foldBatch(batch, id, rootDir, maxHamming, chunks, retainBelow,
-          compactEvery)
-      }
-      .start()
 }

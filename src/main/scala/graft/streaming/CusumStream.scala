@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming CUSUM change-point monitor — the continuous twin of the
   * batch [[graft.operators.Profiling.cusumFixed]], carrying the
@@ -103,16 +102,4 @@ object CusumStream {
           .otherwise(col("__acc.m")).as("min_p_micro"))
     SnapshotStore.commit(folded, stateDir, id, retainBelow)
   }
-
-  /** Sink a finalized-bucket count stream ([[EwmaStream.bucketCounts]])
-    * as a continuously-maintained CUSUM state snapshot. */
-  def cusumSink(counts: DataFrame, stateDir: String, checkpoint: String,
-      muMicro: Long, kappaMicro: Long, retainBelow: Int = 1): StreamingQuery =
-    counts.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        foldBatch(batch, id, stateDir, muMicro, kappaMicro, retainBelow)
-      }
-      .start()
 }

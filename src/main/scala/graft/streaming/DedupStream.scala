@@ -1,11 +1,9 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.Dedup
+import graft.operators.{Caching, Dedup}
 import graft.operators.Dedup.MinHashParams
 
 /** Streaming incremental dedup INGEST: each micro-batch of documents
@@ -38,45 +36,34 @@ import graft.operators.Dedup.MinHashParams
   * (/root/reference/sqlengine.py; no streams); extension surface. */
 object DedupStream {
 
-  private def fs(spark: SparkSession, dir: String) =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Batch ids (`b=<id>` partitions) under `dir`, split by whether the
-    * partition's `_SUCCESS` marker exists — committed vs mid-write. */
-  private def batchIds(spark: SparkSession, dir: String): (Seq[Long], Seq[Long]) = {
-    val path = new Path(dir)
-    val f = fs(spark, dir)
-    if (!f.exists(path)) (Seq.empty, Seq.empty)
-    else f.listStatus(path).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .filter(_.startsWith("b="))
-      .flatMap(s => s.stripPrefix("b=").toLongOption)
-      .partition(v => f.exists(new Path(s"$dir/b=$v/_SUCCESS")))
-  }
-
-  /** Committed delta batch ids (guarded by `_SUCCESS`). */
-  private def committed(spark: SparkSession, indexDir: String): Seq[Long] =
-    batchIds(spark, indexDir)._1
-
   /** The standing signature index as of batches STRICTLY BELOW
     * `belowBatch` — the replay-safe view. `empty` supplies the
     * signature schema when nothing has committed yet. */
   def indexSoFar(spark: SparkSession, indexDir: String, belowBatch: Long,
       empty: DataFrame): DataFrame =
-    committed(spark, indexDir).filter(_ < belowBatch).sorted match {
+    Fold.committed(spark, indexDir).filter(_ < belowBatch) match {
       case Seq() => empty
-      case vs => vs.map(v => spark.read.parquet(s"$indexDir/b=$v"))
-        .reduce(_.unionByName(_))
+      case vs => union(spark, indexDir, vs)
     }
+
+  private def union(spark: SparkSession, dir: String,
+      vs: Seq[Long]): DataFrame =
+    vs.map(v => spark.read.parquet(s"$dir/b=$v")).reduce(_.unionByName(_))
 
   /** One foreachBatch step, factored out so a spec can drive replay
     * directly: screen batch `id`, commit survivors + their signature
-    * delta. Idempotent by construction — see the object doc. */
+    * delta. Idempotent by construction — see the object doc.
+    *
+    * `compactEvery > 0` runs [[compactIndex]] on every Nth batch
+    * ([[Fold]]'s cadence) — without it a long-lived stream accrues one
+    * index delta per batch, and [[indexSoFar]]'s per-batch cost (one
+    * listing + one `_SUCCESS` probe + one union branch per delta)
+    * grows linearly over the stream's lifetime. */
   def screenBatch(batch: DataFrame, id: Long, indexDir: String,
       keptDir: String, idCol: String, textCol: String, threshold: Double,
-      p: MinHashParams = MinHashParams()): Unit = {
-    val spark = batch.sparkSession
+      p: MinHashParams = MinHashParams(),
+      compactEvery: Int = 0): Unit = Fold.batch(batch, id, compactEvery) { s =>
+    val spark = s.spark
     val docs = batch.select(col(idCol), col(textCol))
     val emptyIndex = Dedup.minhashSignatures(docs.filter(lit(false)),
       idCol, textCol, p)
@@ -84,30 +71,26 @@ object DedupStream {
     val hits = Dedup.screenAgainstIndex(docs, idCol, textCol, index,
       threshold, p, persist = false)
       .select(col(idCol)).distinct()
-    // survivors of the history screen, then near-dup-dedup WITHIN them
-    val rem = docs.join(hits, Seq(idCol), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // survivors of the history screen, then near-dup-dedup WITHIN them.
     // persist=false per the Caching contract: a long-running stream
     // constructs fresh plans every batch — operator-internal persists
-    // would pile up one cache entry per batch; `rem` above is the one
-    // multi-consumer frame and this step owns its lifecycle. The
-    // finally matters in a stream: Spark retries a failed batch with a
-    // FRESH screenBatch call, so an exception mid-body (a transient FS
-    // error, a failed write) would otherwise leak one cached plan per
-    // attempt for the stream's whole lifetime.
-    try {
-      val pairs = Dedup.minhashNearDuplicates(rem, idCol, textCol,
-        threshold, p, persist = false)
-      val kept = Dedup.connectedComponents(rem.select(col(idCol)), idCol, pairs)
-        .filter(col("keep")).select(col(idCol))
-        .join(rem, Seq(idCol))
-      kept.write.mode("overwrite").parquet(s"$keptDir/b=$id")
-      // the delta re-reads kept from ITS OWN committed files: the
-      // signature write must not race the kept write's lazy plan
-      val keptBack = spark.read.parquet(s"$keptDir/b=$id")
-      Dedup.minhashSignatures(keptBack, idCol, textCol, p)
-        .write.mode("overwrite").parquet(s"$indexDir/b=$id")
-    } finally rem.unpersist()
+    // would pile up one cache entry per batch; `rem` is the one
+    // multi-consumer frame, released with the batch scope
+    val rem = Caching.maybePersist(docs.join(hits, Seq(idCol), "left_anti"),
+      persist = true, s.tracker)
+    val pairs = Dedup.minhashNearDuplicates(rem, idCol, textCol,
+      threshold, p, persist = false)
+    val kept = Dedup.connectedComponents(rem.select(col(idCol)), idCol, pairs,
+        tracker = s.tracker)
+      .filter(col("keep")).select(col(idCol))
+      .join(rem, Seq(idCol))
+    kept.write.mode("overwrite").parquet(s"$keptDir/b=$id")
+    // the delta re-reads kept from ITS OWN committed files: the
+    // signature write must not race the kept write's lazy plan
+    val keptBack = spark.read.parquet(s"$keptDir/b=$id")
+    Dedup.minhashSignatures(keptBack, idCol, textCol, p)
+      .write.mode("overwrite").parquet(s"$indexDir/b=$id")
+    s.onCompact(compactIndex(spark, indexDir))
   }
 
   /** The kept corpus restricted to COMMITTED batches — each `b=<id>`
@@ -122,100 +105,18 @@ object DedupStream {
     * against a concurrently-replaying writer. Throws if no batch has
     * committed yet (there is no schema to return an empty frame with). */
   def readKeptCorpus(spark: SparkSession, keptDir: String): DataFrame =
-    batchIds(spark, keptDir)._1.sorted match {
+    Fold.committed(spark, keptDir) match {
       case Seq() => throw new IllegalStateException(
         s"no committed kept batches under $keptDir")
-      case vs => vs.map(v => spark.read.parquet(s"$keptDir/b=$v"))
-        .reduce(_.unionByName(_))
+      case vs => union(spark, keptDir, vs)
     }
 
-  /** Compact the index's committed deltas: merge every delta STRICTLY
-    * BELOW the newest committed batch into the OLDEST merged id, then
-    * drop the rest. Read semantics are unchanged — [[indexSoFar]]
-    * unions committed partitions below the caller's batch id, every
-    * future batch id is above all merged ids, and the one batch
-    * Structured Streaming can still replay (the newest) reads exactly
-    * the same row set it read before. The newest delta itself is left
-    * alone for that reason.
-    *
-    * Durability (same boundary as [[CdcStream]]'s snapshot rewrite;
-    * run compaction from the ingest's own foreachBatch or a
-    * maintenance window, never beside a live reader). Two crash
-    * windows, both non-fatal and both convergent:
-    *  - DURING the target rewrite: that one delta's rows are invisible
-    *    (its `_SUCCESS` is gone) until the heal below replays the
-    *    committed staging copy — which still holds every merged row —
-    *    back over the interrupted target on the next compactIndex;
-    *  - AFTER the rewrite, BEFORE the tail deletes: merged rows exist
-    *    both in the target and in the not-yet-deleted tails. Harmless
-    *    to screening (candidates and hits are distinct'd) and healed
-    *    by the next compactIndex — the merge below is DISTINCT, so
-    *    re-merging duplicated deltas collapses them.
-    * A lake deployment hosts the index in an ACID table format where
-    * this compaction is a transaction — the read protocol here is
-    * exactly what those formats' logs implement. */
-  def compactIndex(spark: SparkSession, indexDir: String): Unit = {
-    val f = fs(spark, indexDir)
-    val stagingPath = s"$indexDir/compact_staging"
-    // Heal a prior interrupted run: a COMMITTED staging dir (its own
-    // _SUCCESS — parquet writes emit one) paired with an uncommitted
-    // b=<v> means the crash hit mid-overwrite of the merge target.
-    // Replay the staging→target rewrite so the merged rows rejoin the
-    // committed view; the staging holds the DISTINCT union of every
-    // merged delta, so replaying into any uncommitted partition (at
-    // most the one target under this protocol) restores exactly what
-    // the interrupted run was writing. Without this, those signatures
-    // stay invisible to every future screen until out-of-band recovery
-    // — previously-deduped documents would be re-admitted.
-    if (f.exists(new Path(s"$stagingPath/_SUCCESS"))) {
-      batchIds(spark, indexDir)._2.sorted.headOption.foreach { v =>
-        spark.read.parquet(stagingPath)
-          .write.mode("overwrite").parquet(s"$indexDir/b=$v")
-      }
-      f.delete(new Path(stagingPath), true)
-    }
-    val vs = committed(spark, indexDir).sorted
-    if (vs.length < 3) return // newest is untouchable; need >= 2 below it
-    val mergeIds = vs.dropRight(1)
-    val target = mergeIds.head
-    val staging = stagingPath // no b= prefix → invisible to readers
-    mergeIds.map(v => spark.read.parquet(s"$indexDir/b=$v"))
-      .reduce(_.unionByName(_))
-      .distinct() // heals row duplication from a prior interrupted run
-      .write.mode("overwrite").parquet(staging)
-    spark.read.parquet(staging)
-      .write.mode("overwrite").parquet(s"$indexDir/b=$target")
-    mergeIds.tail.foreach(v => f.delete(new Path(s"$indexDir/b=$v"), true))
-    f.delete(new Path(staging), true)
-  }
-
-  /** Sink a streaming document feed as a continuously-deduped corpus:
-    * kept docs land under `keptDir/b=<batch>`, the signature index
-    * grows under `indexDir/b=<batch>`. Read the corpus with
-    * [[readKeptCorpus]] — it gates partitions on their `_SUCCESS`
-    * marker, so a batch replay mid-rewrite is skipped rather than
-    * observed half-written (a bare `spark.read.parquet(keptDir)` has
-    * no such guard).
-    *
-    * `compactEvery > 0` folds [[compactIndex]] into every Nth batch's
-    * foreachBatch step — without it a long-lived stream accrues one
-    * index delta per batch, and [[indexSoFar]]'s per-batch cost (one
-    * listing + one `_SUCCESS` probe + one union branch per delta)
-    * grows linearly over the stream's lifetime. In-batch compaction is
-    * replay-safe: the newest delta (the only batch Structured
-    * Streaming can still replay) is never merged, and the foreachBatch
-    * serialization means no reader races the rewrite. */
-  def dedupIngestSink(docs: DataFrame, indexDir: String, keptDir: String,
-      checkpoint: String, idCol: String, textCol: String,
-      threshold: Double = 0.7,
-      p: MinHashParams = MinHashParams(),
-      compactEvery: Int = 0): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        screenBatch(batch, id, indexDir, keptDir, idCol, textCol, threshold, p)
-        if (compactEvery > 0 && id % compactEvery == 0)
-          compactIndex(batch.sparkSession, indexDir)
-      }
-      .start()
+  /** [[Fold.compact]] of the index with the DISTINCT-union merge:
+    * re-merging deltas duplicated by a crash before the tail deletes
+    * collapses them (and duplicates are harmless to screening
+    * meanwhile — candidates and hits are distinct'd). Run it from the
+    * ingest's own step (`compactEvery`) or a maintenance window, never
+    * beside a live reader. */
+  def compactIndex(spark: SparkSession, indexDir: String): Unit =
+    Fold.compact(spark, indexDir)(union(spark, indexDir, _).distinct())
 }

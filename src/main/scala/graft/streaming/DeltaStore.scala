@@ -25,12 +25,10 @@ import org.apache.spark.sql.functions._
   *    construction. A partition counts as committed only once its
   *    `_SUCCESS` marker exists;
   *  - [[compact]] periodically merges every delta strictly below the
-  *    newest committed batch into the oldest merged id (the newest
-  *    stays untouched — it is the one batch Structured Streaming can
-  *    still replay, and its replay must read exactly the row set it
-  *    read before), bounding the partition count a reconstruction
-  *    unions. 'D' winners are dropped from the compacted base —
-  *    nothing below the base exists for them to mask.
+  *    newest committed batch into the oldest merged id
+  *    ([[Fold.compact]]), bounding the partition count a
+  *    reconstruction unions. 'D' winners are dropped from the
+  *    compacted base — nothing below the base exists for them to mask.
   *
   * Write contract: a delta partition carries AT MOST ONE row per key
   * (the [[graft.operators.Cdc.latestChanges]] winner reduction shape)
@@ -38,18 +36,6 @@ import org.apache.spark.sql.functions._
   * rows in one partition would be resolved arbitrarily. The producers
   * guarantee this by construction (their deltas come from per-key
   * reductions and disjoint anti-joins); the specs pin it.
-  *
-  * Crash windows (all convergent, the [[DedupStream.compactIndex]]
-  * analysis carried over): a crash DURING the compaction target
-  * rewrite leaves the target uncommitted and a COMMITTED staging copy
-  * — healed by replaying staging over the target on the next
-  * [[compact]]; a crash AFTER the rewrite but BEFORE the tail deletes
-  * duplicates merged rows between the target and the not-yet-deleted
-  * tails — harmless (latest-wins picks the higher version, whose
-  * content the merge preserved verbatim) and healed by the next
-  * compaction. A lake deployment hosts these homes in an ACID table
-  * format where the swap is a transaction; this read protocol is what
-  * those formats' logs implement.
   *
   * The reference engine is read-only over static CSVs
   * (/root/reference/sqlengine.py; SURVEY.md §2.9); extension
@@ -59,30 +45,7 @@ private[graft] object DeltaStore {
   /** The op column every delta row carries: 'U' upsert / 'D' delete. */
   val DopCol = "__dop"
 
-  private val StagingName = "compact_staging"
   private val MarkerName = "_graft_layout"
-
-  private def fs(spark: SparkSession, dir: String) =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Delta batch ids (`b=<id>` partitions) under `dir`, split by
-    * whether the partition's `_SUCCESS` marker exists. */
-  private def batchIds(spark: SparkSession, dir: String)
-      : (Seq[Long], Seq[Long]) = {
-    val path = new Path(dir)
-    val f = fs(spark, dir)
-    if (!f.exists(path)) (Seq.empty, Seq.empty)
-    else f.listStatus(path).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .filter(_.startsWith("b="))
-      .flatMap(_.stripPrefix("b=").toLongOption)
-      .partition(v => f.exists(new Path(s"$dir/b=$v/_SUCCESS")))
-  }
-
-  /** Committed delta versions under `dir`. */
-  def committed(spark: SparkSession, dir: String): Seq[Long] =
-    batchIds(spark, dir)._1
 
   /** Latest-wins reconstruction over the given delta versions,
     * KEEPING the `__dop` column (callers drop 'D' winners or not —
@@ -122,7 +85,7 @@ private[graft] object DeltaStore {
   def stateSoFar(spark: SparkSession, dir: String, belowBatch: Long,
       empty: DataFrame, keyCols: Seq[String],
       restrictTo: Option[DataFrame] = None): DataFrame =
-    committed(spark, dir).filter(_ < belowBatch).sorted match {
+    Fold.committed(spark, dir).filter(_ < belowBatch) match {
       case Seq() => empty
       case vs => winners(spark, dir, vs, keyCols, restrictTo)
         .filter(col(DopCol) =!= "D")
@@ -137,7 +100,7 @@ private[graft] object DeltaStore {
     * or read after the stream is stopped. */
   def readLatest(spark: SparkSession, dir: String, what: String,
       keyCols: Seq[String]): DataFrame =
-    committed(spark, dir).sorted match {
+    Fold.committed(spark, dir) match {
       case Seq() => throw new IllegalStateException(
         s"no committed $what state under $dir")
       case vs =>
@@ -165,39 +128,16 @@ private[graft] object DeltaStore {
       .unionByName(delta.filter(col(DopCol) =!= "D")
         .select(state.columns.map(col(_)): _*))
 
-  /** Merge every committed delta STRICTLY BELOW the newest into the
-    * OLDEST merged id, then drop the rest — [[DedupStream.compactIndex]]
-    * generalized to latest-wins keyed state (see the object doc for
-    * the crash-window analysis; the heal below replays a committed
-    * staging copy over the interrupted target). Read semantics are
-    * unchanged: every future batch id is above all merged ids, and the
-    * one batch Structured Streaming can still replay (the newest)
-    * reads exactly the row set it read before. */
+  /** [[Fold.compact]] with the latest-wins merge. 'D' winners are
+    * dropped: the compacted partition is the BASE, with nothing below
+    * it for a delete row to mask. Duplicates left by a crash before
+    * the tail deletes are harmless (latest-wins picks the higher
+    * version, whose content the merge preserved verbatim). */
   def compact(spark: SparkSession, dir: String,
-      keyCols: Seq[String]): Unit = {
-    val f = fs(spark, dir)
-    val stagingPath = s"$dir/$StagingName"
-    if (f.exists(new Path(s"$stagingPath/_SUCCESS"))) {
-      batchIds(spark, dir)._2.sorted.headOption.foreach { v =>
-        spark.read.parquet(stagingPath)
-          .write.mode("overwrite").parquet(s"$dir/b=$v")
-      }
-      f.delete(new Path(stagingPath), true)
-    }
-    val vs = committed(spark, dir).sorted
-    if (vs.length < 3) return // newest untouchable; need >= 2 below it
-    val mergeIds = vs.dropRight(1)
-    val target = mergeIds.head
-    // 'D' winners are dropped: the compacted partition is the BASE —
-    // there is nothing below it for a delete row to mask
-    winners(spark, dir, mergeIds, keyCols, None)
-      .filter(col(DopCol) =!= "D")
-      .write.mode("overwrite").parquet(stagingPath)
-    spark.read.parquet(stagingPath)
-      .write.mode("overwrite").parquet(s"$dir/b=$target")
-    mergeIds.tail.foreach(v => f.delete(new Path(s"$dir/b=$v"), true))
-    f.delete(new Path(stagingPath), true)
-  }
+      keyCols: Seq[String]): Unit =
+    Fold.compact(spark, dir)(mergeIds =>
+      winners(spark, dir, mergeIds, keyCols, None)
+        .filter(col(DopCol) =!= "D"))
 
   /** Stamp (or check) the state-layout marker under a stream root —
     * the ADVICE-r19 hazard: a state layout/schema change across
@@ -211,7 +151,7 @@ private[graft] object DeltaStore {
     *    any read can mis-resolve, and before any home advances). */
   def ensureLayoutMarker(spark: SparkSession, rootDir: String,
       tag: String): Unit = {
-    val f = fs(spark, rootDir)
+    val f = Fold.fs(spark, rootDir)
     val root = new Path(rootDir)
     val marker = new Path(root, MarkerName)
     if (f.exists(marker)) {

@@ -81,12 +81,9 @@ object EventStreams {
     * lineage for free. */
   def idempotentParquetSink(df: DataFrame, outDir: String,
       checkpoint: String): StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        batch.write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
-      }
-      .start()
+    Fold.start(df, checkpoint) { (batch, id) =>
+      batch.write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
+    }
 
   /** Tumbling 5-minute per-type counts/sums with a 10-minute watermark:
     * the streaming analog of the `ev_window_tumbling` batch query. */

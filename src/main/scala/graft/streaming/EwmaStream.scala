@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming EWMA of the per-bucket event rate — the continuous twin
   * of the batch [[graft.operators.Profiling.ewmaRate]] fold, and the
@@ -99,16 +98,4 @@ object EwmaStream {
           .as("ewma"))
     SnapshotStore.commit(folded, stateDir, id, retainBelow)
   }
-
-  /** Sink a finalized-bucket count stream ([[bucketCounts]]) as a
-    * continuously-maintained EWMA state snapshot under `stateDir`. */
-  def ewmaSink(counts: DataFrame, stateDir: String, checkpoint: String,
-      alpha: Double = 0.25, retainBelow: Int = 1): StreamingQuery =
-    counts.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        foldBatch(batch, id, stateDir, alpha, retainBelow)
-      }
-      .start()
 }

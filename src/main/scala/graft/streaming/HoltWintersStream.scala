@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Profiling
 
@@ -89,22 +88,4 @@ object HoltWintersStream {
           .as("st"))
     SnapshotStore.commit(folded, stateDir, id, retainBelow)
   }
-
-  /** Sink a finalized-bucket count stream ([[EwmaStream.bucketCounts]])
-    * as a continuously-maintained Holt–Winters state snapshot under
-    * `stateDir`. The consumer view ([[readState]]) carries the raw
-    * state array; level/trend/season/forecast project off it exactly
-    * as the batch operator's output columns do. */
-  def holtWintersSink(counts: DataFrame, stateDir: String,
-      checkpoint: String, period: Int, alpha: Double = 0.25,
-      beta: Double = 0.25, gamma: Double = 0.25,
-      retainBelow: Int = 1): StreamingQuery =
-    counts.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        foldBatch(batch, id, stateDir, period, alpha, beta, gamma,
-          retainBelow)
-      }
-      .start()
 }

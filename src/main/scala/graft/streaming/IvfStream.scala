@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Similarity
 
@@ -28,12 +27,7 @@ import graft.operators.Similarity
   *
   * State lives under TWO [[SnapshotStore]] homes per root — `idx/`
   * (the inverted file: one (id, cell, vec) row per live document) and
-  * `f/` (the 1-row feed frontier). The monotone-`seq` guard rides the
-  * frontier plan and the FRONTIER HOME COMMITS FIRST — the
-  * [[IvmStream.joinFoldBatch]] lesson: if state committed first, a
-  * regressed feed would land a mis-folded index before the guard ever
-  * evaluated, and every replay would fail the same guard while readers
-  * kept serving the corrupt snapshot.
+  * the [[Fold.guarded]] `f/` frontier.
   *
   * At 100 TB: per batch the index is touched only through
   * [[graft.operators.Cdc.applyChanges]]'s key-level full-outer join —
@@ -65,34 +59,14 @@ object IvfStream {
     * `seq`, `op`, `id`, and `vecCol`. */
   def foldBatch(batch: DataFrame, id: Long, rootDir: String,
       vecCol: String, centroids: Array[Array[Double]],
-      retainBelow: Int = 1): Unit = {
-    val spark = batch.sparkSession
-    val prev = SnapshotStore.stateSoFar(spark, s"$rootDir/idx", id,
+      retainBelow: Int = 1): Unit =
+    Fold.guarded(batch, id, rootDir, "IvfStream", retainBelow) { s =>
+    val prev = SnapshotStore.stateSoFar(s.spark, s"$rootDir/idx", id,
       emptyIndex(batch, vecCol))
-    val fPrev = SnapshotStore.stateSoFar(spark, s"$rootDir/f", id,
-      batch.select(lit(Long.MinValue).as("last_seq")).filter(lit(false)))
-    // the shared monotone-seq guard (SnapshotStore.seqFrontier): a
-    // replayed or regressed feed would re-apply folded changes
-    val frontier = SnapshotStore.seqFrontier(fPrev, batch, "IvfStream")
     val next = Similarity.ivfMaintain(prev, batch, "id", vecCol,
         "seq", "op", centroids)
       // cell-clustered layout: a search opens only its probe cells
       .repartition(col("cell"))
-    // frontier FIRST — the guard must throw before any state advances
-    SnapshotStore.commit(frontier, s"$rootDir/f", id, retainBelow)
-    SnapshotStore.commit(next, s"$rootDir/idx", id, retainBelow)
+    s.snapshot(next, s"$rootDir/idx")
   }
-
-  /** Sink an embedding change feed as a continuously-maintained IVF
-    * index (see [[foldBatch]] for the contract). */
-  def ivfSink(changes: DataFrame, rootDir: String, checkpoint: String,
-      vecCol: String, centroids: Array[Array[Double]],
-      retainBelow: Int = 1): StreamingQuery =
-    changes.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        foldBatch(batch, id, rootDir, vecCol, centroids, retainBelow)
-      }
-      .start()
 }

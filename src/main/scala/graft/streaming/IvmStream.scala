@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.DecimalType
 
 import graft.operators.Cdc
@@ -18,8 +17,8 @@ import graft.operators.Cdc
   *
   * == Group-aggregate view ==
   *
-  * State is TWO NUMBERS PER GROUP — (n, total) — plus one global
-  * frontier, never per-key state: the feed's Debezium-style BEFORE
+  * State is TWO NUMBERS PER GROUP — (n, total) — plus the global
+  * feed frontier, never per-key state: the feed's Debezium-style BEFORE
   * IMAGES make the retraction computable without consulting a key
   * store. Feed contract (one row per change):
   * `(key, seq, op, grp, value, old_grp, old_value)` where `op` ∈
@@ -35,17 +34,15 @@ import graft.operators.Cdc
   * only possible when a feed's old images LIE about the pre-state —
   * trips an in-plan assert instead of silently corrupting the view.
   *
-  * Cross-batch ordering is guarded like the bucket twins
-  * ([[SnapshotStore.foldPrelude]]'s frontier contract, adapted from
-  * per-key buckets to the feed's global `seq`): the carried state
-  * pins `last_seq` = the maximum folded sequence, and a batch whose
-  * minimum new `seq` does not exceed it fails loudly — a regressed
-  * or replayed-out-of-protocol feed would otherwise retract against
-  * images the view no longer holds.
+  * Cross-batch ordering is guarded by [[Fold.guarded]]: the `f/`
+  * home under `stateDir` pins `last_seq` = the maximum folded
+  * sequence, and a batch whose minimum new `seq` does not exceed it
+  * fails loudly — a regressed or replayed-out-of-protocol feed would
+  * otherwise retract against images the view no longer holds.
   *
   * Exactly-once: snapshot `b=<id>` overwrite, read strictly-below,
-  * prune below id − retainBelow — the [[EwmaStream]] protocol
-  * verbatim (the crash window replays batch id, which reads id−1).
+  * prune below id − retainBelow — the [[SnapshotStore]] protocol
+  * (the crash window replays batch id, which reads id−1).
   *
   * == Join view ==
   *
@@ -55,14 +52,8 @@ import graft.operators.Cdc
   * under one root — `a/` and `b/` (the merged key-level snapshots,
   * maintained by [[Cdc.applyChanges]]), `view/` (the materialized
   * join, maintained by [[Cdc.maintainJoinView]]'s affected-key delta
-  * algebra — each batch costs the batch, not the base), and `f/` (the
-  * 1-row feed frontier carrying the same monotone-`seq` guard as the
-  * group twin; a dedicated home because both `a/` and `view/` can be
-  * legitimately empty while the feed advances). A crash between the
-  * four commits replays the batch, which re-reads every home
-  * strictly-below its id and rewrites identical content — the
-  * protocol composes across homes because each read is versioned
-  * independently.
+  * algebra — each batch costs the batch, not the base), and the
+  * [[Fold.guarded]] `f/` frontier.
   *
   * At 100 TB: state is the key space (a/b snapshots + view rows),
   * never the event volume; each micro-batch pays one hash shuffle of
@@ -82,10 +73,8 @@ object IvmStream {
     batch.select(col("grp")).filter(lit(false))
       .withColumn("n", lit(0L))
       .withColumn("total_c", lit(0).cast(dec))
-      .withColumn("last_seq", lit(Long.MinValue))
 
-  /** Latest committed group-agg state:
-    * (grp, n, total_c, last_seq). */
+  /** Latest committed group-agg state: (grp, n, total_c). */
   def readState(spark: SparkSession, stateDir: String): DataFrame =
     SnapshotStore.readLatest(spark, stateDir, "IVM group-agg")
 
@@ -102,34 +91,18 @@ object IvmStream {
     * object doc) onto the carried per-group state and commit snapshot
     * `b=<id>`. */
   def foldBatch(batch: DataFrame, id: Long, stateDir: String,
-      retainBelow: Int = 1): Unit = {
-    val spark = batch.sparkSession
-    val prev = SnapshotStore.stateSoFar(spark, stateDir, id,
-      emptyAggState(spark, batch))
+      retainBelow: Int = 1): Unit = Fold.guarded(batch, id, stateDir,
+      "IvmStream", retainBelow,
+      why = "; before-images would mis-retract") { s =>
+    val prev = SnapshotStore.stateSoFar(s.spark, stateDir, id,
+      emptyAggState(s.spark, batch))
     val ord = struct(col("seq"), col("op"))
     val perKey = batch.groupBy(col("key")).agg(
       max_by(col("op"), ord).as("__op"),
       max_by(col("grp"), ord).as("__g"),
       max_by(col("value"), ord).as("__v"),
       min_by(col("old_grp"), ord).as("__og"),
-      min_by(col("old_value"), ord).as("__ov"),
-      min(col("seq")).as("__minseq"),
-      max(col("seq")).as("__maxseq"))
-    // 1-row frontier frame: the monotone-seq guard rides it in-plan
-    // (assert_true yields NULL on pass, so the filter keeps the row),
-    // and the advanced frontier broadcasts onto every state row
-    val frontier = prev.agg(
-        coalesce(max(col("last_seq")), lit(Long.MinValue)).as("__pf"))
-      .crossJoin(perKey.agg(min(col("__minseq")).as("__bmin"),
-        max(col("__maxseq")).as("__bmax")))
-      .filter(assert_true(
-        col("__bmin").isNull || col("__bmin") > col("__pf"),
-        concat(lit("IvmStream: batch seq "), col("__bmin"),
-          lit(" not after carried last_seq "), col("__pf"),
-          lit(" — the feed regressed; before-images would mis-retract")))
-        .isNull)
-      .select(greatest(col("__pf"), coalesce(col("__bmax"), col("__pf")))
-        .as("last_seq"))
+      min_by(col("old_value"), ord).as("__ov"))
     val retract = perKey.filter(col("__og").isNotNull)
       .select(col("__og").as("grp"), lit(-1L).as("__dn"),
         (-col("__ov").cast(dec)).as("__ds"))
@@ -139,8 +112,7 @@ object IvmStream {
     val delta = retract.unionByName(add)
       .groupBy(col("grp"))
       .agg(sum("__dn").as("__dn"), sum("__ds").as("__ds"))
-    val folded = prev.drop("last_seq")
-      .join(delta, Seq("grp"), "full_outer")
+    val folded = prev.join(delta, Seq("grp"), "full_outer")
       .select(col("grp"),
         (coalesce(col("n"), lit(0L)) + coalesce(col("__dn"), lit(0L)))
           .as("n"),
@@ -152,21 +124,8 @@ object IvmStream {
           lit(" — the feed's before-images are inconsistent")))
         .isNull)
       .filter(col("n") > 0L)
-      .crossJoin(frontier)
-    SnapshotStore.commit(folded, stateDir, id, retainBelow)
+    s.snapshot(folded, stateDir)
   }
-
-  /** Sink a group-agg CDC feed (the object doc's contract) as a
-    * continuously-maintained (grp, n, total) snapshot. */
-  def ivmSink(changes: DataFrame, stateDir: String, checkpoint: String,
-      retainBelow: Int = 1): StreamingQuery =
-    changes.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        foldBatch(batch, id, stateDir, retainBelow)
-      }
-      .start()
 
   // =====================================================================
   // Join-view twin
@@ -182,7 +141,7 @@ object IvmStream {
   /** One foreachBatch step for the join-view twin: split interleaved
     * batch `id` by `side`, advance both key-level snapshots with
     * [[Cdc.applyChanges]], the view with [[Cdc.maintainJoinView]],
-    * and the frontier guard; commit all four homes at `b=<id>`.
+    * and the frontier; commit all four homes at `b=<id>`.
     *
     * `aPayload` = A's payload columns (must include `joinCol`);
     * `bPayload` = B's payload columns. The batch must carry
@@ -190,10 +149,11 @@ object IvmStream {
     * column (the inactive side's columns NULL). */
   def joinFoldBatch(batch: DataFrame, id: Long, rootDir: String,
       aKey: String, joinCol: String, aPayload: Seq[String],
-      bPayload: Seq[String], retainBelow: Int = 1): Unit = {
+      bPayload: Seq[String], retainBelow: Int = 1): Unit =
+    Fold.guarded(batch, id, rootDir, "IvmStream join", retainBelow) { s =>
     require(aPayload.contains(joinCol),
       s"joinFoldBatch: A's payload must carry join column $joinCol")
-    val spark = batch.sparkSession
+    val spark = s.spark
     val aCols = Seq(aKey) ++ aPayload
     val bCols = Seq(joinCol) ++ bPayload
     val viewCols = (Seq(aKey) ++ aPayload) ++ bPayload
@@ -203,15 +163,10 @@ object IvmStream {
       emptyFrom(batch, bCols))
     val viewPrev = SnapshotStore.stateSoFar(spark, s"$rootDir/view", id,
       emptyFrom(batch, viewCols))
-    val fPrev = SnapshotStore.stateSoFar(spark, s"$rootDir/f", id,
-      batch.select(lit(Long.MinValue).as("last_seq")).filter(lit(false)))
     val aCh = batch.filter(col("side") === "A")
       .select((Seq("seq", "op") ++ aCols).map(col(_)): _*)
     val bCh = batch.filter(col("side") === "B")
       .select((Seq("seq", "op") ++ bCols).map(col(_)): _*)
-    // same monotone-seq guard as the group twin, over the whole feed
-    // (the shared one-home implementation — SnapshotStore.seqFrontier)
-    val frontier = SnapshotStore.seqFrontier(fPrev, batch, "IvmStream join")
     val aNext = Cdc.applyChanges(aPrev, aCh, aKey, "seq", "op")
     val bNext = Cdc.applyChanges(bPrev, bCh, joinCol, "seq", "op")
     // persist = false: a long-lived stream would leak one pinned
@@ -219,33 +174,8 @@ object IvmStream {
     // max_by aggregation of the (small) batch per consumer
     val viewNext = Cdc.maintainJoinView(viewPrev, aPrev, aCh, aKey,
       bPrev, bCh, joinCol, "seq", "op", persist = false)
-    // The FRONTIER home commits FIRST: the monotone-seq guard rides
-    // the frontier plan, so materializing f/ is what evaluates it. If
-    // a/b/view committed first, a regressed feed would land mis-folded
-    // state in three homes before the assert ever fired — and since
-    // every replay of that batch fails the same guard, readJoinView
-    // would serve the corrupt b=<id> snapshots indefinitely. With f/
-    // first, a guarded batch throws before ANY state home advances.
-    // Among the remaining three the order is irrelevant: each home is
-    // read strictly-below the batch id, so a crash between any two
-    // commits replays the whole batch from consistent prior versions.
-    SnapshotStore.commit(frontier, s"$rootDir/f", id, retainBelow)
-    SnapshotStore.commit(aNext, s"$rootDir/a", id, retainBelow)
-    SnapshotStore.commit(bNext, s"$rootDir/b", id, retainBelow)
-    SnapshotStore.commit(viewNext, s"$rootDir/view", id, retainBelow)
+    s.snapshot(aNext, s"$rootDir/a")
+    s.snapshot(bNext, s"$rootDir/b")
+    s.snapshot(viewNext, s"$rootDir/view")
   }
-
-  /** Sink an interleaved two-sided CDC feed as a continuously-
-    * maintained join view (see [[joinFoldBatch]] for the contract). */
-  def joinSink(changes: DataFrame, rootDir: String, checkpoint: String,
-      aKey: String, joinCol: String, aPayload: Seq[String],
-      bPayload: Seq[String], retainBelow: Int = 1): StreamingQuery =
-    changes.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        joinFoldBatch(batch, id, rootDir, aKey, joinCol, aPayload,
-          bPayload, retainBelow)
-      }
-      .start()
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.{Caching, Cdc, Dedup, Sampling}
 
@@ -29,31 +28,28 @@ import graft.operators.{Caching, Cdc, Dedup, Sampling}
   * corpus-sized [[DeltaStore]] delta homes (`sig/`, `pairs/`, `cl/`)
   * plus two more delta homes, `meta/` (the curated docs' (id, lang,
   * __score) snapshot) and `manifest/` (the served (id, lang, split)
-  * rows), and the 1-row `f/` frontier ([[SnapshotStore]] — rewriting
-  * one row per batch is that protocol's sweet spot). Each batch
+  * rows), and the [[Fold.guarded]] 1-row `f/` frontier
+  * ([[SnapshotStore]] — rewriting one row per batch is that
+  * protocol's sweet spot). Each batch
   * writes ONLY ITS DELTAS, and SURVIVORSHIP IS INCREMENTAL (r20, the
   * r19 verdict's two O(corpus)-per-batch terms): keepers are
   * recomputed for the batch's affected clusters alone — exactly the
   * cluster delta's rows — and every untouched cluster's manifest rows
   * carry implicitly (no delta row), so the whole flagship fold is
   * O(Δ) compute AND O(Δ) I/O. Every home is a pure function of the
-  * folded feed prefix and every read is strictly-below the batch id,
-  * so a crash between ANY two commits replays to identical content;
-  * the monotone-seq guard rides the frontier plan and the FRONTIER
-  * HOME COMMITS FIRST (the [[IvmStream]] join-twin lesson). A layout
-  * marker under the root makes a cross-build state-schema change fail
-  * with a loud "rebootstrap" message instead of a bare
-  * AnalysisException (ADVICE r19).
+  * folded feed prefix. A layout marker under the root makes a
+  * cross-build state-schema change fail with a loud "rebootstrap"
+  * message instead of a bare AnalysisException (ADVICE r19).
   *
   * The reference engine is read-only over static CSVs
   * (/root/reference/sqlengine.py; SURVEY.md §2.9); extension
   * surface. */
 object ManifestStream {
 
-  // the three ClusterStream homes share its empty-frame schemas and
-  // key sets — ONE definition, so a state-schema change cannot
-  // silently diverge the two sinks' layouts (they stay home-compatible)
-  import ClusterStream.{ClKeys, PairKeys, SigKeys, emptyClusters, emptyPairs, emptySigs}
+  // the three ClusterStream homes share its carried-index read and key
+  // sets — ONE definition, so a state-schema change cannot silently
+  // diverge the two sinks' layouts (they stay home-compatible)
+  import ClusterStream.{ClKeys, PairKeys, SigKeys}
 
   /** Layout tag stamped under every root this sink writes — bumped
     * with [[ClusterStream.LayoutTag]] (r20: snapshot → delta homes,
@@ -90,49 +86,30 @@ object ManifestStream {
     * `score` is the survivorship quality proxy evaluated over the
     * gated winners' columns — `lit(0.0)` reproduces the batch
     * capstone's min-id keeper rule exactly. `compactEvery > 0` folds
-    * a [[DeltaStore.compact]] of each delta home into every Nth
-    * batch. */
+    * a [[DeltaStore.compact]] of each delta home into every Nth batch
+    * ([[Fold]]'s cadence). The maintenance's internal caches and
+    * checkpoints are released with the batch scope. */
   def foldBatch(batch: DataFrame, id: Long, rootDir: String,
       classify: DataFrame => DataFrame, score: Column,
       splits: Seq[(String, Double)], maxHamming: Int = 3,
       chunks: Int = 4, retainBelow: Int = 1,
       compactEvery: Int = 0): Unit = {
-    val spark = batch.sparkSession
-    DeltaStore.ensureLayoutMarker(spark, rootDir, LayoutTag)
-    // batch-scoped persist register — the ClusterStream.foldBatch
-    // rationale: a continuous sink must release the maintenance's
-    // internal caches (and eager checkpoints) every batch or
-    // accumulate corpus-sized copies
-    val tracker = new Caching.PersistTracker
-    // sig/pairs state reads persisted (r21): the maintenance fold reads
-    // each TWICE (sigs: next-state anti-join + affected-hash semi-join;
-    // pairs: carried-pair anti-joins + the pair delta), and an
-    // unpersisted stateSoFar re-runs its latest-wins delta
-    // reconstruction — a union + per-key shuffle over every committed
-    // delta partition — once per consumer, growing with batch count
-    val prev = Dedup.ClusterIndexState(
-      Caching.maybePersist(DeltaStore.stateSoFar(spark, s"$rootDir/sig",
-        id, emptySigs(batch), SigKeys), persist = true, tracker),
-      Caching.maybePersist(DeltaStore.stateSoFar(spark, s"$rootDir/pairs",
-        id, emptyPairs(batch), PairKeys), persist = true, tracker),
-      DeltaStore.stateSoFar(spark, s"$rootDir/cl", id,
-        emptyClusters(batch), ClKeys))
-    val fPrev = SnapshotStore.stateSoFar(spark, s"$rootDir/f", id,
-      batch.select(lit(Long.MinValue).as("last_seq")).filter(lit(false)))
-    val frontier = SnapshotStore.seqFrontier(fPrev, batch, "ManifestStream")
-    try {
+    DeltaStore.ensureLayoutMarker(batch.sparkSession, rootDir, LayoutTag)
+    Fold.guarded(batch, id, rootDir, "ManifestStream", retainBelow,
+        compactEvery) { s =>
+      val spark = s.spark
+      val tracker = s.tracker
       // gate once, consume thrice (cluster fold, meta delta, and the
-      // maintenance-internal key reductions) — eager checkpoint keeps
-      // the batch-bounded curated feed from re-classifying per
-      // consumer. Inside the try: a classify contract violation throws
-      // from this checkpoint, and the finally must still release it,
-      // gateFeed's winner-reduction persist and the state persists
-      // above, all on the same tracker
+      // maintenance-internal key reductions) — the checkpoint keeps the
+      // batch-bounded curated feed from re-classifying per consumer; a
+      // classify contract violation throws from it, and the batch scope
+      // still releases it with gateFeed's winner-reduction persist
       val gated = Caching.localCheckpoint(Cdc.gateFeed(
         batch.select(col("seq"), col("op"), col("id"), col("text"),
           col("lang")), "id", "seq", "op", tracker = tracker)(classify),
         tracker)
-      val upd = Dedup.clustersMaintainUpdate(prev,
+      val upd = Dedup.clustersMaintainUpdate(
+        ClusterStream.indexSoFar(s, rootDir, batch),
         gated.select(col("seq"), col("op"), col("id"), col("text")),
         "id", "text", "seq", "op", maxHamming, chunks, tracker = tracker)
       // the meta home's delta IS the gated winner set: one row per
@@ -144,16 +121,12 @@ object ManifestStream {
         when(col("op") === "D", lit("D")).otherwise(lit("U")).as("__dop"),
         col("id"), col("lang"), score.as("__score"))
       // the cluster delta feeds its own commit AND the incremental
-      // survivorship below — checkpoint once (feed-bounded), free in
-      // the finally via the tracker
-      val clDelta = tracker.addCheckpoint(
-        upd.deltas.clusters.localCheckpoint(true))
-      // frontier FIRST — the guard must throw before any state advances
-      SnapshotStore.commit(frontier, s"$rootDir/f", id, retainBelow)
-      DeltaStore.commitDelta(upd.deltas.sigs, s"$rootDir/sig", id)
-      DeltaStore.commitDelta(upd.deltas.pairs, s"$rootDir/pairs", id)
-      DeltaStore.commitDelta(clDelta, s"$rootDir/cl", id)
-      DeltaStore.commitDelta(metaDelta, s"$rootDir/meta", id)
+      // survivorship below — checkpoint once (feed-bounded)
+      val clDelta = Caching.localCheckpoint(upd.deltas.clusters, tracker)
+      s.delta(upd.deltas.sigs, s"$rootDir/sig", SigKeys)
+      s.delta(upd.deltas.pairs, s"$rootDir/pairs", PairKeys)
+      s.delta(clDelta, s"$rootDir/cl", ClKeys)
+      s.delta(metaDelta, s"$rootDir/meta", MetaKeys)
       // INCREMENTAL survivorship (r20): a keeper can change only in a
       // cluster the batch touched — membership changes land in the
       // cluster delta's 'U' rows (the affected clusters' FULL new
@@ -194,29 +167,7 @@ object ManifestStream {
           .select(lit("D").as(DeltaStore.DopCol), col("id"),
             lit(null).cast("string").as("lang"),
             lit(null).cast("string").as("split")))
-      DeltaStore.commitDelta(manifestDelta, s"$rootDir/manifest", id)
-      if (compactEvery > 0 && id > 0 && id % compactEvery == 0)
-        Seq("sig" -> SigKeys, "pairs" -> PairKeys, "cl" -> ClKeys,
-          "meta" -> MetaKeys, "manifest" -> ManifestKeys)
-          .foreach { case (h, k) =>
-            DeltaStore.compact(spark, s"$rootDir/$h", k)
-          }
-    } finally tracker.release()
+      s.delta(manifestDelta, s"$rootDir/manifest", ManifestKeys)
+    }
   }
-
-  /** Sink a document change feed as a continuously-maintained
-    * training manifest (see [[foldBatch]] for the contract). */
-  def manifestSink(changes: DataFrame, rootDir: String, checkpoint: String,
-      classify: DataFrame => DataFrame, score: Column,
-      splits: Seq[(String, Double)], maxHamming: Int = 3,
-      chunks: Int = 4, retainBelow: Int = 1,
-      compactEvery: Int = 0): StreamingQuery =
-    changes.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        foldBatch(batch, id, rootDir, classify, score, splits,
-          maxHamming, chunks, retainBelow, compactEvery)
-      }
-      .start()
 }

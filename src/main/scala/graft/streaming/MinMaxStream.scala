@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Cdc
 
@@ -28,12 +27,7 @@ import graft.operators.Cdc
   *
   * State lives under THREE [[SnapshotStore]] homes per root —
   * `snap/` (the keyed base), `view/` (one (grp, n, mn, mx) row per
-  * live group), and `f/` (the 1-row feed frontier). Every home is
-  * read strictly-below the batch id, so a crash between ANY two
-  * commits replays to identical content; the monotone-seq guard
-  * rides the frontier plan and the FRONTIER HOME COMMITS FIRST (the
-  * [[IvmStream]] join-twin lesson — state-first would land mis-folded
-  * snapshots a persistently-regressed feed could never repair).
+  * live group), and the [[Fold.guarded]] `f/` frontier.
   *
   * The reference engine is read-only over static CSVs
   * (/root/reference/sqlengine.py; SURVEY.md §2.9); extension
@@ -55,33 +49,16 @@ object MinMaxStream {
     * injection: fold change-batch `id` onto the carried base + view
     * and commit `f/`, `snap/`, `view/` at `b=<id>`. */
   def foldBatch(batch: DataFrame, id: Long, rootDir: String,
-      retainBelow: Int = 1): Unit = {
-    val spark = batch.sparkSession
-    val snapPrev = SnapshotStore.stateSoFar(spark, s"$rootDir/snap", id,
+      retainBelow: Int = 1): Unit =
+    Fold.guarded(batch, id, rootDir, "MinMaxStream", retainBelow) { s =>
+    val snapPrev = SnapshotStore.stateSoFar(s.spark, s"$rootDir/snap", id,
       emptySnap(batch))
-    val fPrev = SnapshotStore.stateSoFar(spark, s"$rootDir/f", id,
-      batch.select(lit(Long.MinValue).as("last_seq")).filter(lit(false)))
-    val frontier = SnapshotStore.seqFrontier(fPrev, batch, "MinMaxStream")
     val viewNext = Cdc.maintainMinMaxView(snapPrev, batch,
       "key", "seq", "op", "grp", "value")
     val snapNext = Cdc.applyChanges(snapPrev,
       batch.select(col("key"), col("grp"), col("value"),
         col("seq"), col("op")), "key", "seq", "op")
-    // frontier FIRST — the guard must throw before any state advances
-    SnapshotStore.commit(frontier, s"$rootDir/f", id, retainBelow)
-    SnapshotStore.commit(snapNext, s"$rootDir/snap", id, retainBelow)
-    SnapshotStore.commit(viewNext, s"$rootDir/view", id, retainBelow)
+    s.snapshot(snapNext, s"$rootDir/snap")
+    s.snapshot(viewNext, s"$rootDir/view")
   }
-
-  /** Sink a keyed change feed as a continuously-maintained
-    * (count, min, max) view (see [[foldBatch]] for the contract). */
-  def minMaxSink(changes: DataFrame, rootDir: String, checkpoint: String,
-      retainBelow: Int = 1): StreamingQuery =
-    changes.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        foldBatch(batch, id, rootDir, retainBelow)
-      }
-      .start()
 }

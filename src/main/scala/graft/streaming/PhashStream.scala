@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Multimodal
 
@@ -26,12 +25,8 @@ import graft.operators.Multimodal
   * assumed.
   *
   * State lives under TWO [[SnapshotStore]] homes per root — `idx/`
-  * (one (id, phash) row per live medium) and `f/` (the 1-row feed
-  * frontier). The monotone-`seq` guard rides the frontier plan and
-  * the FRONTIER HOME COMMITS FIRST — the [[IvmStream]] lesson: with
-  * state first, a regressed feed would land a mis-folded index before
-  * the guard evaluated, and every replay would fail the same guard
-  * while readers kept serving the corrupt snapshot.
+  * (one (id, phash) row per live medium) and the [[Fold.guarded]]
+  * `f/` frontier.
   *
   * At 100 TB: per batch the index is touched only through
   * [[graft.operators.Cdc.applyChanges]]'s key-level join — one
@@ -56,31 +51,12 @@ object PhashStream {
     * commit `f/` then `idx/` at `b=<id>`. The batch must carry
     * `seq`, `op`, `id`, and `binCol`. */
   def foldBatch(batch: DataFrame, id: Long, rootDir: String,
-      binCol: String, retainBelow: Int = 1): Unit = {
-    val spark = batch.sparkSession
-    val prev = SnapshotStore.stateSoFar(spark, s"$rootDir/idx", id,
+      binCol: String, retainBelow: Int = 1): Unit =
+    Fold.guarded(batch, id, rootDir, "PhashStream", retainBelow) { s =>
+    val prev = SnapshotStore.stateSoFar(s.spark, s"$rootDir/idx", id,
       emptyIndex(batch))
-    val fPrev = SnapshotStore.stateSoFar(spark, s"$rootDir/f", id,
-      batch.select(lit(Long.MinValue).as("last_seq")).filter(lit(false)))
-    // the shared monotone-seq guard (SnapshotStore.seqFrontier): a
-    // replayed or regressed feed would re-apply folded changes
-    val frontier = SnapshotStore.seqFrontier(fPrev, batch, "PhashStream")
     val next = Multimodal.phashMaintain(prev, batch, "id", binCol,
       "seq", "op")
-    // frontier FIRST — the guard must throw before any state advances
-    SnapshotStore.commit(frontier, s"$rootDir/f", id, retainBelow)
-    SnapshotStore.commit(next, s"$rootDir/idx", id, retainBelow)
+    s.snapshot(next, s"$rootDir/idx")
   }
-
-  /** Sink a media change feed as a continuously-maintained perceptual-
-    * hash index (see [[foldBatch]] for the contract). */
-  def phashSink(changes: DataFrame, rootDir: String, checkpoint: String,
-      binCol: String, retainBelow: Int = 1): StreamingQuery =
-    changes.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        foldBatch(batch, id, rootDir, binCol, retainBelow)
-      }
-      .start()
 }

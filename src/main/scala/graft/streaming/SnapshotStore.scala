@@ -31,27 +31,11 @@ import org.apache.spark.sql.functions._
   * is one row per key — the key space, never the event volume. */
 private[streaming] object SnapshotStore {
 
-  private def fs(spark: SparkSession, dir: String) =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Committed state versions (`b=<id>` with `_SUCCESS`) under `dir`. */
-  def committed(spark: SparkSession, dir: String): Seq[Long] = {
-    val path = new Path(dir)
-    val f = fs(spark, dir)
-    if (!f.exists(path)) Seq.empty
-    else f.listStatus(path).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .filter(_.startsWith("b="))
-      .flatMap(_.stripPrefix("b=").toLongOption)
-      .filter(v => f.exists(new Path(s"$dir/b=$v/_SUCCESS")))
-  }
-
   /** The standing state as of versions STRICTLY BELOW `belowBatch` —
     * the replay-safe read a folding batch starts from. */
   def stateSoFar(spark: SparkSession, stateDir: String, belowBatch: Long,
       empty: DataFrame): DataFrame =
-    committed(spark, stateDir).filter(_ < belowBatch).maxOption match {
+    Fold.committed(spark, stateDir).filter(_ < belowBatch).lastOption match {
       case None => empty
       case Some(v) => spark.read.parquet(s"$stateDir/b=$v")
     }
@@ -68,7 +52,7 @@ private[streaming] object SnapshotStore {
     * concurrent writer). */
   def readLatest(spark: SparkSession, stateDir: String,
       what: String): DataFrame =
-    committed(spark, stateDir).maxOption match {
+    Fold.committed(spark, stateDir).lastOption match {
       case None => throw new IllegalStateException(
         s"no committed $what state under $stateDir")
       case Some(v) => spark.read.parquet(s"$stateDir/b=$v")
@@ -90,21 +74,15 @@ private[streaming] object SnapshotStore {
       what: String): DataFrame =
     readLatest(spark, stateDir, what).localCheckpoint(true)
 
-  /** The global monotone-seq frontier guard shared by every
-    * feed-keyed maintainer with a dedicated `f/` home
-    * ([[IvmStream.joinFoldBatch]], [[IvfStream]], [[TextIndexStream]])
-    * — the [[foldPrelude]] one-home convention applied to the
-    * whole-feed frontier, so a guard fix cannot silently miss a
-    * sibling: bound the batch's seq range, assert it starts strictly
-    * after the carried frontier (a regressed or replayed-out-of-
-    * protocol feed would re-apply changes the state already folded),
-    * and return the advanced 1-row `(last_seq)` frame. The assert
-    * rides THIS frame's plan, so the caller must COMMIT THE FRONTIER
-    * HOME FIRST — materializing it is what evaluates the guard, and
-    * with state homes first a regressed feed would land mis-folded
-    * snapshots that every failing replay kept serving. */
-  def seqFrontier(fPrev: DataFrame, batch: DataFrame,
-      op: String): DataFrame =
+  /** The global monotone-seq frontier guard of every feed-keyed fold
+    * ([[Fold.guarded]], which commits it first): bound the batch's seq
+    * range, assert it starts strictly after the carried frontier (a
+    * regressed or replayed-out-of-protocol feed would re-apply changes
+    * the state already folded), and return the advanced 1-row
+    * `(last_seq)` frame. The assert rides THIS frame's plan; `op` and
+    * `why` word its message. */
+  def seqFrontier(fPrev: DataFrame, batch: DataFrame, op: String,
+      why: String = ""): DataFrame =
     fPrev.agg(coalesce(max(col("last_seq")), lit(Long.MinValue)).as("__pf"))
       .crossJoin(batch.agg(min(col("seq")).as("__bmin"),
         max(col("seq")).as("__bmax")))
@@ -112,7 +90,7 @@ private[streaming] object SnapshotStore {
         col("__bmin").isNull || col("__bmin") > col("__pf"),
         concat(lit(s"$op: batch seq "), col("__bmin"),
           lit(" not after carried last_seq "), col("__pf"),
-          lit(" — the feed regressed")))
+          lit(s" — the feed regressed$why")))
         .isNull)
       .select(greatest(col("__pf"), coalesce(col("__bmax"), col("__pf")))
         .as("last_seq"))
@@ -170,8 +148,8 @@ private[streaming] object SnapshotStore {
         s"got $retainBelow")
     state.write.mode("overwrite").parquet(s"$stateDir/b=$id")
     val spark = state.sparkSession
-    val f = fs(spark, stateDir)
-    committed(spark, stateDir).filter(_ < id - retainBelow)
+    val f = Fold.fs(spark, stateDir)
+    Fold.committed(spark, stateDir).filter(_ < id - retainBelow)
       .foreach(v => f.delete(new Path(s"$stateDir/b=$v"), true))
   }
 }

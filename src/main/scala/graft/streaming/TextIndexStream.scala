@@ -2,10 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.Cdc
-import graft.operators.TextAnalysis
+import graft.operators.{Caching, Cdc, TextAnalysis}
 
 /** Streaming text-index maintenance — the lexical twin of
   * [[IvfStream]]: a document change feed keeps the BM25 index
@@ -17,15 +15,13 @@ import graft.operators.TextAnalysis
   * State lives under THREE [[SnapshotStore]] homes per root — `post/`
   * (one row per live (doc, token) with its tf), `len/` (one row per
   * live doc with its token count — separate so zero-token documents
-  * still count into N and Σdl), and `f/` (the 1-row feed frontier).
+  * still count into N and Σdl), and the [[Fold.guarded]] `f/`
+  * frontier.
   * Each batch advances both state frames through
   * [[Cdc.applyChangesGrouped]] — changed docs' old rows dropped by ONE
   * key anti-join, fresh rows re-derived map-side from the winning
   * change — so the index is touched only through the key join, never
-  * rescanned; cost per batch is the batch. The FRONTIER HOME COMMITS
-  * FIRST (the [[IvmStream.joinFoldBatch]] lesson): a regressed feed
-  * throws before any state home advances, instead of landing
-  * mis-folded postings that every failing replay keeps serving.
+  * rescanned; cost per batch is the batch.
   *
   * The maintained frames are BIT-EQUAL to a scratch
   * [[TextAnalysis.tokenIndex]]/[[TextAnalysis.docLengths]] rebuild
@@ -60,8 +56,8 @@ object TextIndexStream {
     * [[graft.operators.Caching.freeLocalCheckpoint]]). */
   def readIndex(spark: SparkSession, rootDir: String)
       : (DataFrame, DataFrame) = {
-    val common = SnapshotStore.committed(spark, s"$rootDir/post").toSet
-      .intersect(SnapshotStore.committed(spark, s"$rootDir/len").toSet)
+    val common = Fold.committed(spark, s"$rootDir/post").toSet
+      .intersect(Fold.committed(spark, s"$rootDir/len").toSet)
     if (common.isEmpty) throw new IllegalStateException(
       s"no batch committed in BOTH text-index homes under $rootDir")
     val k = common.max
@@ -83,43 +79,24 @@ object TextIndexStream {
     * injection: fold change-batch `id` onto the carried index and
     * commit `f/` then `post/` then `len/` at `b=<id>`. */
   def foldBatch(batch: DataFrame, id: Long, rootDir: String,
-      retainBelow: Int = 1): Unit = {
-    val spark = batch.sparkSession
-    val postPrev = SnapshotStore.stateSoFar(spark, s"$rootDir/post", id,
+      retainBelow: Int = 1): Unit =
+    Fold.guarded(batch, id, rootDir, "TextIndexStream", retainBelow) { s =>
+    val postPrev = SnapshotStore.stateSoFar(s.spark, s"$rootDir/post", id,
       emptyPostings(batch))
-    val lenPrev = SnapshotStore.stateSoFar(spark, s"$rootDir/len", id,
+    val lenPrev = SnapshotStore.stateSoFar(s.spark, s"$rootDir/len", id,
       emptyLengths(batch))
-    val fPrev = SnapshotStore.stateSoFar(spark, s"$rootDir/f", id,
-      batch.select(lit(Long.MinValue).as("last_seq")).filter(lit(false)))
-    val frontier = SnapshotStore.seqFrontier(fPrev, batch, "TextIndexStream")
     val ch = batch.select(col("seq"), col("op"),
       col("id").as("doc_id"), col("text"))
     // the batch reduction runs ONCE and is persisted across the two
     // frame expansions — each home's commit is its own action, so an
     // unshared plan would re-reduce the batch per home
-    val latest = Cdc.latestChanges(ch, "doc_id", "seq", "op")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val postNext = Cdc.applyGroupedFromLatest(postPrev, latest, "doc_id")(
-        c => TextAnalysis.tokenIndex(c, "doc_id", "text"))
-      val lenNext = Cdc.applyGroupedFromLatest(lenPrev, latest, "doc_id")(
-        c => TextAnalysis.docLengths(c, "doc_id", "text"))
-      // frontier FIRST — the guard must throw before any state advances
-      SnapshotStore.commit(frontier, s"$rootDir/f", id, retainBelow)
-      SnapshotStore.commit(postNext, s"$rootDir/post", id, retainBelow)
-      SnapshotStore.commit(lenNext, s"$rootDir/len", id, retainBelow)
-    } finally latest.unpersist()
+    val latest = Caching.maybePersist(
+      Cdc.latestChanges(ch, "doc_id", "seq", "op"), persist = true, s.tracker)
+    val postNext = Cdc.applyGroupedFromLatest(postPrev, latest, "doc_id")(
+      c => TextAnalysis.tokenIndex(c, "doc_id", "text"))
+    val lenNext = Cdc.applyGroupedFromLatest(lenPrev, latest, "doc_id")(
+      c => TextAnalysis.docLengths(c, "doc_id", "text"))
+    s.snapshot(postNext, s"$rootDir/post")
+    s.snapshot(lenNext, s"$rootDir/len")
   }
-
-  /** Sink a document change feed as a continuously-maintained BM25
-    * index (see [[foldBatch]] for the contract). */
-  def textIndexSink(changes: DataFrame, rootDir: String,
-      checkpoint: String, retainBelow: Int = 1): StreamingQuery =
-    changes.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        foldBatch(batch, id, rootDir, retainBelow)
-      }
-      .start()
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-import graft.streaming.CdcStream
+import graft.streaming.{CdcStream, Fold}
 
 /** Streaming CDC snapshot maintenance: batch-by-batch merge semantics,
   * replay idempotence (the exactly-once contract), retention, and the
@@ -79,7 +79,7 @@ class CdcStreamSpec extends SparkSpec {
     assert(snapRows(dir) == Set((1L, "a"), (2L, "b"), (3L, "a"), (5L, "e")))
   }
 
-  test("cdcSnapshotSink end-to-end over a file-source stream") {
+  test("cdc snapshot stream end-to-end over a file-source stream") {
     val src = java.nio.file.Files.createTempDirectory("cdc_src").toString
     val ckpt = java.nio.file.Files.createTempDirectory("cdc_ckpt").toString
     val dir = java.nio.file.Files.createTempDirectory("cdc_sink").toString
@@ -95,8 +95,9 @@ class CdcStreamSpec extends SparkSpec {
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)
       .option("recursiveFileLookup", "true").parquet(src)
-    val q = CdcStream.cdcSnapshotSink(stream, dir, ckpt, initial,
-      "id", "seq", "op")
+    val q = Fold.start(stream, ckpt) { (batch, id) =>
+      CdcStream.mergeBatch(batch, id, dir, initial, "id", "seq", "op")
+    }
     try q.processAllAvailable() finally q.stop()
     // both files applied, in either batch order
     assert(snapRows(dir) == Set((1L, "a"), (2L, "b"), (4L, "d"), (5L, "e")))

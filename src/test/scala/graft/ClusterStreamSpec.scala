@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
-import graft.streaming.ClusterStream
+import graft.streaming.{ClusterStream, Fold}
 
 /** Pins for the streaming cluster-map maintainer: the maintained map
   * (and the full signature/pair state) equals a scratch
@@ -192,6 +192,30 @@ class ClusterStreamSpec extends SparkSpec {
     assert(clRows(ClusterStream.readClusters(spark, root)) == before)
   }
 
+  test("a failing batch leaves no persisted RDD behind") {
+    val root = java.nio.file.Files.createTempDirectory("cl_fail").toString
+    val sc = spark.sparkContext
+    ClusterStream.foldBatch(fDf(fb0), 0L, root, maxHamming = 0)
+    val before = sc.getPersistentRDDs.keySet
+    def failsWith(batch: DataFrame, msg: String): Unit = {
+      val e = intercept[Throwable] {
+        ClusterStream.foldBatch(batch, 1L, root, maxHamming = 0)
+      }
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => Option(t.getMessage).getOrElse("")).toSeq
+      assert(msgs.exists(_.contains(msg)), s"failure: $msgs")
+      val left = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
+      assert(left.isEmpty, s"persisted RDDs left behind: ${left.values.mkString(", ")}")
+    }
+    // the text raises in the batch's first job
+    failsWith(fDf(fb1).withColumn("text",
+      when(col("id") === 20L, raise_error(lit("text unreadable")))
+        .otherwise(col("text"))), "text unreadable")
+    // seq 2 ≤ frontier 4: the guard throws at the f/ commit, after the
+    // maintenance's persists and checkpoints have materialized
+    failsWith(fDf(Seq((2L, "I", 50L, "delta epsilon"))), "feed regressed")
+  }
+
   test("real stream with an injected crash replays exactly-once across all four homes") {
     val src = java.nio.file.Files.createTempDirectory("cl_src").toString
     val root = java.nio.file.Files.createTempDirectory("cl_cst").toString
@@ -203,16 +227,12 @@ class ClusterStreamSpec extends SparkSpec {
     val schema = fDf(fb0).schema
     val failOnce = new java.util.concurrent.atomic.AtomicBoolean(true)
     def startQuery(inject: Boolean) =
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          ClusterStream.foldBatch(batch, id, root, maxHamming = 0)
-          if (inject && id == 1L && failOnce.getAndSet(false))
-            throw new RuntimeException("injected crash before commit")
-        }
-        .start()
+      Fold.start(spark.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1").parquet(src), ckpt) { (batch, id) =>
+        ClusterStream.foldBatch(batch, id, root, maxHamming = 0)
+        if (inject && id == 1L && failOnce.getAndSet(false))
+          throw new RuntimeException("injected crash before commit")
+      }
     (0 to 1).foreach(addFile)
     val q1 = startQuery(inject = true)
     try intercept[Exception] { q1.processAllAvailable() } finally q1.stop()

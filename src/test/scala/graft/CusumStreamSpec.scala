@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Profiling
-import graft.streaming.{CusumStream, EwmaStream}
+import graft.streaming.{CusumStream, EwmaStream, Fold}
 
 /** Pins for the streaming CUSUM state snapshot: stream state ≡ the
   * batch cusumFixed prefix (p_micro surfaced by the batch query for
@@ -36,9 +35,11 @@ class CusumStreamSpec extends SparkSpec with StreamFeedHarness {
     val stateDir = java.nio.file.Files.createTempDirectory("cusum_st").toString
     val ckpt = java.nio.file.Files.createTempDirectory("cusum_ck").toString
     (0 to 3).foreach(addFile); addSentinel()
-    val q = CusumStream.cusumSink(
-      EwmaStream.bucketCounts(streamFrom(src), "event_type"),
-      stateDir, ckpt, muMicro = Mu, kappaMicro = Kappa)
+    val q = Fold.start(
+        EwmaStream.bucketCounts(streamFrom(src), "event_type"), ckpt) {
+      (batch, id) => CusumStream.foldBatch(batch, id, stateDir,
+        muMicro = Mu, kappaMicro = Kappa)
+    }
     try q.processAllAvailable() finally q.stop()
     val want = batchFinal
     val gotAlarms = CusumStream.readAlarms(spark, stateDir, H)
@@ -69,15 +70,12 @@ class CusumStreamSpec extends SparkSpec with StreamFeedHarness {
     val ckpt = java.nio.file.Files.createTempDirectory("cusum_cck").toString
     val failOnce = new java.util.concurrent.atomic.AtomicBoolean(true)
     def startQuery(inject: Boolean) =
-      EwmaStream.bucketCounts(streamFrom(src), "event_type")
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          CusumStream.foldBatch(batch, id, stateDir, Mu, Kappa)
-          if (inject && id == 2L && failOnce.getAndSet(false))
-            throw new RuntimeException("injected crash before commit")
-        }
-        .start()
+      Fold.start(EwmaStream.bucketCounts(streamFrom(src), "event_type"),
+          ckpt) { (batch, id) =>
+        CusumStream.foldBatch(batch, id, stateDir, Mu, Kappa)
+        if (inject && id == 2L && failOnce.getAndSet(false))
+          throw new RuntimeException("injected crash before commit")
+      }
     addFile(0); addFile(1); addFile(2)
     val q1 = startQuery(inject = true)
     try intercept[Exception] { q1.processAllAvailable() } finally q1.stop()

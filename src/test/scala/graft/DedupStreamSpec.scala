@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.streaming.DedupStream
+import graft.streaming.{DedupStream, Fold}
 
 /** Drives the streaming dedup ingest end-to-end over a file source:
   * batch-by-batch screening against the growing signature index,
@@ -35,10 +35,11 @@ class DedupStreamSpec extends SparkSpec {
     addFile((3L, baseA), (4L, baseC), (5L, baseC))
 
     val schema = spark.read.parquet(src).schema
-    def startQuery() = DedupStream.dedupIngestSink(
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src),
-      index, kept, ckpt, "doc_id", "text", threshold = 0.7)
+    def startQuery() = Fold.start(spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(src), ckpt) { (batch, id) =>
+      DedupStream.screenBatch(batch, id, index, kept, "doc_id", "text",
+        threshold = 0.7)
+    }
 
     val q1 = startQuery()
     try q1.processAllAvailable() finally q1.stop()
@@ -172,7 +173,7 @@ class DedupStreamSpec extends SparkSpec {
     }
   }
 
-  test("dedupIngestSink auto-compacts: delta count stays bounded on a long stream") {
+  test("screenBatch compactEvery: delta count stays bounded on a long stream") {
     val src = java.nio.file.Files.createTempDirectory("ddc_src").toString
     val ckpt = java.nio.file.Files.createTempDirectory("ddc_ck").toString
     val index = java.nio.file.Files.createTempDirectory("ddc_ix").toString + "/ix"
@@ -184,10 +185,11 @@ class DedupStreamSpec extends SparkSpec {
         .toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(src)
     }
     val schema = spark.read.parquet(src).schema
-    val q = DedupStream.dedupIngestSink(
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src),
-      index, kept, ckpt, "doc_id", "text", threshold = 0.7, compactEvery = 1)
+    val q = Fold.start(spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(src), ckpt) { (batch, id) =>
+      DedupStream.screenBatch(batch, id, index, kept, "doc_id", "text",
+        threshold = 0.7, compactEvery = 1)
+    }
     try q.processAllAvailable() finally q.stop()
     val dirs = new java.io.File(index).listFiles().map(_.getName)
       .filter(_.startsWith("b=")).sorted.toSeq

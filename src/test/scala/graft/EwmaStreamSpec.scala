@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Profiling
-import graft.streaming.EwmaStream
+import graft.streaming.{EwmaStream, Fold}
 
 /** Pins for the streaming EWMA state snapshot: stream ≡ batch
   * BIT-EQUALITY of the cumulative fold (the one streaming shape whose
@@ -30,9 +29,10 @@ class EwmaStreamSpec extends SparkSpec with StreamFeedHarness {
     val stateDir = java.nio.file.Files.createTempDirectory("ewma_st").toString
     val ckpt = java.nio.file.Files.createTempDirectory("ewma_ck").toString
     (0 to 3).foreach(addFile); addSentinel()
-    val q = EwmaStream.ewmaSink(
-      EwmaStream.bucketCounts(streamFrom(src), "event_type"),
-      stateDir, ckpt)
+    val q = Fold.start(
+        EwmaStream.bucketCounts(streamFrom(src), "event_type"), ckpt) {
+      (batch, id) => EwmaStream.foldBatch(batch, id, stateDir)
+    }
     try q.processAllAvailable() finally q.stop()
     val got = gotState(stateDir)
     assert(got == batchWant,
@@ -52,17 +52,14 @@ class EwmaStreamSpec extends SparkSpec with StreamFeedHarness {
     val ckpt = java.nio.file.Files.createTempDirectory("ewma_cck").toString
     val failOnce = new java.util.concurrent.atomic.AtomicBoolean(true)
     def startQuery(inject: Boolean) =
-      EwmaStream.bucketCounts(streamFrom(src), "event_type")
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          EwmaStream.foldBatch(batch, id, stateDir)
-          // the exactly-once crash window: snapshot b=<id> is on disk,
-          // the checkpoint commit is not — the restart must REPLAY id
-          if (inject && id == 2L && failOnce.getAndSet(false))
-            throw new RuntimeException("injected crash before commit")
-        }
-        .start()
+      Fold.start(EwmaStream.bucketCounts(streamFrom(src), "event_type"),
+          ckpt) { (batch, id) =>
+        EwmaStream.foldBatch(batch, id, stateDir)
+        // the exactly-once crash window: snapshot b=<id> is on disk,
+        // the checkpoint commit is not — the restart must REPLAY id
+        if (inject && id == 2L && failOnce.getAndSet(false))
+          throw new RuntimeException("injected crash before commit")
+      }
     addFile(0); addFile(1); addFile(2)
     val q1 = startQuery(inject = true)
     try intercept[Exception] { q1.processAllAvailable() } finally q1.stop()

@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Profiling
-import graft.streaming.{EwmaStream, HoltWintersStream}
+import graft.streaming.{EwmaStream, Fold, HoltWintersStream}
 
 /** Pins for the streaming Holt–Winters state snapshot: stream ≡ batch
   * BIT-EQUALITY of the seasonal fold (the lambda text is shared with
@@ -38,9 +37,11 @@ class HoltWintersStreamSpec extends SparkSpec with StreamFeedHarness {
     val stateDir = java.nio.file.Files.createTempDirectory("hw_st").toString
     val ckpt = java.nio.file.Files.createTempDirectory("hw_ck").toString
     (0 to 3).foreach(addFile); addSentinel()
-    val q = HoltWintersStream.holtWintersSink(
-      EwmaStream.bucketCounts(streamFrom(src), "event_type"),
-      stateDir, ckpt, period = Period)
+    val q = Fold.start(
+        EwmaStream.bucketCounts(streamFrom(src), "event_type"), ckpt) {
+      (batch, id) =>
+        HoltWintersStream.foldBatch(batch, id, stateDir, period = Period)
+    }
     try q.processAllAvailable() finally q.stop()
     val got = gotState(stateDir)
     assert(got == batchWant,
@@ -53,15 +54,12 @@ class HoltWintersStreamSpec extends SparkSpec with StreamFeedHarness {
     val ckpt = java.nio.file.Files.createTempDirectory("hw_cck").toString
     val failOnce = new java.util.concurrent.atomic.AtomicBoolean(true)
     def startQuery(inject: Boolean) =
-      EwmaStream.bucketCounts(streamFrom(src), "event_type")
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          HoltWintersStream.foldBatch(batch, id, stateDir, period = Period)
-          if (inject && id == 2L && failOnce.getAndSet(false))
-            throw new RuntimeException("injected crash before commit")
-        }
-        .start()
+      Fold.start(EwmaStream.bucketCounts(streamFrom(src), "event_type"),
+          ckpt) { (batch, id) =>
+        HoltWintersStream.foldBatch(batch, id, stateDir, period = Period)
+        if (inject && id == 2L && failOnce.getAndSet(false))
+          throw new RuntimeException("injected crash before commit")
+      }
     addFile(0); addFile(1); addFile(2)
     val q1 = startQuery(inject = true)
     try intercept[Exception] { q1.processAllAvailable() } finally q1.stop()

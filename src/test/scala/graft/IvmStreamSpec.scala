@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Cdc
-import graft.streaming.IvmStream
+import graft.streaming.{Fold, IvmStream}
 
 /** Pins for the streaming IVM twins: stream state ≡ the batch
   * [[Cdc.maintainGroupAgg]] / [[Cdc.maintainJoinView]] outputs, clean
@@ -74,8 +74,7 @@ class IvmStreamSpec extends SparkSpec {
     assert(got == batchWant, s"stream view $got != batch $batchWant")
     // hand check: g1 = {1:10.00, 6:3.25}, g2 = {4:5.50}, g3 = {2:23.00}
     assert(got == Seq(("g1", 2L, 13.25), ("g2", 1L, 5.50), ("g3", 1L, 23.00)))
-    val frontier = IvmStream.readState(spark, stateDir)
-      .select(max("last_seq")).as[Long].head()
+    val frontier = spark.read.parquet(s"$stateDir/f/b=3").as[Long].head()
     assert(frontier == 31L, s"frontier $frontier != last folded seq")
   }
 
@@ -91,16 +90,12 @@ class IvmStreamSpec extends SparkSpec {
     val schema = chDf(batch0).schema
     val failOnce = new java.util.concurrent.atomic.AtomicBoolean(true)
     def startQuery(inject: Boolean) =
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          IvmStream.foldBatch(batch, id, stateDir)
-          if (inject && id == 2L && failOnce.getAndSet(false))
-            throw new RuntimeException("injected crash before commit")
-        }
-        .start()
+      Fold.start(spark.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1").parquet(src), ckpt) { (batch, id) =>
+        IvmStream.foldBatch(batch, id, stateDir)
+        if (inject && id == 2L && failOnce.getAndSet(false))
+          throw new RuntimeException("injected crash before commit")
+      }
     (0 to 2).foreach(addFile)
     val q1 = startQuery(inject = true)
     try intercept[Exception] { q1.processAllAvailable() } finally q1.stop()
@@ -139,6 +134,27 @@ class IvmStreamSpec extends SparkSpec {
     val st = IvmStream.readView(spark, stateDir)
       .orderBy("grp").as[(String, Long, Double)].collect().toSeq
     assert(st == Seq(("g1", 2L, 30.00), ("g2", 2L, 35.50), ("g3", 2L, 10.00)))
+  }
+
+  test("group twin: the frontier survives a batch that empties the view") {
+    val stateDir = java.nio.file.Files.createTempDirectory("ivm_empty").toString
+    IvmStream.foldBatch(chDf(batch0), 0L, stateDir)
+    // delete every key: every group folds to zero, the state has no rows
+    val deleteAll = batch0.map { case (k, q, _, g, v, _, _) =>
+      (k, q + 10L, "D", null, null, g, v): ChRow
+    }
+    IvmStream.foldBatch(chDf(deleteAll), 1L, stateDir)
+    assert(IvmStream.readView(spark, stateDir).isEmpty)
+    // seq 7 is after batch 0 but not after batch 1's 16
+    val e = intercept[Throwable] {
+      IvmStream.foldBatch(chDf(Seq(
+        (9L, 7L, "I", "g1", 1.00, null, null))), 2L, stateDir)
+    }
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => Option(t.getMessage).getOrElse("")).toSeq
+    assert(msgs.exists(_.contains("feed regressed")), s"frontier guard: $msgs")
+    assert(!new java.io.File(s"$stateDir/b=2/_SUCCESS").exists(),
+      "the regressed batch must not commit state")
   }
 
   // -------------------------------------------------------------------
@@ -222,17 +238,13 @@ class IvmStreamSpec extends SparkSpec {
     val schema = jDf(jb0).schema
     val failOnce = new java.util.concurrent.atomic.AtomicBoolean(true)
     def startQuery(inject: Boolean) =
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          IvmStream.joinFoldBatch(batch, id, root, "k", "g",
-            aPayload = Seq("g", "pay"), bPayload = Seq("bname"))
-          if (inject && id == 1L && failOnce.getAndSet(false))
-            throw new RuntimeException("injected crash before commit")
-        }
-        .start()
+      Fold.start(spark.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1").parquet(src), ckpt) { (batch, id) =>
+        IvmStream.joinFoldBatch(batch, id, root, "k", "g",
+          aPayload = Seq("g", "pay"), bPayload = Seq("bname"))
+        if (inject && id == 1L && failOnce.getAndSet(false))
+          throw new RuntimeException("injected crash before commit")
+      }
     (0 to 1).foreach(addFile)
     val q1 = startQuery(inject = true)
     try intercept[Exception] { q1.processAllAvailable() } finally q1.stop()

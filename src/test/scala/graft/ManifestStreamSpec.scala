@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Cdc, Dedup, Sampling, TextAnalysis}
-import graft.streaming.ManifestStream
+import graft.streaming.{Fold, ManifestStream}
 
 /** Pins for the streaming training-manifest maintainer — the composed
   * capstone sink: (1) the served manifest equals the scratch
@@ -228,17 +228,13 @@ class ManifestStreamSpec extends SparkSpec {
     val schema = fDf(fb0).schema
     val failOnce = new java.util.concurrent.atomic.AtomicBoolean(true)
     def startQuery(inject: Boolean) =
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          ManifestStream.foldBatch(batch, id, root, classify,
-            length(col("text")).cast("long"), splits, maxHamming = 0)
-          if (inject && id == 1L && failOnce.getAndSet(false))
-            throw new RuntimeException("injected crash before commit")
-        }
-        .start()
+      Fold.start(spark.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1").parquet(src), ckpt) { (batch, id) =>
+        ManifestStream.foldBatch(batch, id, root, classify,
+          length(col("text")).cast("long"), splits, maxHamming = 0)
+        if (inject && id == 1L && failOnce.getAndSet(false))
+          throw new RuntimeException("injected crash before commit")
+      }
     (0 to 1).foreach(addFile)
     val q1 = startQuery(inject = true)
     try intercept[Exception] { q1.processAllAvailable() } finally q1.stop()

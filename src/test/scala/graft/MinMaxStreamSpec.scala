@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Cdc
-import graft.streaming.MinMaxStream
+import graft.streaming.{Fold, MinMaxStream}
 
 /** Pins for the streaming min/max view maintainer: the maintained
   * view equals a full recompute over the merged base after every
@@ -100,16 +100,12 @@ class MinMaxStreamSpec extends SparkSpec {
     val schema = fDf(fb0).schema
     val failOnce = new java.util.concurrent.atomic.AtomicBoolean(true)
     def startQuery(inject: Boolean) =
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          MinMaxStream.foldBatch(batch, id, root)
-          if (inject && id == 1L && failOnce.getAndSet(false))
-            throw new RuntimeException("injected crash before commit")
-        }
-        .start()
+      Fold.start(spark.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1").parquet(src), ckpt) { (batch, id) =>
+        MinMaxStream.foldBatch(batch, id, root)
+        if (inject && id == 1L && failOnce.getAndSet(false))
+          throw new RuntimeException("injected crash before commit")
+      }
     (0 to 1).foreach(addFile)
     val q1 = startQuery(inject = true)
     try intercept[Exception] { q1.processAllAvailable() } finally q1.stop()

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
-import graft.streaming.{CdcStream, DedupStream, EventStreams}
+import graft.streaming.{CdcStream, DedupStream, EventStreams, Fold}
 
 /** Crash-recovery for the streaming twins: each test commits at least
   * one batch, kills the query, restarts from the SAME checkpoint with
@@ -246,16 +246,13 @@ class StreamRecoverySpec extends SparkSpec {
     val schema = spark.read.parquet(src).schema
     val failOnce = new java.util.concurrent.atomic.AtomicBoolean(true)
     def startQuery(inject: Boolean) =
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-        .writeStream.option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          CdcStream.mergeBatch(batch, id, dir, initial, "id", "seq", "op")
-          if (inject && id == 1L && failOnce.getAndSet(false))
-            throw new RuntimeException(
-              "injected crash between batch 1's merge and its commit")
-        }
-        .start()
+      Fold.start(spark.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1").parquet(src), ckpt) { (batch, id) =>
+        CdcStream.mergeBatch(batch, id, dir, initial, "id", "seq", "op")
+        if (inject && id == 1L && failOnce.getAndSet(false))
+          throw new RuntimeException(
+            "injected crash between batch 1's merge and its commit")
+      }
     val q1 = startQuery(inject = true)
     intercept[Throwable] { try q1.processAllAvailable() finally q1.stop() }
     assert(!failOnce.get(), "the injection must actually have fired")
@@ -301,17 +298,14 @@ class StreamRecoverySpec extends SparkSpec {
     // disk: the overwrite-by-batch-id protocol's real crash window
     val failOnce = new java.util.concurrent.atomic.AtomicBoolean(true)
     def startQuery(inject: Boolean) =
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-        .writeStream.option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          DedupStream.screenBatch(batch, id, index, kept,
-            "doc_id", "text", threshold = 0.7)
-          if (inject && id == 1L && failOnce.getAndSet(false))
-            throw new RuntimeException(
-              "injected crash between batch 1's writes and its commit")
-        }
-        .start()
+      Fold.start(spark.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1").parquet(src), ckpt) { (batch, id) =>
+        DedupStream.screenBatch(batch, id, index, kept,
+          "doc_id", "text", threshold = 0.7)
+        if (inject && id == 1L && failOnce.getAndSet(false))
+          throw new RuntimeException(
+            "injected crash between batch 1's writes and its commit")
+      }
 
     val q1 = startQuery(inject = true)
     val failed = intercept[Throwable] {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.TextAnalysis
-import graft.streaming.TextIndexStream
+import graft.streaming.{Fold, TextIndexStream}
 
 /** Pins for the streaming BM25-index maintainer: maintained postings
   * and lengths are BIT-EQUAL to scratch tokenIndex/docLengths rebuilds
@@ -120,16 +120,12 @@ class TextIndexStreamSpec extends SparkSpec {
     val schema = fDf(fb0).schema
     val failOnce = new java.util.concurrent.atomic.AtomicBoolean(true)
     def startQuery(inject: Boolean) =
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          TextIndexStream.foldBatch(batch, id, root)
-          if (inject && id == 1L && failOnce.getAndSet(false))
-            throw new RuntimeException("injected crash before commit")
-        }
-        .start()
+      Fold.start(spark.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1").parquet(src), ckpt) { (batch, id) =>
+        TextIndexStream.foldBatch(batch, id, root)
+        if (inject && id == 1L && failOnce.getAndSet(false))
+          throw new RuntimeException("injected crash before commit")
+      }
     (0 to 1).foreach(addFile)
     val q1 = startQuery(inject = true)
     try intercept[Exception] { q1.processAllAvailable() } finally q1.stop()

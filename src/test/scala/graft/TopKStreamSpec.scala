@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Cdc
-import graft.streaming.TopKStream
+import graft.streaming.{Fold, TopKStream}
 
 /** Pins for the streaming top-k leaderboard maintainer: the
   * maintained view equals a full recompute over the merged base after
@@ -108,16 +108,12 @@ class TopKStreamSpec extends SparkSpec {
     val schema = fDf(fb0).schema
     val failOnce = new java.util.concurrent.atomic.AtomicBoolean(true)
     def startQuery(inject: Boolean) =
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          TopKStream.foldBatch(batch, id, root, K)
-          if (inject && id == 1L && failOnce.getAndSet(false))
-            throw new RuntimeException("injected crash before commit")
-        }
-        .start()
+      Fold.start(spark.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1").parquet(src), ckpt) { (batch, id) =>
+        TopKStream.foldBatch(batch, id, root, K)
+        if (inject && id == 1L && failOnce.getAndSet(false))
+          throw new RuntimeException("injected crash before commit")
+      }
     (0 to 1).foreach(addFile)
     val q1 = startQuery(inject = true)
     try intercept[Exception] { q1.processAllAvailable() } finally q1.stop()

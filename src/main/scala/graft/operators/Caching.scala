@@ -25,7 +25,7 @@ private[graft] object Caching {
     * accumulates one corpus-sized cached copy per batch (the
     * BENCH_r09 eviction-storm shape, rediscovered by review in the
     * round-19 manifest sink). Not thread-safe; one tracker per fold. */
-  final class PersistTracker {
+  final class PersistTracker extends CheckpointOwner {
     private val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     private val ckpts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     private[Caching] def add(df: DataFrame): Unit = frames += df
@@ -46,6 +46,10 @@ private[graft] object Caching {
     }
   }
 
+  /** Whoever frees a checkpoint made by [[localCheckpoint]]: a
+    * [[PersistTracker]], or a [[Rounds]] loop. */
+  trait CheckpointOwner { def addCheckpoint(df: DataFrame): DataFrame }
+
   /** [[maybePersist]] that also registers the persisted frame with
     * `tracker` for a deterministic post-commit release. */
   def maybePersist(df: DataFrame, persist: Boolean,
@@ -53,14 +57,14 @@ private[graft] object Caching {
     if (persist) { tracker.add(df); df.persist(StorageLevel.MEMORY_AND_DISK) }
     else df
 
-  /** `df.localCheckpoint(true)`, registered with `tracker` BEFORE the
+  /** `df.localCheckpoint(true)`, registered with `owner` BEFORE the
     * job that materializes it. If that job throws (a contract check
-    * inside `df` firing), [[PersistTracker.release]] still frees what
-    * it cached; an eager checkpoint would throw before returning the
-    * frame, leaving its RDD to the ContextCleaner. Same single job as
-    * the eager form. */
-  def localCheckpoint(df: DataFrame, tracker: PersistTracker): DataFrame = {
-    val ckpt = tracker.addCheckpoint(df.localCheckpoint(eager = false))
+    * inside `df` firing), the owner still frees what it cached; an
+    * eager checkpoint would throw before returning the frame, leaving
+    * its RDD to the ContextCleaner. Same single job as the eager
+    * form. */
+  def localCheckpoint(df: DataFrame, owner: CheckpointOwner): DataFrame = {
+    val ckpt = owner.addCheckpoint(df.localCheckpoint(eager = false))
     ckpt.queryExecution.logical match {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.count()
     }
@@ -72,14 +76,9 @@ private[graft] object Caching {
     * `Dataset.unpersist()` only releases catalog-cached plans; a local
     * checkpoint's blocks are RDD-level storage that otherwise lives
     * until the JVM garbage-collects the RDD object and the async
-    * ContextCleaner gets around to it. In an iterative loop (connected
-    * components, PageRank) that nondeterministic lag stacks one
-    * checkpoint per round into real storage pressure — measured as
-    * 1.5-2× iteration-time spread on the composed manifest bench and
-    * eviction storms on whatever persists next. Call this on a round's
-    * checkpoint once the NEXT round's checkpoint is materialized (the
-    * frame is unusable afterwards: its lineage was truncated to the
-    * very blocks being freed — never free the loop's final result). */
+    * ContextCleaner gets around to it ([[Rounds]] states what that lag
+    * costs an iterative loop). The frame is unusable afterwards: its
+    * lineage was truncated to the very blocks being freed. */
   def freeLocalCheckpoint(df: DataFrame): Unit =
     freeLocalCheckpoint(df, blocking = false)
 

@@ -821,95 +821,77 @@ object Dedup {
     * corrupt a dedup downstream); 20 doubling rounds cover any
     * realistic diameter (~10⁶).
     *
-    * Each round's labels are localCheckpoint'ed: iterative self-joins
-    * otherwise double the lineage every round, and the convergence
-    * count would re-execute the whole prefix. The final round's
-    * checkpoint, which the returned frame reads, is registered with
-    * `tracker`, so a per-batch stream fold frees it with its scope. */
+    * The rounds run on [[Rounds]]; the final round's checkpoint, which
+    * the returned frame reads, is registered with `tracker`, so a
+    * per-batch stream fold frees it with its scope. */
   def connectedComponents(vertices: DataFrame, idCol: String,
       pairs: DataFrame, aCol: String = "a", bCol: String = "b",
       maxIter: Int = 20,
       tracker: Caching.PersistTracker = new Caching.PersistTracker)
-      : DataFrame = {
+      : DataFrame = Rounds(vertices.sparkSession) { loop =>
     // both edge directions in ONE pass over `pairs` (the shared
     // [[Graph.symmetricEdges]] construction)
-    val edges = Graph.symmetricEdges(pairs, aCol, bCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val edges = loop.persist(Graph.symmetricEdges(pairs, aCol, bCol))
     // iterate ONLY over edge endpoints: in a real corpus the near-dup
     // graph touches a small fraction of documents, and dragging every
     // singleton through each round's joins and checkpoints multiplies
     // the per-round cost by corpus/endpoints for no information —
     // singletons get their identity label in the final join instead
-    var labels = edges.select(col("__u"))
-      .distinct().withColumn("__lbl", col("__u"))
-      .localCheckpoint(true)
-    // the previous round's checkpoint, freed (Caching.freeLocalCheckpoint)
-    // as soon as the next round is materialized — only the final round's
-    // blocks outlive the loop (the returned frame reads them lazily)
-    var prevCkpt = labels
-    var converged = false
-    var iter = 0
-    // label the round's jobs (guide §1.5) so profiling attributes the
-    // loop's cost; the caller's description is restored on exit
-    val sc = vertices.sparkSession.sparkContext
-    val callerDesc = sc.getLocalProperty("spark.job.description")
-    while (!converged && iter < maxIter) {
-      sc.setJobDescription(s"cc round $iter")
-      // (1) label(u) := min(own label, min over neighbor labels) — the
-      // neighbor contributions and the self row fused into ONE union +
-      // ONE aggregation (r20, guide §2.3/§2.4: the former per-round
-      // nbrMin groupBy + left-join-back pair paid two extra exchanges,
-      // and since the pointer jump's self-join evaluates `stepped`
-      // twice — exchange reuse cannot kick in because the two sides
-      // project different columns — the saving is doubled). An eager
-      // checkpoint here instead would kill the double-compute outright
-      // but was measured SLOWER end-to-end (one more materialization
-      // barrier per round — +12 actions across the capstone's two CC
-      // runs outweighed the saved recompute). __old (the pre-round
-      // label) rides the SAME aggregation as the self row's label —
-      // exactly one __self row exists per vertex — so convergence
-      // stays a scan of materialized round output.
-      val stepped = edges
-        .join(labels.withColumnRenamed("__u", "__v"), "__v")
-        .select(col("__u"), col("__lbl"), lit(false).as("__self"))
-        .unionByName(labels.select(col("__u"), col("__lbl"),
-          lit(true).as("__self")))
-        .groupBy("__u")
-        .agg(min(col("__lbl")).as("__lbl"),
-          min(when(col("__self"), col("__lbl"))).as("__old"))
-      // (2) pointer jump: label(v) := label(label(v)) — path
-      // compression, the difference between O(diameter) and
-      // O(log diameter) rounds. Every label IS a vertex id (a min over
-      // component member ids), so the inner self-join is total and the
-      // jump only decreases the label. ONE jump per round: chaining a
-      // second jump before the checkpoint nests self-joins of the same
-      // un-materialized plan and planning/execution degenerates —
-      // measured minutes instead of seconds per round.
-      val parents = stepped
-        .select(col("__u").as("__pu"), col("__lbl").as("__plbl"))
-      val next = stepped.join(parents, col("__lbl") === col("__pu"))
-        .select(col("__u"), col("__plbl").as("__lbl"), col("__old"))
-        .localCheckpoint(true)
-      // null-safe comparison (ADVICE r20): under the exactly-one-self-
-      // row invariant __old is never NULL, but if that invariant ever
-      // broke, `=!=` would drop the NULL rows from the non-converged
-      // set and silently declare a premature fixpoint (split clusters);
-      // `<=>` keeps such rows non-converged so the breakage surfaces
-      // as a loud non-convergence throw instead
-      converged = next.filter(!(col("__lbl") <=> col("__old"))).isEmpty
-      Caching.freeLocalCheckpoint(prevCkpt)
-      prevCkpt = next
-      labels = next.drop("__old")
-      iter += 1
+    val init = loop.checkpoint(edges.select(col("__u"))
+      .distinct().withColumn("__lbl", col("__u")))
+    // converged once no label moved — a scan of materialized round
+    // output. Null-safe (ADVICE r20): under the exactly-one-self-row
+    // invariant __old is never NULL, but if that invariant ever broke,
+    // `=!=` would drop the NULL rows from the non-converged set and
+    // silently declare a premature fixpoint (split clusters); `<=>`
+    // keeps such rows non-converged so the breakage surfaces as a loud
+    // non-convergence throw instead
+    val ran = loop.rounds("connectedComponents", maxIter, init)(
+        (_, next) => next.filter(!(col("__lbl") <=> col("__old"))).isEmpty) {
+      (prev, _) =>
+        // (the seed has no __old column: dropping it is then a no-op)
+        val labels = prev.drop("__old")
+        // (1) label(u) := min(own label, min over neighbor labels) — the
+        // neighbor contributions and the self row fused into ONE union +
+        // ONE aggregation (r20, guide §2.3/§2.4: the former per-round
+        // nbrMin groupBy + left-join-back pair paid two extra exchanges,
+        // and since the pointer jump's self-join evaluates `stepped`
+        // twice — exchange reuse cannot kick in because the two sides
+        // project different columns — the saving is doubled). An eager
+        // checkpoint here instead would kill the double-compute outright
+        // but was measured SLOWER end-to-end (one more materialization
+        // barrier per round — +12 actions across the capstone's two CC
+        // runs outweighed the saved recompute). __old (the pre-round
+        // label) rides the SAME aggregation as the self row's label —
+        // exactly one __self row exists per vertex.
+        val stepped = edges
+          .join(labels.withColumnRenamed("__u", "__v"), "__v")
+          .select(col("__u"), col("__lbl"), lit(false).as("__self"))
+          .unionByName(labels.select(col("__u"), col("__lbl"),
+            lit(true).as("__self")))
+          .groupBy("__u")
+          .agg(min(col("__lbl")).as("__lbl"),
+            min(when(col("__self"), col("__lbl"))).as("__old"))
+        // (2) pointer jump: label(v) := label(label(v)) — path
+        // compression, the difference between O(diameter) and
+        // O(log diameter) rounds. Every label IS a vertex id (a min over
+        // component member ids), so the inner self-join is total and the
+        // jump only decreases the label. ONE jump per round: chaining a
+        // second jump before the checkpoint nests self-joins of the same
+        // un-materialized plan and planning/execution degenerates —
+        // measured minutes instead of seconds per round.
+        val parents = stepped
+          .select(col("__u").as("__pu"), col("__lbl").as("__plbl"))
+        loop.checkpoint(stepped.join(parents, col("__lbl") === col("__pu"))
+          .select(col("__u"), col("__plbl").as("__lbl"), col("__old")))
     }
-    sc.setJobDescription(callerDesc)
-    edges.unpersist()
-    tracker.addCheckpoint(prevCkpt)
-    if (!converged) throw new IllegalStateException(
+    if (!ran.fixpoint) throw new IllegalStateException(
       s"connectedComponents did not reach a fixpoint in $maxIter rounds; " +
         "raise maxIter (non-converged labels would silently split clusters)")
+    tracker.addCheckpoint(ran.state)
     vertices.select(col(idCol))
-      .join(labels.withColumnRenamed("__u", idCol), Seq(idCol), "left")
+      .join(ran.state.drop("__old").withColumnRenamed("__u", idCol),
+        Seq(idCol), "left")
       .select(col(idCol),
         coalesce(col("__lbl"), col(idCol)).as("cluster_id"),
         (coalesce(col("__lbl"), col(idCol)) === col(idCol)).as("keep"))

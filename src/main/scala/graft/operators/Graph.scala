@@ -29,11 +29,10 @@ import org.apache.spark.sql.functions._
   * the current rank frame plus one map-side-partial sum — O(E) per
   * iteration, k iterations, zero driver-side state. The edge list
   * (with source degrees pre-attached) is the one multi-consumer frame
-  * and is persisted for the loop's lifetime; per-round results are
-  * localCheckpoint'ed, because ten self-referential joins otherwise
-  * double the lineage each round (the [[Dedup.connectedComponents]]
-  * lesson). Undirected edges mean every vertex has outdegree ≥ 1 —
-  * no dangling-mass correction term is needed.
+  * and is persisted for the loop's lifetime; the rounds run on
+  * [[Rounds]], which holds the lineage rule every iterative operator
+  * here follows. Undirected edges mean every vertex has outdegree ≥ 1
+  * — no dangling-mass correction term is needed.
   *
   * Reference: the engine at /root/reference/sqlengine.py has no graph
   * surface (extension per the brief's quality-weighting family).
@@ -218,32 +217,28 @@ object Graph {
     * re-derivable by a single-threaded engine): seeds start at
     * 1,000,000 and receive the 150,000 teleport base each round;
     * non-seeds start (and teleport) at 0 and hold only flowed-in
-    * mass. Same O(E)-per-iteration shape, persisted edge frame,
-    * per-round localCheckpoint with block freeing. */
+    * mass. Same O(E)-per-iteration shape and persisted edge frame. */
   def personalizedPageRank(pairs: DataFrame, aCol: String, bCol: String,
       seedFilter: Column => Column, iterations: Int = 10): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    // r20 (guide §5 caching): `edges` is consumed by BOTH `deg` and
-    // `edgesDeg`, and `deg` by both `edgesDeg` and the rank init — with
-    // only edgesDeg persisted, the (possibly expensive) upstream pair
-    // pipeline re-ran up to three times before the loop even started
-    // (measured: the co-purchase self-join executed twice, ~1.5 s of
-    // the benched graph_pagerank). Both are released as soon as round
-    // 1 has materialized edgesDeg's cache — only edgesDeg stays pinned
-    // for the loop's lifetime, so peak storage is unchanged at scale.
-    val edges = symmetricEdges(pairs, aCol, bCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val deg = edges.groupBy("__u").agg(count(lit(1)).as("__deg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val edgesDeg = edges.join(deg, "__u")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      var ranks = deg.select(col("__u").as("id"),
+    Rounds(pairs.sparkSession) { loop =>
+      // r20 (guide §5 caching): `edges` is consumed by BOTH `deg` and
+      // `edgesDeg`, and `deg` by both `edgesDeg` and the rank init — with
+      // only edgesDeg persisted, the (possibly expensive) upstream pair
+      // pipeline re-ran up to three times before the loop even started
+      // (measured: the co-purchase self-join executed twice, ~1.5 s of
+      // the benched graph_pagerank). Both are released as soon as round
+      // 1 has materialized edgesDeg's cache — only edgesDeg stays pinned
+      // for the loop's lifetime, so peak storage is unchanged at scale.
+      val edges = loop.persist(symmetricEdges(pairs, aCol, bCol), through = 1)
+      val deg = loop.persist(
+        edges.groupBy("__u").agg(count(lit(1)).as("__deg")), through = 1)
+      val edgesDeg = loop.persist(edges.join(deg, "__u"))
+      val init = deg.select(col("__u").as("id"),
         when(seedFilter(col("__u")), lit(1000000L)).otherwise(lit(0L))
           .as("rank_micro"))
-      for (i <- 1 to iterations) {
-        val prev = ranks
-        ranks = edgesDeg
+      loop.rounds("personalizedPageRank", iterations, init)(Rounds.never) {
+        (ranks, _) => loop.checkpoint(edgesDeg
           .join(ranks, edgesDeg("__u") === ranks("id"))
           .select(col("__v"),
             expr("rank_micro div __deg").as("__contrib"))
@@ -251,13 +246,9 @@ object Graph {
           .agg(sum(col("__contrib")).as("__s"))
           .select(col("__v").as("id"),
             (when(seedFilter(col("__v")), lit(150000L)).otherwise(lit(0L)) +
-              expr("(85 * __s) div 100")).as("rank_micro"))
-          .localCheckpoint(true)
-        Caching.freeLocalCheckpoint(prev)
-        if (i == 1) { edges.unpersist(); deg.unpersist() }
-      }
-      ranks
-    } finally { edgesDeg.unpersist(); deg.unpersist(); edges.unpersist() }
+              expr("(85 * __s) div 100")).as("rank_micro")))
+      }.state
+    }
   }
 
   /** Synchronous label propagation (Raghavan et al. 2007), `rounds`
@@ -278,38 +269,28 @@ object Graph {
     * rides hash aggregation with map-side partials, so the shuffle
     * carries candidate labels, not neighbor lists; negating the
     * always-long count keeps the label free to be any orderable
-    * type). Per-round localCheckpoint with previous-round freeing,
-    * the [[personalizedPageRank]] lineage discipline. Output:
-    * `(id, label)`. */
+    * type). Output: `(id, label)`. */
   def labelPropagation(pairs: DataFrame, aCol: String, bCol: String,
       rounds: Int = 3): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val edges = symmetricEdges(pairs, aCol, bCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      var labels = edges.select(col("__u").as("id")).distinct()
-        .withColumn("__lbl", col("id"))
-        .localCheckpoint(true)
-      var prev = labels
-      for (_ <- 1 to rounds) {
+    Rounds(pairs.sparkSession) { loop =>
+      val edges = loop.persist(symmetricEdges(pairs, aCol, bCol))
+      val init = loop.checkpoint(edges.select(col("__u").as("id")).distinct()
+        .withColumn("__lbl", col("id")))
+      loop.rounds("labelPropagation", rounds, init)(Rounds.never) {
         // (count DESC, label ASC) argmax as ONE min(struct): negate the
         // COUNT — always a long — never the label, which may be any
         // orderable type (a negated string id would null-collapse)
-        val next = edges
+        (labels, _) => loop.checkpoint(edges
           .join(labels, edges("__v") === labels("id"))
           .groupBy(col("__u"), col("__lbl"))
           .agg(count(lit(1)).as("__c"))
           .groupBy(col("__u"))
           .agg(min(struct((-col("__c")).as("__nc"), col("__lbl").as("__l")))
             .as("__m"))
-          .select(col("__u").as("id"), col("__m.__l").as("__lbl"))
-          .localCheckpoint(true)
-        Caching.freeLocalCheckpoint(prev)
-        prev = next
-        labels = next
-      }
-      labels.select(col("id"), col("__lbl").as("label"))
-    } finally edges.unpersist()
+          .select(col("__u").as("id"), col("__m.__l").as("__lbl")))
+      }.state.select(col("id"), col("__lbl").as("label"))
+    }
   }
 
   /** The symmetric WEIGHTED edge list: [[symmetricEdges]] carrying an
@@ -343,8 +324,7 @@ object Graph {
     * order-free ⇒ bit-identical under any partitioning; overflow
     * headroom: r·w ≤ total mass × max weight, ~2^63 only past
     * ~10¹³·max_w), same damping constants, same O(E)-per-iteration
-    * shape with the strength-annotated edge frame persisted and
-    * per-round localCheckpoint + block freeing.
+    * shape with the strength-annotated edge frame persisted.
     *
     * Reference: /root/reference/sqlengine.py has no graph surface
     * (extension per the brief's quality-weighting family). */
@@ -370,22 +350,21 @@ object Graph {
       bCol: String, wCol: String, seedFilter: Column => Column,
       iterations: Int = 10): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    // r20: same multi-consumer persist hygiene as [[personalizedPageRank]]
-    // — edges feeds strength AND edgesStr, strength feeds edgesStr AND
-    // the rank init; both released once round 1 materializes the cache
-    val edges = symmetricWeightedEdges(pairs, aCol, bCol, wCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val strength = edges.groupBy("__u").agg(sum(col("__w")).as("__s"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val edgesStr = edges.join(strength, "__u")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      var ranks = strength.select(col("__u").as("id"),
+    Rounds(pairs.sparkSession) { loop =>
+      // r20: same multi-consumer persist hygiene as [[personalizedPageRank]]
+      // — edges feeds strength AND edgesStr, strength feeds edgesStr AND
+      // the rank init; both released once round 1 materializes the cache
+      val edges = loop.persist(
+        symmetricWeightedEdges(pairs, aCol, bCol, wCol), through = 1)
+      val strength = loop.persist(
+        edges.groupBy("__u").agg(sum(col("__w")).as("__s")), through = 1)
+      val edgesStr = loop.persist(edges.join(strength, "__u"))
+      val init = strength.select(col("__u").as("id"),
         when(seedFilter(col("__u")), lit(1000000L)).otherwise(lit(0L))
           .as("rank_micro"))
-      for (i <- 1 to iterations) {
-        val prev = ranks
-        ranks = edgesStr
+      loop.rounds("weightedPersonalizedPageRank", iterations, init)(
+          Rounds.never) {
+        (ranks, _) => loop.checkpoint(edgesStr
           .join(ranks, edgesStr("__u") === ranks("id"))
           .select(col("__v"),
             expr("(rank_micro * __w) div __s").as("__contrib"))
@@ -393,13 +372,9 @@ object Graph {
           .agg(sum(col("__contrib")).as("__sum"))
           .select(col("__v").as("id"),
             (when(seedFilter(col("__v")), lit(150000L)).otherwise(lit(0L)) +
-              expr("(85 * __sum) div 100")).as("rank_micro"))
-          .localCheckpoint(true)
-        Caching.freeLocalCheckpoint(prev)
-        if (i == 1) { edges.unpersist(); strength.unpersist() }
-      }
-      ranks
-    } finally { edgesStr.unpersist(); strength.unpersist(); edges.unpersist() }
+              expr("(85 * __sum) div 100")).as("rank_micro")))
+      }.state
+    }
   }
 
   /** Weighted synchronous label propagation: [[labelPropagation]]
@@ -411,34 +386,25 @@ object Graph {
     * fixed-rounds derandomization, one edge⋈labels join + two
     * aggregations per round (the argmax rides hash aggregation via
     * `min(struct(−Σw, label))` — negate the always-long score, never
-    * the label), per-round localCheckpoint with previous-round
-    * freeing. Output: `(id, label)`. */
+    * the label). Output: `(id, label)`. */
   def weightedLabelPropagation(pairs: DataFrame, aCol: String,
       bCol: String, wCol: String, rounds: Int = 3): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val edges = symmetricWeightedEdges(pairs, aCol, bCol, wCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      var labels = edges.select(col("__u").as("id")).distinct()
-        .withColumn("__lbl", col("id"))
-        .localCheckpoint(true)
-      var prev = labels
-      for (_ <- 1 to rounds) {
-        val next = edges
+    Rounds(pairs.sparkSession) { loop =>
+      val edges = loop.persist(symmetricWeightedEdges(pairs, aCol, bCol, wCol))
+      val init = loop.checkpoint(edges.select(col("__u").as("id")).distinct()
+        .withColumn("__lbl", col("id")))
+      loop.rounds("weightedLabelPropagation", rounds, init)(Rounds.never) {
+        (labels, _) => loop.checkpoint(edges
           .join(labels, edges("__v") === labels("id"))
           .groupBy(col("__u"), col("__lbl"))
           .agg(sum(col("__w")).as("__c"))
           .groupBy(col("__u"))
           .agg(min(struct((-col("__c")).as("__nc"), col("__lbl").as("__l")))
             .as("__m"))
-          .select(col("__u").as("id"), col("__m.__l").as("__lbl"))
-          .localCheckpoint(true)
-        Caching.freeLocalCheckpoint(prev)
-        prev = next
-        labels = next
-      }
-      labels.select(col("id"), col("__lbl").as("label"))
-    } finally edges.unpersist()
+          .select(col("__u").as("id"), col("__m.__l").as("__lbl")))
+      }.state.select(col("id"), col("__lbl").as("label"))
+    }
   }
 
   /** Fixed-round k-core peel: `rounds` synchronous rounds of "drop
@@ -462,8 +428,7 @@ object Graph {
     * on real graphs the peel stabilizes in a handful of rounds (the
     * spec pins fixpoint-reached on the registered corpus). Each round
     * is one self-join degree count over the surviving edge set +
-    * one filter — O(E) per round, localCheckpoint'ed with
-    * previous-round freeing.
+    * one filter — O(E) per round.
     *
     * Reference: /root/reference/sqlengine.py has no graph surface
     * (extension per the brief's quality-weighting family). */
@@ -471,45 +436,34 @@ object Graph {
       rounds: Int = 8): DataFrame = {
     require(k >= 1 && rounds >= 1,
       s"kCore: need k >= 1 and rounds >= 1, got k=$k rounds=$rounds")
-    val edges = symmetricEdges(pairs, aCol, bCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val verts = edges.select(col("__u").as("id")).distinct()
-        .localCheckpoint(true)
-      var survivors = verts
-      var prevFree: DataFrame = null
-      var stableAt = rounds
-      var stopped = false
-      var r = 1
-      while (r <= rounds && !stopped) {
-        val deg = edges
+    corePeel("kCore", symmetricEdges(pairs, aCol, bCol), count(lit(1)),
+      k.toLong, rounds)
+  }
+
+  /** The shared core peel over a symmetric edge frame: each round keeps
+    * the vertices whose `support` aggregate over edges to surviving
+    * neighbors reaches `min`. The survivor set only ever shrinks, so an
+    * unchanged size is a set-equality proof and the size probe IS the
+    * fixpoint. The seed vertex set is read again by the final outer
+    * join. */
+  private def corePeel(op: String, symmetric: DataFrame, support: Column,
+      min: Long, rounds: Int): DataFrame =
+    Rounds(symmetric.sparkSession) { loop =>
+      val edges = loop.persist(symmetric)
+      val verts = loop.keep(edges.select(col("__u").as("id")).distinct())
+      val ran = loop.rounds(op, rounds, verts)(Rounds.unchanged(_.count())) {
+        (survivors, _) => loop.checkpoint(edges
           .join(survivors.select(col("id").as("__u")), Seq("__u"))
           .join(survivors.select(col("id").as("__v")), Seq("__v"))
-          .groupBy("__u").agg(count(lit(1)).as("__d"))
-        val next = deg.filter(col("__d") >= k)
-          .select(col("__u").as("id"))
-          .localCheckpoint(true)
-        // fixpoint probe on materialized frames: same size ⇒ same set
-        // (the survivor set only ever shrinks)
-        if (next.count() == survivors.count()) {
-          stableAt = r - 1
-          stopped = true
-        }
-        // never free `verts` — the final outer join still reads it
-        if ((prevFree ne null) && (prevFree ne verts))
-          Caching.freeLocalCheckpoint(prevFree)
-        prevFree = survivors
-        survivors = next
-        r += 1
+          .groupBy("__u").agg(support.as("__d"))
+          .filter(col("__d") >= min)
+          .select(col("__u").as("id")))
       }
-      if ((prevFree ne null) && (prevFree ne verts))
-        Caching.freeLocalCheckpoint(prevFree)
       verts
-        .join(survivors.withColumn("__in", lit(true)), Seq("id"), "left")
+        .join(ran.state.withColumn("__in", lit(true)), Seq("id"), "left")
         .select(col("id"), coalesce(col("__in"), lit(false)).as("in_core"),
-          lit(stableAt.toLong).as("rounds_stable"))
-    } finally edges.unpersist()
-  }
+          lit(ran.stableAt).as("rounds_stable"))
+    }
 
   /** Weighted k-core (the s-core of Eidsaa & Almaas): [[kCore]] with
     * the peel criterion on STRENGTH — the sum of edge weights to
@@ -530,7 +484,7 @@ object Graph {
     * set and hence a true fixpoint). Each round is one edge/survivor
     * semi-join pair + a weighted sum — O(E) per round, exact LONG
     * arithmetic (order-free sums ⇒ bit-identical under any
-    * partitioning), localCheckpoint'ed with previous-round freeing.
+    * partitioning).
     *
     * Reference: /root/reference/sqlengine.py has no graph surface
     * (extension per the brief's quality-weighting family). */
@@ -539,41 +493,8 @@ object Graph {
     require(minStrength >= 1 && rounds >= 1,
       s"weightedKCore: need minStrength >= 1 and rounds >= 1, " +
         s"got minStrength=$minStrength rounds=$rounds")
-    val edges = symmetricWeightedEdges(pairs, aCol, bCol, wCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val verts = edges.select(col("__u").as("id")).distinct()
-        .localCheckpoint(true)
-      var survivors = verts
-      var prevFree: DataFrame = null
-      var stableAt = rounds
-      var stopped = false
-      var r = 1
-      while (r <= rounds && !stopped) {
-        val st = edges
-          .join(survivors.select(col("id").as("__u")), Seq("__u"))
-          .join(survivors.select(col("id").as("__v")), Seq("__v"))
-          .groupBy("__u").agg(sum(col("__w")).as("__s"))
-        val next = st.filter(col("__s") >= minStrength)
-          .select(col("__u").as("id"))
-          .localCheckpoint(true)
-        if (next.count() == survivors.count()) {
-          stableAt = r - 1
-          stopped = true
-        }
-        if ((prevFree ne null) && (prevFree ne verts))
-          Caching.freeLocalCheckpoint(prevFree)
-        prevFree = survivors
-        survivors = next
-        r += 1
-      }
-      if ((prevFree ne null) && (prevFree ne verts))
-        Caching.freeLocalCheckpoint(prevFree)
-      verts
-        .join(survivors.withColumn("__in", lit(true)), Seq("id"), "left")
-        .select(col("id"), coalesce(col("__in"), lit(false)).as("in_core"),
-          lit(stableAt.toLong).as("rounds_stable"))
-    } finally edges.unpersist()
+    corePeel("weightedKCore", symmetricWeightedEdges(pairs, aCol, bCol, wCol),
+      sum(col("__w")), minStrength, rounds)
   }
 
   /** Multi-source weighted shortest paths: synchronous min-plus
@@ -596,8 +517,8 @@ object Graph {
     * aggregates per round, cheaper than a join probe.
     *
     * Scale shape: one edge equi-join + a min-combine shuffle per
-    * round — O(E) per round like [[pageRank]], localCheckpoint'ed
-    * with previous-round freeing; distance state is 16 B/vertex.
+    * round — O(E) per round like [[pageRank]]; distance state is
+    * 16 B/vertex.
     * The duplicate-pair collapse inherits [[symmetricWeightedEdges]]'s
     * max rule — well-formed input carries one cost per pair, where it
     * is the identity.
@@ -608,41 +529,30 @@ object Graph {
       costCol: String, seedFilter: Column => Column,
       rounds: Int = 12): DataFrame = {
     require(rounds >= 1, s"weightedShortestPaths: rounds >= 1, got $rounds")
-    val edges = symmetricWeightedEdges(pairs, aCol, bCol, costCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      var dist = edges.select(col("__u").as("id")).distinct()
-        .filter(seedFilter(col("id")))
-        .select(col("id"), lit(0L).as("__d"))
-        .localCheckpoint(true)
-      def sig(df: DataFrame): (Long, Long) = {
-        val r = df.agg(count(lit(1)), coalesce(sum(col("__d")), lit(0L))).head()
-        (r.getLong(0), r.getLong(1))
-      }
-      var cur = sig(dist)
-      var stableAt = rounds
-      var stopped = false
-      var r = 1
-      while (r <= rounds && !stopped) {
+    Rounds(pairs.sparkSession) { loop =>
+      val edges = loop.persist(symmetricWeightedEdges(pairs, aCol, bCol, costCol))
+      val init = loop.checkpoint(vertices(edges, seedFilter)
+        .select(col("id"), lit(0L).as("__d")))
+      val ran = loop.rounds("weightedShortestPaths", rounds, init)(
+          distUnchanged) { (dist, _) =>
         val relaxed = edges.join(dist, edges("__u") === dist("id"))
           .select(col("__v").as("id"), (col("__d") + col("__w")).as("__d"))
-        val next = dist.unionAll(relaxed)
-          .groupBy("id").agg(min(col("__d")).as("__d"))
-          .localCheckpoint(true)
-        val nsig = sig(next)
-        if (nsig == cur) {
-          stableAt = r - 1
-          stopped = true
-        }
-        Caching.freeLocalCheckpoint(dist)
-        dist = next
-        cur = nsig
-        r += 1
+        loop.checkpoint(dist.unionAll(relaxed)
+          .groupBy("id").agg(min(col("__d")).as("__d")))
       }
-      dist.select(col("id"), col("__d").as("dist"),
-        lit(stableAt.toLong).as("rounds_stable"))
-    } finally edges.unpersist()
+      ran.state.select(col("id"), col("__d").as("dist"),
+        lit(ran.stableAt).as("rounds_stable"))
+    }
   }
+
+  /** The min-plus relaxations' fixpoint probe: an unchanged
+    * (count, Σ __d) signature. A proof, not a heuristic, because
+    * per-key distances never increase and keys never leave. */
+  private def distUnchanged: (DataFrame, DataFrame) => Boolean =
+    Rounds.unchanged { df =>
+      val r = df.agg(count(lit(1)), coalesce(sum(col("__d")), lit(0L))).head()
+      (r.getLong(0), r.getLong(1))
+    }
 
   /** Multi-source BFS hop distance over the undirected graph
     * `pairs(aCol, bCol)`: every vertex reachable within `maxHops` of a
@@ -663,52 +573,72 @@ object Graph {
     * ONE equi-join of the edge list with the (new-vertices-only)
     * frontier plus one distinct and one anti-join against the settled
     * set; integer hops only, so results are bit-stable under any
-    * partitioning. Each round's frames are localCheckpoint'ed and the
-    * previous round's blocks freed (the [[pageRank]] lineage lesson);
-    * total work is O(E·maxHops) worst case, and each vertex enters the
-    * frontier at most once — the reason the settled set is anti-joined
-    * BEFORE a vertex re-expands, not deduped after.
+    * partitioning. Total work is O(E·maxHops) worst case, and each
+    * vertex enters the frontier at most once — the reason the settled
+    * set is anti-joined BEFORE a vertex re-expands, not deduped after.
     *
     * Reference: /root/reference/sqlengine.py has no graph surface
     * (extension per the brief's quality-weighting family). */
   def bfsHops(pairs: DataFrame, aCol: String, bCol: String,
       seedFilter: Column => Column, maxHops: Int): DataFrame = {
     require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
-    val edges = symmetricEdges(pairs, aCol, bCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // every vertex appears as a __u of the symmetric edge list
-      var dist = edges.select(col("__u").as("id")).distinct()
-        .filter(seedFilter(col("id")))
-        .select(col("id"), lit(0L).as("hops"))
-        .localCheckpoint(true)
-      var frontier = dist.select("id")
-      var lastRound: Seq[DataFrame] = Seq(dist)
-      var h = 1
-      var exhausted = false
-      while (h <= maxHops && !exhausted) {
-        val next = edges.join(frontier, edges("__u") === frontier("id"))
-          .select(col("__v").as("id")).distinct()
-          .join(dist, Seq("id"), "left_anti")
-          .select(col("id"), lit(h.toLong).as("hops"))
-          .localCheckpoint(true)
-        val settled = dist.union(next).localCheckpoint(true)
-        // this round's frames are materialized; last round's blocks
-        // (except the final `settled`, returned lazily) are dead
-        lastRound.foreach(Caching.freeLocalCheckpoint)
-        lastRound = Seq(next, settled)
-        dist = settled
-        frontier = next.select("id")
-        // an empty frontier can never repopulate — skip the dead
-        // rounds a generous maxHops would otherwise still pay (each
-        // an O(E) join plus two checkpoint jobs); isEmpty is a cheap
-        // scan of the just-materialized checkpoint
-        exhausted = next.isEmpty
-        h += 1
-      }
-      Caching.freeLocalCheckpoint(lastRound.head) // final frontier
-      dist
-    } finally edges.unpersist()
+    Rounds(pairs.sparkSession) { loop =>
+      val edges = loop.persist(symmetricEdges(pairs, aCol, bCol))
+      bfs(loop, "bfsHops", edges, vertices(edges, seedFilter)
+        .select(col("id"), lit(0L).as("hops")), maxHops)
+    }
+  }
+
+  /** The vertices of a [[symmetricEdges]] frame satisfying `filter`, as
+    * `id` — every vertex appears as a `__u`. */
+  private def vertices(edges: DataFrame, filter: Column => Column): DataFrame =
+    edges.select(col("__u").as("id")).distinct().filter(filter(col("id")))
+
+  /** Level-synchronous BFS from `seeds` — `(keys…, hops = 0)` rows
+    * whose keys end in the vertex `id`, optionally led by a source `s`
+    * so one job carries every source's frontier. Each round is one
+    * edge equi-join against the keyed frontier, a distinct and an
+    * anti-join vs the settled set, and the loop stops at `maxHops` or
+    * as soon as the frontier is empty: an empty frontier never
+    * repopulates, and each dead round would still pay an O(E) join
+    * plus two checkpoint jobs (the probe is a cheap scan of the
+    * just-materialized frontier). Returns the settled `(keys…, hops)`
+    * frame — hops is the MINIMUM distance by BFS construction.
+    * `edges` must be the [[symmetricEdges]] frame, persisted by the
+    * caller's loop. */
+  private def bfs(loop: Rounds.Loop, op: String, edges: DataFrame,
+      seeds: DataFrame, maxHops: Int): DataFrame = {
+    val keys = seeds.columns.toSeq.filter(_ != "hops")
+    val init = loop.checkpoint(seeds)
+    loop.rounds(op, maxHops, (init, init))((_, s) => s._2.isEmpty) {
+      case ((dist, last), h) =>
+        val frontier = last.select(keys.map(col): _*)
+        val next = loop.checkpoint(
+          edges.join(frontier, edges("__u") === frontier("id"))
+            .select(keys.init.map(col) :+ col("__v").as("id"): _*).distinct()
+            .join(dist, keys, "left_anti")
+            .select(keys.map(col) :+ lit(h.toLong).as("hops"): _*))
+        (loop.checkpoint(dist.union(next)), next)
+    }.state._1
+  }
+
+  /** [[bfs]] from every `sourceFilter` vertex, keyed (s, id). */
+  private def multiSourceBfs(loop: Rounds.Loop, op: String,
+      edges: DataFrame, sourceFilter: Column => Column,
+      maxHops: Int): DataFrame =
+    bfs(loop, op, edges, vertices(edges, sourceFilter)
+      .select(col("id").as("s"), col("id"), lit(0L).as("hops")), maxHops)
+
+  /** A per-source fold over the hop-bounded [[multiSourceBfs]] of the
+    * undirected graph `pairs(aCol, bCol)`. */
+  private def bfsFold(op: String, pairs: DataFrame, aCol: String,
+      bCol: String, seedFilter: Column => Column, maxHops: Int)(
+      fold: DataFrame => DataFrame): DataFrame = {
+    require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
+    Rounds(pairs.sparkSession) { loop =>
+      val edges = loop.persist(symmetricEdges(pairs, aCol, bCol))
+      fold(multiSourceBfs(loop, op, edges, seedFilter, maxHops))
+    }
   }
 
   /** Per-seed closeness centrality within a hop horizon: for every
@@ -726,62 +656,20 @@ object Graph {
     *
     * Scale shape: identical rounds to [[bfsHops]] — one edge
     * equi-join per hop against the (seed, vertex)-keyed frontier,
-    * distinct, anti-join vs settled, localCheckpoint with
-    * previous-round block freeing. The frontier is at most
+    * distinct, anti-join vs settled. The frontier is at most
     * |seeds| × V rows; with a bounded seed set (the intended use)
     * that is a constant factor on the BFS, not a new asymptotic. */
-  /** The (source, vertex)-keyed level-synchronous BFS all multi-seed
-    * operators fold over ([[seedCloseness]], [[anf]]'s exact audit):
-    * one edge equi-join per hop against the keyed frontier, distinct,
-    * anti-join vs settled, localCheckpoint with previous-round block
-    * freeing, early exit on an exhausted frontier. Returns the settled
-    * `(s, id, hops)` frame — hops is the MINIMUM distance by BFS
-    * construction. `edges` must be the [[symmetricEdges]] frame,
-    * already persisted by the caller (who also unpersists it). */
-  private def multiSourceBfs(edges: DataFrame,
-      sourceFilter: Column => Column, maxHops: Int): DataFrame = {
-    var dist = edges.select(col("__u").as("id")).distinct()
-      .filter(sourceFilter(col("id")))
-      .select(col("id").as("s"), col("id"), lit(0L).as("hops"))
-      .localCheckpoint(true)
-    var frontier = dist.select("s", "id")
-    var lastRound: Seq[DataFrame] = Seq(dist)
-    var h = 1
-    var exhausted = false
-    while (h <= maxHops && !exhausted) {
-      val next = edges.join(frontier, edges("__u") === frontier("id"))
-        .select(col("s"), col("__v").as("id")).distinct()
-        .join(dist, Seq("s", "id"), "left_anti")
-        .select(col("s"), col("id"), lit(h.toLong).as("hops"))
-        .localCheckpoint(true)
-      val settled = dist.union(next).localCheckpoint(true)
-      lastRound.foreach(Caching.freeLocalCheckpoint)
-      lastRound = Seq(next, settled)
-      dist = settled
-      frontier = next.select("s", "id")
-      exhausted = next.isEmpty
-      h += 1
-    }
-    Caching.freeLocalCheckpoint(lastRound.head)
-    dist
-  }
-
   def seedCloseness(pairs: DataFrame, aCol: String, bCol: String,
-      seedFilter: Column => Column, maxHops: Int): DataFrame = {
-    require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
-    val edges = symmetricEdges(pairs, aCol, bCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      multiSourceBfs(edges, seedFilter, maxHops)
-        .groupBy(col("s").as("seed"))
+      seedFilter: Column => Column, maxHops: Int): DataFrame =
+    bfsFold("seedCloseness", pairs, aCol, bCol, seedFilter, maxHops) {
+      _.groupBy(col("s").as("seed"))
         .agg((count(lit(1)) - 1L).as("n_reached"),
           sum(col("hops")).as("total_hops"))
         .select(col("seed"), col("n_reached"), col("total_hops"),
           when(col("total_hops") > 0,
             expr("(1000000 * n_reached) div total_hops"))
             .otherwise(lit(0L)).as("closeness_micro"))
-    } finally edges.unpersist()
-  }
+    }
 
   /** Per-seed HARMONIC centrality, horizon-bounded: Σ over reached
     * vertices of 1/d(s,v) — the closeness variant that is ROBUST to
@@ -810,18 +698,13 @@ object Graph {
     * Returns one row per seed: (seed, n_reached, harmonic_micro);
     * n_reached excludes the seed, a seed reaching nothing scores 0. */
   def harmonicCentrality(pairs: DataFrame, aCol: String, bCol: String,
-      seedFilter: Column => Column, maxHops: Int): DataFrame = {
-    require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
-    val edges = symmetricEdges(pairs, aCol, bCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      multiSourceBfs(edges, seedFilter, maxHops)
-        .groupBy(col("s").as("seed"))
+      seedFilter: Column => Column, maxHops: Int): DataFrame =
+    bfsFold("harmonicCentrality", pairs, aCol, bCol, seedFilter, maxHops) {
+      _.groupBy(col("s").as("seed"))
         .agg((count(lit(1)) - 1L).as("n_reached"),
           coalesce(sum(when(col("hops") > 0L,
             expr("1000000 div hops"))), lit(0L)).as("harmonic_micro"))
-    } finally edges.unpersist()
-  }
+    }
 
   /** Weighted per-seed closeness: [[seedCloseness]] with SUM-OF-COSTS
     * distances instead of hop counts — per seed,
@@ -881,43 +764,24 @@ object Graph {
   /** The bounded min-plus relaxation shared by the weighted
     * centrality folds: (seed, vertex)-keyed distances, one edge join
     * + (s, id)-min per round, (count, Σd) signature fixpoint
-    * early-stop (distances non-increasing, keys never leave — the
-    * [[weightedShortestPaths]] proof), per-round localCheckpoint +
-    * freeing. `fold` reduces the settled (s, id, __d) frame. */
+    * early-stop ([[distUnchanged]]). `fold` reduces the settled
+    * (s, id, __d) frame. */
   private def minPlusFold(pairs: DataFrame, aCol: String, bCol: String,
       costCol: String, seedFilter: Column => Column, rounds: Int,
       tag: String)(fold: DataFrame => DataFrame): DataFrame = {
     require(rounds >= 1, s"$tag: rounds >= 1, got $rounds")
-    val edges = symmetricWeightedEdges(pairs, aCol, bCol, costCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      var dist = edges.select(col("__u").as("id")).distinct()
-        .filter(seedFilter(col("id")))
-        .select(col("id").as("s"), col("id"), lit(0L).as("__d"))
-        .localCheckpoint(true)
-      def sig(df: DataFrame): (Long, Long) = {
-        val r = df.agg(count(lit(1)), coalesce(sum(col("__d")), lit(0L))).head()
-        (r.getLong(0), r.getLong(1))
-      }
-      var cur = sig(dist)
-      var stopped = false
-      var r = 1
-      while (r <= rounds && !stopped) {
+    Rounds(pairs.sparkSession) { loop =>
+      val edges = loop.persist(symmetricWeightedEdges(pairs, aCol, bCol, costCol))
+      val init = loop.checkpoint(vertices(edges, seedFilter)
+        .select(col("id").as("s"), col("id"), lit(0L).as("__d")))
+      fold(loop.rounds(tag, rounds, init)(distUnchanged) { (dist, _) =>
         val relaxed = edges.join(dist, edges("__u") === dist("id"))
           .select(col("s"), col("__v").as("id"),
             (col("__d") + col("__w")).as("__d"))
-        val next = dist.unionAll(relaxed)
-          .groupBy("s", "id").agg(min(col("__d")).as("__d"))
-          .localCheckpoint(true)
-        val nsig = sig(next)
-        if (nsig == cur) stopped = true
-        Caching.freeLocalCheckpoint(dist)
-        dist = next
-        cur = nsig
-        r += 1
-      }
-      fold(dist)
-    } finally edges.unpersist()
+        loop.checkpoint(dist.unionAll(relaxed)
+          .groupBy("s", "id").agg(min(col("__d")).as("__d")))
+      }.state)
+    }
   }
 
   /** Resource-allocation link prediction (Zhou, Lü & Zhang, Eur. Phys.
@@ -991,8 +855,7 @@ object Graph {
     * re-derives the orientation rather than sharing triangleCounts'
     * one-shot frames because the persist lifecycle differs: here every
     * round's oriented frame is persisted for its three plan reads and
-    * freed at round end, with survivor sets localCheckpoint'ed and the
-    * previous round's blocks dropped (the [[kCore]] lineage contract).
+    * freed at round end.
     *
     * Fixed `rounds`, not peel-to-fixpoint, for oracle unrollability;
     * `rounds_stable` self-audits where the peel stabilized (the edge
@@ -1023,53 +886,37 @@ object Graph {
     * keeping edges whose summed bottleneck support reaches
     * `minSupport`. Size-equality fixpoint early-exit (the survivor
     * set only shrinks, so an unchanged count is a set-equality
-    * proof); per-round localCheckpoint with previous-round freeing. */
+    * proof); the seed edge set is read again by the final outer
+    * join. */
   private def trussPeel(orig0: DataFrame, aCol: String, bCol: String,
-      minSupport: Long, rounds: Int): DataFrame = {
-    val orig = orig0.localCheckpoint(true)
-    var edges = orig
-    var prevFree: DataFrame = null
-    var stableAt = rounds
-    var stopped = false
-    var r = 1
-    while (r <= rounds && !stopped) {
-      val (_, oriented) = orientEdges(edges, identity,
-        _.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      // each triangle supports its three canonical edges with its
-      // bottleneck weight (≡ 1 under unit weights)
-      val sup = enumTriangles(oriented).select(col("__mw"), explode(array(
-          struct(least(col("s"), col("x")).as("a"),
-            greatest(col("s"), col("x")).as("b")),
-          struct(least(col("s"), col("y")).as("a"),
-            greatest(col("s"), col("y")).as("b")),
-          struct(least(col("x"), col("y")).as("a"),
-            greatest(col("x"), col("y")).as("b")))).as("__e"))
-        .select(col("__e.a").as("a"), col("__e.b").as("b"), col("__mw"))
-        .groupBy("a", "b").agg(sum(col("__mw")).as("__sup"))
-      val next = edges.join(sup.filter(col("__sup") >= minSupport)
-          .select("a", "b"), Seq("a", "b"), "left_semi")
-        .localCheckpoint(true)
-      oriented.unpersist()
-      if (next.count() == edges.count()) {
-        stableAt = r - 1
-        stopped = true
+      minSupport: Long, rounds: Int): DataFrame =
+    Rounds(orig0.sparkSession) { loop =>
+      val orig = loop.keep(orig0)
+      val ran = loop.rounds("trussPeel", rounds, orig)(
+          Rounds.unchanged(_.count())) { (edges, r) =>
+        val (_, oriented) =
+          orientEdges(edges, identity, loop.persist(_, through = r))
+        // each triangle supports its three canonical edges with its
+        // bottleneck weight (≡ 1 under unit weights)
+        val sup = enumTriangles(oriented).select(col("__mw"), explode(array(
+            struct(least(col("s"), col("x")).as("a"),
+              greatest(col("s"), col("x")).as("b")),
+            struct(least(col("s"), col("y")).as("a"),
+              greatest(col("s"), col("y")).as("b")),
+            struct(least(col("x"), col("y")).as("a"),
+              greatest(col("x"), col("y")).as("b")))).as("__e"))
+          .select(col("__e.a").as("a"), col("__e.b").as("b"), col("__mw"))
+          .groupBy("a", "b").agg(sum(col("__mw")).as("__sup"))
+        loop.checkpoint(edges.join(sup.filter(col("__sup") >= minSupport)
+          .select("a", "b"), Seq("a", "b"), "left_semi"))
       }
-      // never free `orig` — the final outer join still reads it
-      if ((prevFree ne null) && (prevFree ne orig))
-        Caching.freeLocalCheckpoint(prevFree)
-      prevFree = edges
-      edges = next
-      r += 1
+      orig
+        .join(ran.state.select("a", "b").withColumn("__in", lit(true)),
+          Seq("a", "b"), "left")
+        .select(col("a").as(aCol), col("b").as(bCol),
+          coalesce(col("__in"), lit(false)).as("in_truss"),
+          lit(ran.stableAt).as("rounds_stable"))
     }
-    if ((prevFree ne null) && (prevFree ne orig))
-      Caching.freeLocalCheckpoint(prevFree)
-    orig
-      .join(edges.select("a", "b").withColumn("__in", lit(true)),
-        Seq("a", "b"), "left")
-      .select(col("a").as(aCol), col("b").as(bCol),
-        coalesce(col("__in"), lit(false)).as("in_truss"),
-        lit(stableAt.toLong).as("rounds_stable"))
-  }
 
   /** Weighted k-truss: the [[kTruss]] edge peel with WEIGHTED support
     * — an edge survives a round iff the sum of its supporting
@@ -1084,9 +931,8 @@ object Graph {
     *
     * Same fixed synchronous rounds + `rounds_stable` self-audit, same
     * per-round O(E^{3/2}) degree-oriented enumeration (closing edge
-    * fetched by inner join for its weight — multiplicity 1), same
-    * localCheckpoint + block-freeing loop hygiene. Output one row per
-    * input edge: `(aCol, bCol, in_truss, rounds_stable)`. */
+    * fetched by inner join for its weight — multiplicity 1). Output
+    * one row per input edge: `(aCol, bCol, in_truss, rounds_stable)`. */
   def weightedKTruss(pairs: DataFrame, aCol: String, bCol: String,
       wCol: String, minSupport: Long, rounds: Int = 4): DataFrame = {
     require(minSupport >= 1 && rounds >= 1,
@@ -1355,8 +1201,8 @@ object Graph {
     * Scale shape: the σ-BFS is the [[bfsHops]] loop with ONE extra
     * aggregate — each round one edge equi-join against the (seed,
     * vertex)-keyed frontier, a partial-agg σ-sum per new vertex, an
-    * anti-join vs settled, localCheckpoint + freeing; total O(|panel|
-    * ·E·h) like [[seedCloseness]]. The pair assembly self-joins the
+    * anti-join vs settled; total O(|panel|·E·h) like
+    * [[seedCloseness]]. The pair assembly self-joins the
     * settled frame on the MIDDLE vertex — Σ_v reach(v)² rows, the
     * price of pair-level betweenness, bounded by |panel|²·V and
     * independent of E; the panel (a fixed deterministic sample, the
@@ -1380,36 +1226,23 @@ object Graph {
       seedFilter: Column => Column, maxHops: Int): DataFrame = {
     require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val edges = symmetricEdges(pairs, aCol, bCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      var settled = edges.select(col("__u").as("id")).distinct()
-        .filter(seedFilter(col("id")))
+    Rounds(pairs.sparkSession) { loop =>
+      val edges = loop.persist(symmetricEdges(pairs, aCol, bCol))
+      val init = loop.checkpoint(vertices(edges, seedFilter)
         .select(col("id").as("s"), col("id").as("v"),
-          lit(0L).as("d"), lit(1L).as("sigma"))
-        .localCheckpoint(true)
-      var frontier = settled
-      var lastRound: Seq[DataFrame] = Seq(settled)
-      var h = 1
-      var exhausted = false
-      while (h <= maxHops && !exhausted) {
+          lit(0L).as("d"), lit(1L).as("sigma")))
+      val settled = loop.rounds("sampledBetweenness", maxHops, (init, init))(
+          (_, s) => s._2.isEmpty) { case ((settled, frontier), h) =>
         // σ of a layer-h vertex = Σ σ over its layer-(h−1) neighbors
-        val grown = edges.join(frontier, edges("__u") === frontier("v"))
-          .groupBy(col("s"), col("__v"))
-          .agg(sum(col("sigma")).as("sigma"))
-          .select(col("s"), col("__v").as("v"),
-            lit(h.toLong).as("d"), col("sigma"))
-          .join(settled.select("s", "v"), Seq("s", "v"), "left_anti")
-          .localCheckpoint(true)
-        val allNow = settled.unionByName(grown).localCheckpoint(true)
-        lastRound.foreach(Caching.freeLocalCheckpoint)
-        lastRound = Seq(grown, allNow)
-        settled = allNow
-        frontier = grown
-        exhausted = grown.isEmpty
-        h += 1
-      }
-      Caching.freeLocalCheckpoint(lastRound.head)
+        val grown = loop.checkpoint(
+          edges.join(frontier, edges("__u") === frontier("v"))
+            .groupBy(col("s"), col("__v"))
+            .agg(sum(col("sigma")).as("sigma"))
+            .select(col("s"), col("__v").as("v"),
+              lit(h.toLong).as("d"), col("sigma"))
+            .join(settled.select("s", "v"), Seq("s", "v"), "left_anti"))
+        (loop.checkpoint(settled.unionByName(grown)), grown)
+      }.state._1
       // pair distances: reached vertices that are themselves seeds
       val st = settled
         .join(settled.filter(col("d") === 0L).select(col("v")).distinct(),
@@ -1430,7 +1263,7 @@ object Graph {
         .select(col("v").as("id"),
           col("__mass").cast(org.apache.spark.sql.types.LongType)
             .as("pair_paths"))
-    } finally edges.unpersist()
+    }
   }
 
   /** Approximate neighborhood function (ANF) with an exact audit —
@@ -1481,17 +1314,15 @@ object Graph {
     * Scale shape: per round, the sketch frame shuffles once on
     * vertex id (2^lgK/2 ≈ 4 KB per vertex at the default lgK=13 —
     * the knob that trades register budget against shuffle bytes);
-    * per-round totals are 1-row aggregates checkpointed eagerly so
-    * previous rounds' blocks free immediately. The audit BFS reuses
-    * the bounded (source, vertex) frontier loop with per-round
-    * localCheckpoint + block freeing. */
+    * per-round totals are 1-row aggregates collected as literal rows.
+    * The audit BFS reuses the bounded (source, vertex) frontier loop
+    * of [[multiSourceBfs]]. */
   def anf(pairs: DataFrame, aCol: String, bCol: String,
       sourceFilter: Column => Column, maxHops: Int,
       lgK: Int = 13, audit: Boolean = true): DataFrame = {
     require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
-    val edges = symmetricEdges(pairs, aCol, bCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Rounds(pairs.sparkSession) { loop =>
+      val edges = loop.persist(symmetricEdges(pairs, aCol, bCol))
       // the one count also materializes the persisted edge list; it
       // sizes the union-round shuffle so each task's sketch-merge
       // buffer stays ~128 MB however dense the graph (an HLL_8 sketch
@@ -1517,7 +1348,8 @@ object Graph {
       // the full grid — a saturated round is one more O(E) join whose
       // merge is a no-op, not a correctness risk ----
       val dist: Option[DataFrame] =
-        if (audit) Some(multiSourceBfs(edges, sourceFilter, maxHops))
+        if (audit) Some(multiSourceBfs(loop, "anf audit", edges, sourceFilter,
+          maxHops))
         else None
       val horizon = dist match {
         case None => maxHops
@@ -1531,9 +1363,8 @@ object Graph {
       // (the groupBy subsumes the former distinct() — inserting the
       // same id twice leaves HLL registers, and so the serialized
       // sketch, unchanged; one aggregation instead of two)
-      var sk = edges.select(col("__u").as("id"))
-        .groupBy("id").agg(expr(s"hll_sketch_agg(id, $lgK)").as("__bs"))
-        .localCheckpoint(true)
+      val sk0 = loop.checkpoint(edges.select(col("__u").as("id"))
+        .groupBy("id").agg(expr(s"hll_sketch_agg(id, $lgK)").as("__bs")))
       // per-round panel totals are 1-row aggregates — collected to the
       // driver (bounded by construction) and re-emitted as literal
       // rows, instead of the former per-round 1-row localCheckpoint
@@ -1553,67 +1384,59 @@ object Graph {
           (if (v == null) lit(null).cast("long") else lit(v.longValue))
             .as("approx_pairs"))
       val totals = scala.collection.mutable.ArrayBuffer(
-        0 -> totalOf(sk))
-      var h = 1
-      var stable = false
-      while (h <= horizon && !stable) {
-        // r20 round fusion (guide §1.4/§2.3): the union tags the self
-        // row, so ONE aggregation yields both the merged sketch AND
-        // the pre-round sketch (__prev — exactly one __self row exists
-        // per vertex), and ONE 1-row scan of the checkpointed result
-        // reads this round's panel total AND the exact fixpoint probe.
-        // The former shape paid a separate roundTotal job plus an
-        // O(V)-sketch-bytes probe self-join (two more shuffles of ~4 KB
-        // HLL rows per vertex) every round.
-        val merged = sk
-          .select(col("id"), col("__bs"), lit(true).as("__self"))
-          .unionByName(edges.join(sk, edges("__v") === sk("id"))
-            .select(edges("__u").as("id"), col("__bs"),
-              lit(false).as("__self")))
-          // clustered by id BEFORE the agg: the aggregate then runs
-          // in place on unionParts partitions (HashPartitioning(id)
-          // satisfies its clustering), so no task ever buffers more
-          // than its own id slice of sketches
-          .repartition(unionParts, col("id"))
-          .groupBy("id").agg(expr("hll_union_agg(__bs)").as("__bs"),
-            max(when(col("__self"), col("__bs"))).as("__prev"))
-          // the probe needs only WHETHER the sketch changed, so the
-          // pre-round sketch collapses to one boolean before the
-          // checkpoint (r21, ADVICE r20): the stored round is one
-          // sketch + one flag per vertex instead of two full sketches
-          // — same exact serialized-bytes comparison, evaluated here
-          .select(col("id"), col("__bs"),
-            (col("__bs") =!= col("__prev")).as("__chg"))
-          .localCheckpoint(true)
-        // EXACT fixpoint probe, now a column of the same 1-row scan
-        // (production mode only — the audit mode's BFS horizon already
-        // caps the loop): the register-max union is monotone and
-        // idempotent, so ONE no-op round means every later round is a
-        // no-op too — remaining grid rows are this round's total
-        // verbatim, and the saturated graph stops paying O(E) sketch
-        // joins. A changed serialization with unchanged registers
-        // cannot occur (the encoding is a function of the state); a
-        // spurious difference merely skips the stop — never wrong,
-        // only slower.
-        val statsRow = merged.agg(
-          sum(when(sourceFilter(col("id")),
-            expr("hll_sketch_estimate(__bs)"))).as("__t"),
-          count(when(col("__chg"), lit(1))).as("__chg"))
-          .head
-        val total: java.lang.Long =
-          if (statsRow.isNullAt(0)) null
-          else java.lang.Long.valueOf(statsRow.getLong(0))
-        val changed = if (dist.nonEmpty) 1L else statsRow.getLong(1)
-        Caching.freeLocalCheckpoint(sk)
-        sk = merged
-        totals += (h -> total)
-        if (changed == 0L) {
-          stable = true
-          for (hh <- h + 1 to horizon) totals += (hh -> total)
-        }
-        h += 1
+        0 -> totalOf(sk0))
+      // the state carries the round's count of changed sketches
+      val ran = loop.rounds("anf", horizon, (sk0, 1L))((_, s) => s._2 == 0L) {
+        case ((sk, _), h) =>
+          // r20 round fusion (guide §1.4/§2.3): the union tags the self
+          // row, so ONE aggregation yields both the merged sketch AND
+          // the pre-round sketch (__prev — exactly one __self row exists
+          // per vertex), and ONE 1-row scan of the checkpointed result
+          // reads this round's panel total AND the exact fixpoint probe.
+          // The former shape paid a separate roundTotal job plus an
+          // O(V)-sketch-bytes probe self-join (two more shuffles of ~4 KB
+          // HLL rows per vertex) every round.
+          val merged = loop.checkpoint(sk
+            .select(col("id"), col("__bs"), lit(true).as("__self"))
+            .unionByName(edges.join(sk, edges("__v") === sk("id"))
+              .select(edges("__u").as("id"), col("__bs"),
+                lit(false).as("__self")))
+            // clustered by id BEFORE the agg: the aggregate then runs
+            // in place on unionParts partitions (HashPartitioning(id)
+            // satisfies its clustering), so no task ever buffers more
+            // than its own id slice of sketches
+            .repartition(unionParts, col("id"))
+            .groupBy("id").agg(expr("hll_union_agg(__bs)").as("__bs"),
+              max(when(col("__self"), col("__bs"))).as("__prev"))
+            // the probe needs only WHETHER the sketch changed, so the
+            // pre-round sketch collapses to one boolean before the
+            // checkpoint (r21, ADVICE r20): the stored round is one
+            // sketch + one flag per vertex instead of two full sketches
+            // — same exact serialized-bytes comparison, evaluated here
+            .select(col("id"), col("__bs"),
+              (col("__bs") =!= col("__prev")).as("__chg")))
+          // EXACT fixpoint probe, now a column of the same 1-row scan
+          // (production mode only — the audit mode's BFS horizon already
+          // caps the loop): the register-max union is monotone and
+          // idempotent, so ONE no-op round means every later round is a
+          // no-op too — remaining grid rows are this round's total
+          // verbatim, and the saturated graph stops paying O(E) sketch
+          // joins. A changed serialization with unchanged registers
+          // cannot occur (the encoding is a function of the state); a
+          // spurious difference merely skips the stop — never wrong,
+          // only slower.
+          val statsRow = merged.agg(
+            sum(when(sourceFilter(col("id")),
+              expr("hll_sketch_estimate(__bs)"))).as("__t"),
+            count(when(col("__chg"), lit(1))).as("__chg"))
+            .head
+          val total: java.lang.Long =
+            if (statsRow.isNullAt(0)) null
+            else java.lang.Long.valueOf(statsRow.getLong(0))
+          totals += (h -> total)
+          (merged, if (dist.nonEmpty) 1L else statsRow.getLong(1))
       }
-      Caching.freeLocalCheckpoint(sk)
+      for (hh <- ran.rounds + 1 to horizon) totals += (hh -> totals.last._2)
       val approx = totals.map { case (hh, v) => totalRow(hh, v) }
         .reduce(_.union(_))
       // hop-grid frames from here on: ≤ maxHops+1 rows by construction,
@@ -1645,6 +1468,6 @@ object Graph {
               (col("exact_pairs") * 10 >= col("__tot") * 9).as("at_eff_90"))
             .orderBy("hops")
       }
-    } finally edges.unpersist()
+    }
   }
 }

@@ -12,11 +12,12 @@ package graft
   * without executing anything, so the next drift fails HERE with a
   * per-query report instead of surfacing as missing driver artifacts.
   *
-  * Construction note: a handful of queries do eager work when the
-  * DataFrame is BUILT (io_* roundtrips write scratch files; IVF/PQ
-  * collect bounded centroid samples; CC loops iterate) — at sf0.001
-  * that is milliseconds, and it means construction-time failures are
-  * caught too, not just analysis-time ones.
+  * Construction note: most queries do eager work when the DataFrame
+  * is BUILT (io_* roundtrips write scratch files; IVF/PQ collect
+  * bounded centroid samples; CC loops iterate), so construction-time
+  * failures are caught too, not just analysis-time ones. That work is
+  * nearly all of the sweep's cost — minutes, not milliseconds, even at
+  * sf0.001 — so the sweep reads the shared [[RegistryPass]].
   */
 class AnalysisGuardSpec extends SparkSpec {
 
@@ -31,14 +32,10 @@ class AnalysisGuardSpec extends SparkSpec {
   }
 
   test("all registered queries analyze against the live testdata schemas") {
-    val failures = SparkEntry.all.flatMap { q =>
-      try {
-        q.run(spark, dir).queryExecution.analyzed
-        None
-      } catch {
-        case e: Throwable =>
-          val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-          Some(s"${q.name}: ${msg.linesIterator.take(3).mkString(" | ")}")
+    val failures = RegistryPass(spark, dir).flatMap { q =>
+      q.analysisError.map { e =>
+        val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
+        s"${q.name}: ${msg.linesIterator.take(3).mkString(" | ")}"
       }
     }
     assert(failures.isEmpty,

@@ -21,16 +21,22 @@ import scala.jdk.CollectionConverters._
 
 /** Golden parity suite: the 15 official queries from
   * /root/reference/TestCases/test.txt plus the survey's probe queries,
-  * executed against the reference's own fixture CSVs (read in place —
-  * nothing copied). Expected values are computed from the fixture files
-  * by a naive in-memory model, so the assertions hold for any fixture
-  * content. Divergences from reference bugs (SURVEY.md §2.12) are
+  * executed against the reference's TestCases fixture (FIXTURES.md
+  * §A.2; `src/test/resources/minisql/TestCases` is a copy of it).
+  * Expected values are computed from the fixture files by a naive
+  * in-memory model, and the literal FIXTURES.md §A.3 goldens are
+  * asserted beside it. Divergences from reference bugs (SURVEY.md §2.12) are
   * asserted as the REBUILD's semantics, marked `≠ref`. The plan-shape
   * and release tests write their own reference-style catalog instead. */
 class MiniSqlSpec extends SparkSpec with BeforeAndAfterAll
     with AdaptiveSparkPlanHelper {
 
   private val fixtureDir = "/root/reference/TestCases"
+  /** The reference's TestCases fixture where it is installed, else the
+    * committed copy of it (FIXTURES.md §A.2). */
+  private val fixture =
+    if (CsvCatalog.isLoadable(fixtureDir)) fixtureDir
+    else Paths.get(getClass.getResource("/minisql/TestCases").toURI).toString
 
   /** Every engine the suite builds; each is closed in `afterAll`. */
   private val engines = ArrayBuffer.empty[MiniSqlEngine]
@@ -42,14 +48,14 @@ class MiniSqlSpec extends SparkSpec with BeforeAndAfterAll
   override def afterAll(): Unit =
     try engines.foreach(_.close()) finally super.afterAll()
 
-  private lazy val engine = open(CsvCatalog.load(spark, fixtureDir))
+  private lazy val engine = open(CsvCatalog.load(spark, fixture))
 
   /** naive model: table → rows of col → value (metadata + csv re-parse) */
   private lazy val model: Map[String, (Seq[String], Vector[Vector[Long]])] = {
     val defs = CsvCatalog.parseMetadata(
-      Files.readAllLines(Paths.get(fixtureDir, "metadata.txt")).asScala.toSeq)
+      Files.readAllLines(Paths.get(fixture, "metadata.txt")).asScala.toSeq)
     defs.map { td =>
-      val rows = Files.readAllLines(Paths.get(fixtureDir, s"${td.name}.csv"))
+      val rows = Files.readAllLines(Paths.get(fixture, s"${td.name}.csv"))
         .asScala.filter(_.trim.nonEmpty)
         .map(_.split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"").toLong).toVector)
         .toVector
@@ -69,6 +75,7 @@ class MiniSqlSpec extends SparkSpec with BeforeAndAfterAll
     val df = engine.execute("select * from table1")
     assert(df.columns.toSeq == Seq("TABLE1.A", "TABLE1.B", "TABLE1.C"))
     assert(rows(df) == model("table1")._2.map(_.map(x => x: Any)))
+    assert(rows(df).size == 10) // FIXTURES.md §A.3 golden
   }
 
   test("q2-q5: whole-column aggregates match the naive model") {
@@ -81,6 +88,11 @@ class MiniSqlSpec extends SparkSpec with BeforeAndAfterAll
       Vector(Vector(c.sum.toDouble / c.size)))
     assert(rows(engine.execute("select sum(D) from table2")) ==
       Vector(Vector(colVals("table2", "D").sum)))
+    // FIXTURES.md §A.3 goldens
+    assert(rows(engine.execute("select max(A) from table1")) == Vector(Vector(922L)))
+    assert(rows(engine.execute("select min(B) from table1")) == Vector(Vector(85L)))
+    assert(rows(engine.execute("select avg(C) from table1")) == Vector(Vector(5862.0)))
+    assert(rows(engine.execute("select sum(D) from table2")) == Vector(Vector(107459L)))
   }
 
   test("q2 header naming: MAX(TABLE1.A)") {
@@ -91,6 +103,7 @@ class MiniSqlSpec extends SparkSpec with BeforeAndAfterAll
   test("q6: single-column projection preserves file order") {
     assert(rows(engine.execute("select A from table1")).flatten ==
       colVals("table1", "A"))
+    assert(rows(engine.execute("select A from table1")).size == 10) // §A.3
   }
 
   test("q7: cross join is the left-major cartesian product") {
@@ -98,11 +111,17 @@ class MiniSqlSpec extends SparkSpec with BeforeAndAfterAll
     val dd = colVals("table2", "D")
     val expect = for (x <- a; y <- dd) yield Vector[Any](x, y)
     assert(rows(engine.execute("select A, D from table1, table2")) == expect)
+    assert(expect.size == 100) // §A.3 golden
   }
 
   test("q8: distinct(C) keeps first-occurrence order (sqlengine.py:664)") {
     assert(rows(engine.execute("select distinct(C) from table3")).flatten ==
       colVals("table3", "C").distinct)
+    assert(colVals("table3", "C").distinct.size == 10) // §A.3 golden
+    // §A.3 probe: first-occurrence order under a filter
+    assert(rows(engine.execute(
+      "select distinct(B) from table1 where A = 775 or A = 640")).flatten ==
+      Vector(773L, 85L))
   }
 
   test("q9-q11: constant and OR filters") {
@@ -115,6 +134,13 @@ class MiniSqlSpec extends SparkSpec with BeforeAndAfterAll
       sel(r => r(0) == 775 || r(1) == 803, Seq("A", "B")))
     assert(rows(engine.execute("select A, B from table1 where A = 922 or B = 158;")) ==
       sel(r => r(0) == 922 || r(1) == 158, Seq("A", "B")))
+    // FIXTURES.md §A.3 goldens
+    assert(rows(engine.execute("select B, C from table1 where A = -900")) ==
+      Vector(Vector(718L, 9020L)))
+    assert(rows(engine.execute("select A, B from table1 where A = 775 or B = 803")) ==
+      Vector(Vector(775L, 85L), Vector(411L, 803L)))
+    assert(rows(engine.execute("select A, B from table1 where A = 922 or B = 158;")) ==
+      Vector(Vector(922L, 158L)))
   }
 
   test("q12: star join prints the join column once, LHS kept") {
@@ -126,6 +152,7 @@ class MiniSqlSpec extends SparkSpec with BeforeAndAfterAll
     val expect = for (x <- r1; y <- r2 if x(1) == y(0))
       yield Vector[Any](x(0), x(1), x(2), y(1))
     assert(rows(df) == expect)
+    assert(expect.size == 10) // §A.3 golden
   }
 
   test("q13: projected equi-join aligns rows") {
@@ -133,6 +160,7 @@ class MiniSqlSpec extends SparkSpec with BeforeAndAfterAll
     val (_, r2) = model("table2")
     val expect = for (x <- r1; y <- r2 if x(1) == y(0)) yield Vector[Any](x(0), y(1))
     assert(rows(engine.execute("select A, D from table1, table2 where table1.B = table2.B")) == expect)
+    assert(expect.size == 10) // §A.3 golden
   }
 
   test("q14-q15: error classes match the reference taxonomy") {
@@ -153,6 +181,9 @@ class MiniSqlSpec extends SparkSpec with BeforeAndAfterAll
       a.filter(_ > 0))
     assert(rows(engine.execute("select A from table1 where A le 500")).flatten ==
       a.filter(_ <= 500)) // word operator form
+    // FIXTURES.md §A.3 goldens
+    assert(rows(engine.execute("select A from table1 where A != 922")).size == 9)
+    assert(rows(engine.execute("select A from table1 where A > 0")).size == 5)
   }
 
   test("probes: count / filtered avg / empty-set min (≠ref bugs 3-4)") {
@@ -165,6 +196,14 @@ class MiniSqlSpec extends SparkSpec with BeforeAndAfterAll
     // empty match → SQL null, not sys.maxint
     assert(rows(engine.execute("select min(A) from table1 where B = 999999")) ==
       Vector(Vector(null)))
+    // FIXTURES.md §A.3 goldens
+    assert(rows(engine.execute("select count(A) from table1")) == Vector(Vector(10L)))
+    assert(rows(engine.execute("select avg(A) from table1 where B = 158")) ==
+      Vector(Vector(922.0)))
+    assert(rows(engine.execute("select max(A) from table1 where B = 158")) ==
+      Vector(Vector(922L)))
+    assert(rows(engine.execute("select sum(A) from table1 where B = 158")) ==
+      Vector(Vector(922L)))
   }
 
   test("probes: >2 conditions accepted (≠ref: 'Too many conditions')") {
@@ -218,18 +257,18 @@ class MiniSqlSpec extends SparkSpec with BeforeAndAfterAll
   }
 
   test("CLI: bad data path re-prompts instead of dying (ref sqlengine.py:76-87)") {
-    val inputs = Iterator("/nope/still/bad", fixtureDir)
-    assert(MiniSqlCli.resolveDataDir("/definitely/missing", () => inputs.next()) == fixtureDir)
+    val inputs = Iterator("/nope/still/bad", fixture)
+    assert(MiniSqlCli.resolveDataDir("/definitely/missing", () => inputs.next()) == fixture)
     // blank input falls back to "." (no metadata.txt there → loops on)
-    val inputs2 = Iterator("", fixtureDir)
-    assert(MiniSqlCli.resolveDataDir("/missing", () => inputs2.next()) == fixtureDir)
+    val inputs2 = Iterator("", fixture)
+    assert(MiniSqlCli.resolveDataDir("/missing", () => inputs2.next()) == fixture)
     // EOF aborts cleanly instead of spinning forever
     intercept[IllegalArgumentException] {
       MiniSqlCli.resolveDataDir("/missing", () => null)
     }
     // a valid path never prompts
-    assert(MiniSqlCli.resolveDataDir(fixtureDir,
-      () => fail("prompted despite valid path")) == fixtureDir)
+    assert(MiniSqlCli.resolveDataDir(fixture,
+      () => fail("prompted despite valid path")) == fixture)
   }
 
   test("extension: GROUP BY maps to groupBy().agg() with FN(TABLE.COL) headers") {

@@ -106,10 +106,8 @@ class PlanQualitySpec extends SparkSpec {
     // Intentional products: the reference's cross-join surface, and
     // queries that cross 1-row aggregate frames (bounded by design).
     val allowed = PlanQualitySpec.allowedCartesian
-    val offenders = SparkEntry.all.flatMap { q =>
-      val plan =
-        try q.run(spark, dir).queryExecution.explainString(FormattedMode)
-        catch { case e: Throwable => fail(s"${q.name} failed to plan: $e") }
+    val offenders = RegistryPass(spark, dir).flatMap { q =>
+      val plan = q.plan.fold(e => fail(s"${q.name} failed to plan: $e"), identity)
       if (plan.contains("CartesianProduct") && !allowed(q.name)) Some(q.name)
       else None
     }

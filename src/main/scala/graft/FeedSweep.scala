@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Cdc, Dedup, Sampling, TextAnalysis}
+import graft.operators.{Caching, Cdc, Dedup, Sampling, TextAnalysis}
 
 /** Feed-fraction sweep for the incremental-manifest capstone — the
   * measured form of the freshness family's core claim (a small feed
@@ -47,41 +47,42 @@ object FeedSweep {
           .select("doc_id")
           .join(docs.select("doc_id", "lang"), Seq("doc_id")),
         "doc_id", splits).select("doc_id", "lang", "split")
-    val points = mods.map { m =>
+    // one scope per sweep point: its feed checkpoint outlives the timings
+    val points = mods.map(m => Caching.scoped {
       val (boot, feed0) = PipelineQueries.incrementalDocFeedMod(docs, m)
-      val feed = feed0.localCheckpoint(true) // feed build is not the fold
+      val feed = Caching.localCheckpoint(feed0) // feed build is not the fold
       val bootKept = boot.join(
         battery(boot).filter(col("keep")).select("doc_id"), Seq("doc_id"))
       // prebuild the bootstrap state to parquet — the stream homes'
       // flat-lineage shape; UNTIMED (the one-time cost, not the tick)
       val stDir = java.nio.file.Files
         .createTempDirectory(s"graft_feedsweep_$m").toString
-      val st0 = Dedup.clustersBootstrap(bootKept, "doc_id", "text")
-      st0.sigs.write.parquet(s"$stDir/sig")
-      st0.pairs.write.parquet(s"$stDir/pairs")
-      st0.clusters.write.parquet(s"$stDir/cl")
-      spark.catalog.clearCache()
+      Caching.scoped {
+        val st0 = Dedup.clustersBootstrap(bootKept, "doc_id", "text")
+        st0.sigs.write.parquet(s"$stDir/sig")
+        st0.pairs.write.parquet(s"$stDir/pairs")
+        st0.clusters.write.parquet(s"$stDir/cl")
+      }
       val feedRows = feed.count()
       val sec = Harness.time(iters) {
-        val prev = Dedup.ClusterIndexState(
-          spark.read.parquet(s"$stDir/sig"),
-          spark.read.parquet(s"$stDir/pairs"),
-          spark.read.parquet(s"$stDir/cl"))
-        // eager gate checkpoint — the registered capstones' (and the
-        // streaming twin's) shape, so the sweep times the same fold
-        val gated = Cdc.gateFeed(
-          feed.select("seq", "op", "doc_id", "text"),
-          "doc_id", "seq", "op")(battery)
-          .localCheckpoint(true)
-        try Harness.exec(manifest(Dedup.clustersMaintain(prev, gated,
-          "doc_id", "text", "seq", "op").clusters))
-        finally graft.operators.Caching.freeLocalCheckpoint(gated)
+        Harness.exec {
+          val prev = Dedup.ClusterIndexState(
+            spark.read.parquet(s"$stDir/sig"),
+            spark.read.parquet(s"$stDir/pairs"),
+            spark.read.parquet(s"$stDir/cl"))
+          // eager gate checkpoint — the registered capstones' (and the
+          // streaming twin's) shape, so the sweep times the same fold
+          val gated = Caching.localCheckpoint(Cdc.gateFeed(
+            feed.select("seq", "op", "doc_id", "text"),
+            "doc_id", "seq", "op")(battery))
+          manifest(Dedup.clustersMaintain(prev, gated,
+            "doc_id", "text", "seq", "op").clusters)
+        }
       }
-      graft.operators.Caching.freeLocalCheckpoint(feed)
       Harness.rmTree(stDir)
       println(f"[feed-sweep] mod $m%4d: $feedRows%6d feed rows, $sec%.3f s")
       (m, feedRows, sec)
-    }
+    })
     // the feed-agnostic reference: filter → bootstrap → keepers →
     // splits over the m = 150 merged corpus from scratch
     val merged = docs.filter(col("doc_id") % 150 =!= 3)

@@ -47,26 +47,15 @@ object Harness {
   }
 
   /** Materializes `df` through the noop sink (a bare `count()` would let
-    * Catalyst prune the projections being measured) and returns the
-    * storage bytes in use right after it (operator-internal persists +
-    * checkpoint blocks — what the cache clear is about to release). */
-  def exec(df: => DataFrame): Long =
-    try {
-      df.write.format("noop").mode("overwrite").save()
-      SparkSession.active.sparkContext.getExecutorMemoryStatus.values
-        .map { case (max, remaining) => max - remaining }.sum
-    } finally {
-      // Caching contract (operators/Caching.scala): operator-internal
-      // persists are released by the CALLER after its terminal action.
-      // Without this, ~85 execs (17 headliners × warmup+pre-exec+iters)
-      // each pin fresh copies of signature/bucket frames — storage
-      // pressure mounts over the run and late iterations degrade into
-      // eviction/GC storms (BENCH_r09: dedup_minhash 1.8→4.8→26.3 s
-      // across its own three iterations). In a finally block so a
-      // deterministically-failing query cannot leak its persists into
-      // every subsequent iteration either.
-      SparkSession.active.catalog.clearCache()
-    }
+    * Catalyst prune the projections being measured) in one query scope
+    * ([[operators.Caching.scoped]]), and returns the storage bytes in use
+    * right after it: the operator-internal persists and checkpoint
+    * blocks the scope is about to release. */
+  def exec(df: => DataFrame): Long = operators.Caching.scoped {
+    df.write.format("noop").mode("overwrite").save()
+    SparkSession.active.sparkContext.getExecutorMemoryStatus.values
+      .map { case (max, remaining) => max - remaining }.sum
+  }
 
   /** Best-of-`iters` wall seconds of `body` after one untimed warm-up
     * run (Bench discipline). */

@@ -5,7 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, DecimalType, DoubleType, IntegerType, LongType, StringType}
 
-import graft.operators.{Dedup, Quantization, Sampling, Similarity, TemporalJoins, TextAnalysis}
+import graft.operators.{Caching, Dedup, Quantization, Sampling, Similarity,
+  TemporalJoins, TextAnalysis}
 import Queries.{Q, t}
 
 /** LLM-data-pipeline extension queries over the `documents`,
@@ -2293,11 +2294,11 @@ object PipelineQueries {
         // classify once (r21): checkpoint the keep-id list so the
         // battery pass is not re-run by the pair search and the CC
         // vertex set (see the capstone's bootKeepIds note)
-        val keepIds = TextAnalysis.filterBattery(docs,
+        val keepIds = Caching.localCheckpoint(TextAnalysis.filterBattery(docs,
               minTokens = 30, maxTokens = 100000, minAvgLen = 3.0,
               maxAvgLen = 10.0, minAlphaRatio = 0.8, minStopwordHits = 2,
               minDistinctRatio = 0.3)
-            .filter(col("keep")).select("doc_id").localCheckpoint(true)
+            .filter(col("keep")).select("doc_id"))
         val kept = docs.join(keepIds, Seq("doc_id"))
         val pairs = Dedup.minhashNearDuplicates(kept, "doc_id", "text",
           threshold = 0.7)
@@ -2334,8 +2335,8 @@ object PipelineQueries {
         // tokenizer pass over the corpus is not re-run by each
         // bootstrap-state consumer (it measured twice per run: the
         // signature build and the CC vertex set)
-        val bootKeepIds = battery(boot).filter(col("keep"))
-          .select("doc_id").localCheckpoint(true)
+        val bootKeepIds = Caching.localCheckpoint(
+          battery(boot).filter(col("keep")).select("doc_id"))
         val bootKept = boot.join(bootKeepIds, Seq("doc_id"))
         // eager checkpoint of the gated feed (r21, guide §1.4/§3.3 —
         // the streaming twin's shape): the maintenance fold runs ~150
@@ -2343,10 +2344,9 @@ object PipelineQueries {
         // the spread → feed-union → battery-classify subtree (measured
         // ~10 s of driver gaps at sf0.1); the checkpoint is
         // feed-bounded and cuts that analysis to the one materialization
-        val gated = operators.Cdc.gateFeed(
+        val gated = Caching.localCheckpoint(operators.Cdc.gateFeed(
           feed.select("seq", "op", "doc_id", "text"),
-          "doc_id", "seq", "op")(battery)
-          .localCheckpoint(true)
+          "doc_id", "seq", "op")(battery))
         val st = Dedup.clustersMaintain(
           Dedup.clustersBootstrap(bootKept, "doc_id", "text",
             checkpoint = true),
@@ -2385,8 +2385,8 @@ object PipelineQueries {
         // tokenizer pass over the corpus is not re-run by each
         // bootstrap-state consumer (it measured twice per run: the
         // signature build and the CC vertex set)
-        val bootKeepIds = battery(boot).filter(col("keep"))
-          .select("doc_id").localCheckpoint(true)
+        val bootKeepIds = Caching.localCheckpoint(
+          battery(boot).filter(col("keep")).select("doc_id"))
         val bootKept = boot.join(bootKeepIds, Seq("doc_id"))
         // eager checkpoint of the gated feed (r21, guide §1.4/§3.3 —
         // the streaming twin's shape): the maintenance fold runs ~150
@@ -2394,10 +2394,9 @@ object PipelineQueries {
         // the spread → feed-union → battery-classify subtree (measured
         // ~10 s of driver gaps at sf0.1); the checkpoint is
         // feed-bounded and cuts that analysis to the one materialization
-        val gated = operators.Cdc.gateFeed(
+        val gated = Caching.localCheckpoint(operators.Cdc.gateFeed(
           feed.select("seq", "op", "doc_id", "text"),
-          "doc_id", "seq", "op")(battery)
-          .localCheckpoint(true)
+          "doc_id", "seq", "op")(battery))
         val st = Dedup.clustersMaintain(
           Dedup.clustersBootstrap(bootKept, "doc_id", "text",
             checkpoint = true),
@@ -2461,10 +2460,10 @@ object PipelineQueries {
         // the returned frame serves from executor blocks), then drop
         // the homes: every invocation otherwise leaves six parquet
         // state directories in /tmp
-        val out = streaming.ManifestStream.readManifest(s, root)
-          .select(col("id").as("doc_id"), col("lang"), col("split"))
-          .orderBy("doc_id")
-          .localCheckpoint(true)
+        val out = Caching.localCheckpoint(
+          streaming.ManifestStream.readManifest(s, root)
+            .select(col("id").as("doc_id"), col("lang"), col("split"))
+            .orderBy("doc_id"))
         Harness.rmTree(root)
         out
       },
@@ -3369,19 +3368,17 @@ object PipelineQueries {
     // next step's join and by its own count branch; without the persist
     // the union plan re-derives every upstream subtree and the corpus
     // is scanned six times instead of one type-pruned scan per step).
-    // Cache ownership per operators/Caching.scala: caller releases via
-    // clearCache after its terminal action, as Verify/Bench do.
     Q("ev_funnel_steps",
       (s, d) => {
         val e = sources.EventsTime.withEpochMicros(events(s, d))
           .select(col("user_id"), col("event_type"), col("ts_us"))
-        val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-        val v = e.filter(col("event_type") === "view")
-          .groupBy("user_id").agg(min("ts_us").as("t1")).persist(lvl)
-        val c = e.filter(col("event_type") === "click").join(v, "user_id")
-          .filter(col("ts_us") > col("t1") &&
-            col("ts_us") <= col("t1") + lit(86400000000L))
-          .groupBy("user_id").agg(min("ts_us").as("t2")).persist(lvl)
+        val v = Caching.persist(e.filter(col("event_type") === "view")
+          .groupBy("user_id").agg(min("ts_us").as("t1")))
+        val c = Caching.persist(
+          e.filter(col("event_type") === "click").join(v, "user_id")
+            .filter(col("ts_us") > col("t1") &&
+              col("ts_us") <= col("t1") + lit(86400000000L))
+            .groupBy("user_id").agg(min("ts_us").as("t2")))
         val p = e.filter(col("event_type") === "purchase").join(c, "user_id")
           .filter(col("ts_us") > col("t2") &&
             col("ts_us") <= col("t2") + lit(86400000000L))
@@ -5457,9 +5454,8 @@ object PipelineQueries {
     // SAME distinct frame under different aliases, and alias-renamed
     // subtrees defeat exchange reuse — unpersisted, the lineitem scan +
     // distinct shuffle ran twice per materialization
-    val li = operators.Caching.maybePersist(
-      t(s, d, "lineitem").select("l_orderkey", "l_partkey").distinct(),
-      persist = true)
+    val li = Caching.persist(
+      t(s, d, "lineitem").select("l_orderkey", "l_partkey").distinct())
     li.toDF("k", "pa").join(li.toDF("k", "pb"), Seq("k"))
       .filter(col("pa") < col("pb"))
       .groupBy("pa", "pb").agg(count(lit(1)).as("n_orders"))
@@ -5472,9 +5468,8 @@ object PipelineQueries {
     * it) — the weighted graph family's input. */
   private def copurchaseWeightedEdges(s: SparkSession, d: String): DataFrame = {
     // persisted — see the unweighted twin's note
-    val li = operators.Caching.maybePersist(
-      t(s, d, "lineitem").select("l_orderkey", "l_partkey").distinct(),
-      persist = true)
+    val li = Caching.persist(
+      t(s, d, "lineitem").select("l_orderkey", "l_partkey").distinct())
     li.toDF("k", "pa").join(li.toDF("k", "pb"), Seq("k"))
       .filter(col("pa") < col("pb"))
       .groupBy("pa", "pb").agg(count(lit(1)).as("w"))

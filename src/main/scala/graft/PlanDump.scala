@@ -26,12 +26,13 @@ object PlanDump {
     require(unknown.isEmpty, s"not in the registry: $unknown")
     new java.io.File(outDir).mkdirs()
     SparkEntry.all.filter(q => names(q.name)).foreach { q =>
-      val plan = q.run(spark, sfDir).queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+      val plan = operators.Caching.scoped {
+        q.run(spark, sfDir).queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+      }
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"$outDir/${q.name}_$suffix.txt"), plan)
       println(s"wrote $outDir/${q.name}_$suffix.txt")
-      spark.catalog.clearCache()
     }
     spark.stop()
   }

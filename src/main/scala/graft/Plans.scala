@@ -31,8 +31,10 @@ object Plans {
     sb ++= "WholeStageCodegen span coverage. AQE is enabled (plans show the\n"
     sb ++= "initial strategy; AQE may re-plan at runtime on real stats).\n"
     picked.foreach { q =>
-      val plan = q.run(spark, sfDir).queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+      val plan = operators.Caching.scoped {
+        q.run(spark, sfDir).queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+      }
       sb ++= s"\n## ${q.name}\n\n```\n$plan```\n"
     }
     java.nio.file.Files.writeString(java.nio.file.Paths.get("PLANS.md"), sb.toString)

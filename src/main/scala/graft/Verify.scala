@@ -15,23 +15,14 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try {
-        val df = fn(spark, sfDir)
-        df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-        // a row whose result is an eager localCheckpoint (the
-        // streaming-twin rows checkpoint off their temp state homes)
-        // holds RDD storage blocks clearCache below cannot touch —
-        // free them once the result is on disk (no-op for plain plans)
-        operators.Caching.freeLocalCheckpoint(df)
+      try operators.Caching.scoped {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
       }
       catch { case e: Throwable =>
         failures(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // Caching contract (operators/Caching.scala): release each
-      // query's operator-internal persists — 160+ back-to-back execs
-      // otherwise pin every signature/bucket frame at once
-      spark.catalog.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -226,24 +226,23 @@ object Cdc {
     * Output: (group, n, mn, mx). */
   def maintainMinMaxView(snapshot: DataFrame, changes: DataFrame,
       keyCol: String, seqCol: String, opCol: String, groupCol: String,
-      valueCol: String, persist: Boolean = true): DataFrame = {
+      valueCol: String): DataFrame = {
     // persisted (r21, guide §2.3): the previous view has two readers
     // (the extremal-hit derivation and the cheap-path outer join) and
     // the winner reduction four (retract join, non-delete adds — used
     // by addAgg AND the recompute members — and the members anti-join);
     // unpersisted, each re-runs its full upstream scan + shuffle.
     // prevAgg is O(groups), latest O(feed).
-    val prevAgg = Caching.maybePersist(
+    val prevAgg = Caching.persist(
       snapshot.groupBy(col(groupCol)).agg(
         count(lit(1)).as("__n0"),
-        min(col(valueCol)).as("__mn0"), max(col(valueCol)).as("__mx0")),
-      persist)
+        min(col(valueCol)).as("__mn0"), max(col(valueCol)).as("__mx0")))
     val ord = struct(col(seqCol), col(opCol))
-    val latest = Caching.maybePersist(
+    val latest = Caching.persist(
       changes.groupBy(col(keyCol)).agg(
         max_by(col(opCol), ord).as("__op"),
         max_by(col(groupCol), ord).as("__g"),
-        max_by(col(valueCol), ord).as("__v")), persist)
+        max_by(col(valueCol), ord).as("__v")))
     val snapKeyed = snapshot.select(col(keyCol),
       col(groupCol).as("__og"), col(valueCol).as("__ov"))
     // old images of every changed key present in the snapshot — each
@@ -316,22 +315,22 @@ object Cdc {
     * double — the TopKAggregate score contract). */
   def maintainTopKView(snapshot: DataFrame, changes: DataFrame,
       keyCol: String, seqCol: String, opCol: String, groupCol: String,
-      valueCol: String, k: Int, persist: Boolean = true): DataFrame = {
+      valueCol: String, k: Int): DataFrame = {
     import graft.functions.TopKAggregate.topK
     require(k >= 1, s"k must be >= 1, got $k")
     // persisted (r21): same multi-reader shape as [[maintainMinMaxView]]
     // — prevTop has two readers, the winner reduction four
-    val prevTop = Caching.maybePersist(
+    val prevTop = Caching.persist(
       snapshot.groupBy(col(groupCol)).agg(
         count(lit(1)).as("__n0"),
         topK(col(valueCol).cast("double"), col(keyCol), col(keyCol), k)
-          .as("__prev")), persist)
+          .as("__prev")))
     val ord = struct(col(seqCol), col(opCol))
-    val latest = Caching.maybePersist(
+    val latest = Caching.persist(
       changes.groupBy(col(keyCol)).agg(
         max_by(col(opCol), ord).as("__op"),
         max_by(col(groupCol), ord).as("__g"),
-        max_by(col(valueCol), ord).as("__v")), persist)
+        max_by(col(valueCol), ord).as("__v")))
     val snapKeyed = snapshot.select(col(keyCol),
       col(groupCol).as("__og"), col(valueCol).cast("double").as("__ov"))
     val retract = latest.join(snapKeyed, Seq(keyCol))
@@ -425,7 +424,7 @@ object Cdc {
   def maintainJoinView(viewPrev: DataFrame, aSnap: DataFrame,
       aChanges: DataFrame, aKey: String, bSnap: DataFrame,
       bChanges: DataFrame, joinCol: String, seqCol: String,
-      opCol: String, persist: Boolean = true,
+      opCol: String,
       broadcastKeyLimit: Long = 4000000L): DataFrame = {
     val aPayload = aSnap.columns.filter(_ != aKey) // includes joinCol
     val bPayload = bSnap.columns.filter(_ != joinCol)
@@ -437,20 +436,20 @@ object Cdc {
     // against the snapshot, and the non-delete union into the delta) —
     // unpersisted, every reader re-runs the change-feed scan + groupBy.
     // Both frames are feed-bounded.
-    val aLatest = Caching.maybePersist(
+    val aLatest = Caching.persist(
       aChanges.groupBy(col(aKey)).agg(
         max_by(col(opCol), ord).as("__op"),
-        aPayload.map(c => max_by(col(c), ord).as(c)): _*), persist)
-    val bLatest = Caching.maybePersist(
+        aPayload.map(c => max_by(col(c), ord).as(c)): _*))
+    val bLatest = Caching.persist(
       bChanges.groupBy(col(joinCol)).agg(
         max_by(col(opCol), ord).as("__op"),
-        bPayload.map(c => max_by(col(c), ord).as(c)): _*), persist)
-    val affected = Caching.maybePersist(
+        bPayload.map(c => max_by(col(c), ord).as(c)): _*))
+    val affected = Caching.persist(
       aSnap.join(aLatest.select(col(aKey)), Seq(aKey), "left_semi")
         .select(col(joinCol))
         .unionByName(aLatest.filter(col("__op") =!= "D").select(col(joinCol)))
         .unionByName(bLatest.select(col(joinCol)))
-        .distinct(), persist)
+        .distinct())
     // gate the hint on the measured count (also the materializing
     // action for the persisted frame): over the limit, the semi/anti
     // joins run shuffled — degraded, not OOM'd
@@ -529,11 +528,9 @@ object Cdc {
     * winner⋈flags join (the classify input and the join's left) plus
     * the raw-delete union branch — so an unpersisted reduction re-runs
     * the feed scan + groupBy three times per action. Feed-bounded by
-    * construction; a long-running per-batch caller passes its
-    * [[Caching.PersistTracker]] for deterministic release. */
+    * construction. */
   def gateFeed(changes: DataFrame, idCol: String, seqCol: String,
-      opCol: String, persist: Boolean = true,
-      tracker: Caching.PersistTracker = new Caching.PersistTracker)
+      opCol: String)
       (classify: DataFrame => DataFrame): DataFrame = {
     // the [[latestChanges]] reduction, inlined to RETAIN the winning
     // seq (latestChanges drops it — a maintainer folding the winner
@@ -552,7 +549,7 @@ object Cdc {
           "seq; an equal-seq pair would tie-break by op silently")))
         .isNull)
       .select(changes.columns.map(col(_)): _*)
-    val latestP = Caching.maybePersist(latest, persist, tracker)
+    val latestP = Caching.persist(latest)
     val iu = latestP.filter(col(opCol) =!= "D")
     // __classified marks "classify emitted a row for this id" so a
     // dropped winner (flag row absent) and a NULL keep VALUE (flag row

@@ -150,25 +150,6 @@ object Dedup {
     aggregate(zip_with(sigA, sigB, (x, y) => when(x === y, 1L).otherwise(0L)),
       lit(0L), _ + _).cast(DoubleType) / numHashes
 
-  /** Full near-duplicate pipeline: shingle → sign → LSH candidates →
-    * exact-jaccard verification on the true shingle sets. Returns
-    * (a, b, est_jaccard, jaccard) for pairs with jaccard ≥ threshold.
-    *
-    * The derived frames (shingle sets, signatures) are persisted: each
-    * is consumed 2-3× (candidate generation + both sides of the
-    * verification joins), and at 100 TB re-deriving them means
-    * re-scanning the raw text corpus — signatures are ~512 B/doc and
-    * shingle sets ~the tokenized text, both orders of magnitude smaller
-    * than the input, so MEMORY_AND_DISK is safe and the scan happens
-    * exactly once.
-    *
-    * Cache ownership: the returned frame is lazy, so this function has
-    * no safe point to unpersist — the cached blocks live until the
-    * session ends or the caller releases them. A pipeline invoking this
-    * repeatedly should either run its terminal action and then
-    * `spark.catalog.clearCache()` (or `unpersist` the blocks via the
-    * storage API), or pass `persist = false` and manage caching of its
-    * own, wider plan. Same contract for [[simhashNearPairs]]. */
   /** LSH recall against EXHAUSTIVE ground truth — the measurement a
     * pipeline runs on a bounded sample before trusting banded-LSH
     * settings at corpus scale (README's measured-recall protocol as a
@@ -192,12 +173,10 @@ object Dedup {
     * the self-join runs), alongside the `maxDocs` sample-size cap:
     * this is an EVAL on a bounded sample and fails loudly otherwise.
     * Shingles are derived ONCE — the found side reuses the same
-    * persisted sets via [[nearDuplicatesFromShingleSets]]. Cache
-    * ownership: same contract as [[minhashNearDuplicates]]. */
+    * persisted sets via [[nearDuplicatesFromShingleSets]]. */
   def lshRecallEval(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, p: MinHashParams = MinHashParams(),
-      maxDocs: Long = 100000L, maxCandPairs: Long = 100000000L,
-      persist: Boolean = true): DataFrame = {
+      maxDocs: Long = 100000L, maxCandPairs: Long = 100000000L): DataFrame = {
     require(threshold > 0.0,
       s"lshRecallEval: threshold must be > 0 (the shared-shingle " +
         s"exhaustiveness argument needs it), got $threshold")
@@ -210,8 +189,7 @@ object Dedup {
           lit(s" docs exceed maxDocs = $maxDocs — run the eval on a " +
             "bounded sample"))).isNull)
       .drop("__ndocs")
-    val sh = Caching.maybePersist(
-      shingleSets(guarded, idCol, textCol, p), persist)
+    val sh = Caching.persist(shingleSets(guarded, idCol, textCol, p))
     val inv = sh.select(col(idCol), explode(col("__sh")).as("__s"))
     // the actual cost quantity, asserted before the self-join pays it
     val cost = inv.groupBy("__s").agg(count(lit(1)).as("__df"))
@@ -227,15 +205,15 @@ object Dedup {
       .drop("__cand")
     val cand = invG.toDF("a", "__s").join(inv.toDF("b", "__s"), "__s")
       .filter(col("a") < col("b")).select("a", "b").distinct()
-    val truth = Caching.maybePersist(cand
+    val truth = Caching.persist(cand
       .join(sh.select(col(idCol).as("a"), col("__sh").as("sh_a")), "a")
       .join(sh.select(col(idCol).as("b"), col("__sh").as("sh_b")), "b")
       .filter(size(array_intersect(col("sh_a"), col("sh_b"))).cast(DoubleType) /
         size(array_union(col("sh_a"), col("sh_b"))) >= threshold)
-      .select("a", "b"), persist)
-    val found = Caching.maybePersist(
-      nearDuplicatesFromShingleSets(sh, idCol, threshold, p, persist)
-        .select("a", "b"), persist)
+      .select("a", "b"))
+    val found = Caching.persist(
+      nearDuplicatesFromShingleSets(sh, idCol, threshold, p)
+        .select("a", "b"))
     val hit = truth.join(found, Seq("a", "b"), "left_semi")
     val extra = found.join(truth, Seq("a", "b"), "left_anti")
     truth.agg(count(lit(1)).as("n_truth"))
@@ -248,11 +226,21 @@ object Dedup {
           .as("recall_permille"))
   }
 
+  /** Full near-duplicate pipeline: shingle → sign → LSH candidates →
+    * exact-jaccard verification on the true shingle sets. Returns
+    * (a, b, est_jaccard, jaccard) for pairs with jaccard ≥ threshold.
+    *
+    * The derived frames (shingle sets, signatures) are persisted: each
+    * is consumed 2-3× (candidate generation + both sides of the
+    * verification joins), and at 100 TB re-deriving them means
+    * re-scanning the raw text corpus — signatures are ~512 B/doc and
+    * shingle sets ~the tokenized text, both orders of magnitude smaller
+    * than the input, so MEMORY_AND_DISK is safe and the scan happens
+    * exactly once. */
   def minhashNearDuplicates(df: DataFrame, idCol: String, textCol: String,
-      threshold: Double, p: MinHashParams = MinHashParams(),
-      persist: Boolean = true): DataFrame = {
-    val sh = Caching.maybePersist(shingleSets(df, idCol, textCol, p), persist)
-    nearDuplicatesFromShingleSets(sh, idCol, threshold, p, persist)
+      threshold: Double, p: MinHashParams = MinHashParams()): DataFrame = {
+    val sh = Caching.persist(shingleSets(df, idCol, textCol, p))
+    nearDuplicatesFromShingleSets(sh, idCol, threshold, p)
   }
 
   /** The sign → candidates → verify pipeline from a precomputed
@@ -260,8 +248,8 @@ object Dedup {
     * [[lshRecallEval]] shingle the corpus ONCE for both its truth and
     * found sides instead of re-deriving the sets per branch. */
   private def nearDuplicatesFromShingleSets(sh: DataFrame, idCol: String,
-      threshold: Double, p: MinHashParams, persist: Boolean): DataFrame = {
-    val sigs = Caching.maybePersist(signaturesFromShingleSets(sh, idCol, p), persist)
+      threshold: Double, p: MinHashParams): DataFrame = {
+    val sigs = Caching.persist(signaturesFromShingleSets(sh, idCol, p))
     val cands = lshCandidates(sigs, idCol, p)
     val withEst = cands
       .join(sigs.select(col(idCol).as("a"), col("signature").as("sig_a")), "a")
@@ -302,9 +290,8 @@ object Dedup {
     * tables of ~512 B/row. */
   def screenAgainstIndex(batch: DataFrame, idCol: String, textCol: String,
       index: DataFrame, threshold: Double,
-      p: MinHashParams = MinHashParams(), persist: Boolean = true): DataFrame = {
-    val bs = Caching.maybePersist(
-      minhashSignatures(batch, idCol, textCol, p), persist)
+      p: MinHashParams = MinHashParams()): DataFrame = {
+    val bs = Caching.persist(minhashSignatures(batch, idCol, textCol, p))
     val bb = bandBuckets(bs, idCol, p)
       .select(col(idCol), col("band"), col("key"))
     val ib = bandBuckets(index, idCol, p)
@@ -358,9 +345,9 @@ object Dedup {
     * to cluster-size². Chunk-collision candidates scale D²/2^16 in the
     * number of distinct hashes D, not corpus size. */
   def simhashNearPairs(df: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3, chunks: Int = 4, persist: Boolean = true): DataFrame =
+      maxHamming: Int = 3, chunks: Int = 4): DataFrame =
     hammingNearPairs(simhashSignatures(df, idCol, textCol), idCol, "simhash",
-      maxHamming, chunks, persist)
+      maxHamming, chunks)
 
   /** Near-pairs by hamming distance over ANY precomputed 64-bit hash
     * column — the pigeonhole bucketing engine behind
@@ -370,14 +357,14 @@ object Dedup {
     * [[simhashNearPairs]] for the scale shape (distinct-hash candidate
     * generation, member expansion proportional to output). */
   def hammingNearPairs(sigs0: DataFrame, idCol: String, hashCol: String,
-      maxHamming: Int = 3, chunks: Int = 4, persist: Boolean = true): DataFrame = {
+      maxHamming: Int = 3, chunks: Int = 4): DataFrame = {
     require(maxHamming < chunks, "pigeonhole needs maxHamming < chunks")
     require(64 % chunks == 0, s"chunks must divide 64, got $chunks")
     val width = 64 / chunks
     val mask = (1L << width) - 1
     // consumed 3× (both member sides + distinct hashes): persist so the
     // upstream signature computation happens once (16 B/doc)
-    val sigs = Caching.maybePersist(sigs0, persist)
+    val sigs = Caching.persist(sigs0)
 
     // pairs inside an identical-hash cluster: hamming 0, no bucketing
     val m1 = sigs.select(col(hashCol).as("h"), col(idCol).as("a"))
@@ -429,15 +416,15 @@ object Dedup {
     * candidate generation changes. Radii below the chunk count
     * delegate to the plain pigeonhole (fewer keys, same buckets). */
   def hammingNearPairsMih(sigs0: DataFrame, idCol: String, hashCol: String,
-      maxHamming: Int = 7, chunks: Int = 4, persist: Boolean = true): DataFrame = {
+      maxHamming: Int = 7, chunks: Int = 4): DataFrame = {
     require(64 % chunks == 0, s"chunks must divide 64, got $chunks")
     if (maxHamming < chunks)
-      return hammingNearPairs(sigs0, idCol, hashCol, maxHamming, chunks, persist)
+      return hammingNearPairs(sigs0, idCol, hashCol, maxHamming, chunks)
     val width = 64 / chunks
     require(maxHamming / chunks <= 1,
       s"per-chunk radius ⌊$maxHamming/$chunks⌋ > 1 unsupported; raise chunks")
     val mask = (1L << width) - 1
-    val sigs = Caching.maybePersist(sigs0, persist)
+    val sigs = Caching.persist(sigs0)
 
     val m1 = sigs.select(col(hashCol).as("h"), col(idCol).as("a"))
     val m2 = sigs.select(col(hashCol).as("h"), col(idCol).as("b"))
@@ -502,9 +489,8 @@ object Dedup {
     * 1000 → 200 cut the sf0.1 run 23.6 s → seconds with identical
     * output on the corpus (common-English 5-grams dominate above it). */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 5, threshold: Double = 0.5, maxDf: Int = 200,
-      persist: Boolean = true): DataFrame =
-    sharedGramCounts(df, idCol, textCol, n, maxDf, persist)
+      n: Int = 5, threshold: Double = 0.5, maxDf: Int = 200): DataFrame =
+    sharedGramCounts(df, idCol, textCol, n, maxDf)
       .withColumn("jaccard", col("common").cast(DoubleType) /
         (col("sz_a") + col("sz_b") - col("common")))
       .filter(col("jaccard") >= threshold)
@@ -513,14 +499,13 @@ object Dedup {
   /** Shared-gram counts per candidate pair (a < b): (a, b, common,
     * sz_a, sz_b) — the inverted-index core of the n-gram family. */
   private def sharedGramCounts(df: DataFrame, idCol: String, textCol: String,
-      n: Int, maxDf: Int, persist: Boolean): DataFrame = {
+      n: Int, maxDf: Int): DataFrame = {
     // Gram arrays are materialized ONCE (an interpreted HOF transform —
     // the most expensive projection here) and persisted: sizes, the df
     // count, and both sides of the self-join all read the same frame
-    // instead of re-tokenizing the corpus up to 4×. Cache ownership as
-    // documented on minhashNearDuplicates.
-    val gsets = Caching.maybePersist(
-      df.select(col(idCol), charNgrams(col(textCol), n).as("__g")), persist)
+    // instead of re-tokenizing the corpus up to 4×.
+    val gsets = Caching.persist(
+      df.select(col(idCol), charNgrams(col(textCol), n).as("__g")))
     val grams = gsets.select(col(idCol), explode(col("__g")).as("g"))
     val sizes = gsets.select(col(idCol), size(col("__g")).as("sz"))
     // Document frequency via groupBy (map-side partial counts), NOT a
@@ -533,7 +518,7 @@ object Dedup {
     val stopGrams = grams.groupBy("g").agg(count(lit(1)).as("__df"))
       .filter(col("__df") > maxDf).select("g")
     // persisted: consumed by both sides of the self-join
-    val kept = Caching.maybePersist(grams.join(stopGrams, Seq("g"), "left_anti"), persist)
+    val kept = Caching.persist(grams.join(stopGrams, Seq("g"), "left_anti"))
     val shared = kept.select(col("g"), col(idCol).as("a"))
       .join(kept.select(col("g"), col(idCol).as("b")), "g")
       .filter(col("a") < col("b"))
@@ -554,10 +539,8 @@ object Dedup {
     * stop-gram-cap machinery — and the same "shared grams all stopped"
     * miss caveat — as [[ngramJaccardPairs]]. */
   def ngramContainmentPairs(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 5, threshold: Double = 0.8, maxDf: Int = 200,
-      persist: Boolean = true): DataFrame = {
-    val both = Caching.maybePersist(
-      sharedGramCounts(df, idCol, textCol, n, maxDf, persist), persist)
+      n: Int = 5, threshold: Double = 0.8, maxDf: Int = 200): DataFrame = {
+    val both = Caching.persist(sharedGramCounts(df, idCol, textCol, n, maxDf))
     both.select(col("a").as("inner_id"), col("b").as("outer_id"),
         (col("common").cast(DoubleType) / col("sz_a")).as("containment"))
       .unionAll(both.select(col("b").as("inner_id"), col("a").as("outer_id"),
@@ -656,13 +639,13 @@ object Dedup {
     * grows with threshold looseness (smaller t → longer prefixes), the
     * documented PPJoin trade. */
   def prefixJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-      threshold: Double, n: Int = 3, persist: Boolean = true): DataFrame = {
+      threshold: Double, n: Int = 3): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0,1], got $threshold")
-    val tsets = Caching.maybePersist(
+    val tsets = Caching.persist(
       df.select(col(idCol),
         shinglesFromTokens(graft.operators.TextAnalysis.tokens(col(textCol)), n).as("__s"))
-        .filter(size(col("__s")) > 0), persist)
+        .filter(size(col("__s")) > 0))
     val sh = tsets.select(col(idCol), explode(col("__s")).as("sh"))
     val freq = sh.groupBy("sh").agg(count(lit(1)).as("__df"))
     val prefixes = sh.join(freq, Seq("sh"))
@@ -707,9 +690,9 @@ object Dedup {
     * maxDf for exactness on small corpora. */
   def ngramContamination(corpus: DataFrame, benchmark: DataFrame,
       idCol: String, textCol: String, n: Int = 5, threshold: Double = 0.5,
-      maxDf: Int = 200, persist: Boolean = true): DataFrame = {
-    val cg = Caching.maybePersist(
-      corpus.select(col(idCol), charNgrams(col(textCol), n).as("__g")), persist)
+      maxDf: Int = 200): DataFrame = {
+    val cg = Caching.persist(
+      corpus.select(col(idCol), charNgrams(col(textCol), n).as("__g")))
     val bg = benchmark.select(col(idCol).as("bench_id"),
       charNgrams(col(textCol), n).as("__g"))
     val corpusGrams = cg.select(col(idCol), explode(col("__g")).as("g"))
@@ -769,10 +752,9 @@ object Dedup {
     * bits/gram; the 2^20 default covers ~100k grams at ~1% fpp). */
   def ngramContaminationBloom(corpus: DataFrame, benchmark: DataFrame,
       idCol: String, textCol: String, n: Int = 5, threshold: Double = 0.5,
-      maxDf: Int = 200, mBits: Int = 1 << 20, k: Int = 3,
-      persist: Boolean = true): DataFrame = {
-    val cg = Caching.maybePersist(
-      corpus.select(col(idCol), charNgrams(col(textCol), n).as("__g")), persist)
+      maxDf: Int = 200, mBits: Int = 1 << 20, k: Int = 3): DataFrame = {
+    val cg = Caching.persist(
+      corpus.select(col(idCol), charNgrams(col(textCol), n).as("__g")))
     val bg = benchmark.select(col(idCol).as("bench_id"),
       charNgrams(col(textCol), n).as("__g"))
     val words = RuntimeFilter.buildBloom(
@@ -819,16 +801,10 @@ object Dedup {
     * no collect, no driver-side graph. Throws if `maxIter` rounds
     * don't reach the fixpoint (silently-unmerged clusters would
     * corrupt a dedup downstream); 20 doubling rounds cover any
-    * realistic diameter (~10⁶).
-    *
-    * The rounds run on [[Rounds]]; the final round's checkpoint, which
-    * the returned frame reads, is registered with `tracker`, so a
-    * per-batch stream fold frees it with its scope. */
+    * realistic diameter (~10⁶). The rounds run on [[Rounds]]. */
   def connectedComponents(vertices: DataFrame, idCol: String,
       pairs: DataFrame, aCol: String = "a", bCol: String = "b",
-      maxIter: Int = 20,
-      tracker: Caching.PersistTracker = new Caching.PersistTracker)
-      : DataFrame = Rounds(vertices.sparkSession) { loop =>
+      maxIter: Int = 20): DataFrame = Rounds(vertices.sparkSession) { loop =>
     // both edge directions in ONE pass over `pairs` (the shared
     // [[Graph.symmetricEdges]] construction)
     val edges = loop.persist(Graph.symmetricEdges(pairs, aCol, bCol))
@@ -888,7 +864,6 @@ object Dedup {
     if (!ran.fixpoint) throw new IllegalStateException(
       s"connectedComponents did not reach a fixpoint in $maxIter rounds; " +
         "raise maxIter (non-converged labels would silently split clusters)")
-    tracker.addCheckpoint(ran.state)
     vertices.select(col(idCol))
       .join(ran.state.drop("__old").withColumnRenamed("__u", idCol),
         Seq(idCol), "left")
@@ -1008,14 +983,12 @@ object Dedup {
     * search ∪ the CC run's final join) — the streaming twin gets flat
     * plans for free from its parquet homes, this flag is the batch
     * path's equivalent. Values are unchanged (same frames, cut
-    * lineage); the blocks are freed by the session's ContextCleaner
-    * once the composed query's frames go out of scope, and each frame
-    * is O(corpus keys), not O(corpus payload). The checkpointed sigs
+    * lineage); the blocks belong to the query scope ([[Caching]]), and
+    * each frame is O(corpus keys), not O(corpus payload). The checkpointed sigs
     * frame replaces (not doubles) the persist — a checkpoint serves
     * repeat reads from its own blocks. */
   def clustersBootstrap(df: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3, chunks: Int = 4,
-      persist: Boolean = true, checkpoint: Boolean = false)
+      maxHamming: Int = 3, chunks: Int = 4, checkpoint: Boolean = false)
       : ClusterIndexState = {
     val sc = df.sparkSession.sparkContext
     val callerDesc = sc.getLocalProperty("spark.job.description")
@@ -1023,13 +996,13 @@ object Dedup {
       if (!checkpoint) frame
       else {
         sc.setJobDescription(s"bootstrap $label")
-        try frame.localCheckpoint(true)
+        try Caching.localCheckpoint(frame)
         finally sc.setJobDescription(callerDesc)
       }
     // consumed by the pair search AND docEdges' canon + star
     val sigs =
       if (checkpoint) flat(simhashSignatures(df, idCol, textCol), "sigs")
-      else Caching.maybePersist(simhashSignatures(df, idCol, textCol), persist)
+      else Caching.persist(simhashSignatures(df, idCol, textCol))
     val hashPairs = flat(hashNearPairs(sigs, "simhash", maxHamming, chunks),
       "pairs")
     val clusters = flat(connectedComponents(df.select(col(idCol)), idCol,
@@ -1167,39 +1140,30 @@ object Dedup {
     * corpus. */
   def clustersMaintain(prev: ClusterIndexState, changes: DataFrame,
       idCol: String, textCol: String, seqCol: String, opCol: String,
-      maxHamming: Int = 3, chunks: Int = 4, persist: Boolean = true,
-      tracker: Caching.PersistTracker = new Caching.PersistTracker)
-      : ClusterIndexState =
+      maxHamming: Int = 3, chunks: Int = 4): ClusterIndexState =
     clustersMaintainUpdate(prev, changes, idCol, textCol, seqCol, opCol,
-      maxHamming, chunks, persist, tracker).state
+      maxHamming, chunks).state
 
   /** [[clustersMaintain]] that also returns the per-home DELTAS (see
     * [[ClusterIndexDeltas]]) — same algebra, same full next state; the
     * deltas fall out of frames the fold already computes (the batch
     * winner reduction, the affected-hash pair churn, the affected
     * clusters' membership), so asking for them adds joins only over
-    * feed-bounded frames. The eager member/edge checkpoints are
-    * registered with `tracker` so a per-batch stream fold can free
-    * their blocks after its commits (a long-lived sink otherwise
-    * leaks one set per batch). */
+    * feed-bounded frames. */
   def clustersMaintainUpdate(prev: ClusterIndexState, changes: DataFrame,
       idCol: String, textCol: String, seqCol: String, opCol: String,
-      maxHamming: Int = 3, chunks: Int = 4, persist: Boolean = true,
-      tracker: Caching.PersistTracker = new Caching.PersistTracker)
-      : ClusterIndexUpdate = {
-    def persisted(df: DataFrame): DataFrame =
-      Caching.maybePersist(df, persist, tracker)
+      maxHamming: Int = 3, chunks: Int = 4): ClusterIndexUpdate = {
     // persisted: the batch reduction feeds changedKeys (four key
     // anti/semi joins + the touched union) and ups (sigs + members) —
     // six lazy consumers would re-run the groupBy over the feed each
-    val latest = persisted(Cdc.latestChanges(
+    val latest = Caching.persist(Cdc.latestChanges(
       changes.select(col(idCol), col(seqCol), col(opCol), col(textCol)),
       idCol, seqCol, opCol))
     val changedKeys = latest.select(col(idCol))
     val ups = latest.filter(col("__op") =!= "D")
       .select(col(idCol), col(textCol))
-    val upsSigs = persisted(simhashSignatures(ups, idCol, textCol))
-    val nextSigs = persisted(
+    val upsSigs = Caching.persist(simhashSignatures(ups, idCol, textCol))
+    val nextSigs = Caching.persist(
       prev.sigs.join(changedKeys, Seq(idCol), "left_anti")
         .unionByName(upsSigs))
     // the sig home's delta IS the winner reduction: upserts carry
@@ -1214,10 +1178,10 @@ object Dedup {
     // the carried-cluster anti-join, and the member semi-join — and in
     // the COMPOSED batch path (bootstrap ∘ maintain) each lazy read
     // would re-run the bootstrap's final labels join over the corpus
-    val prevClusters = persisted(prev.clusters)
+    val prevClusters = Caching.persist(prev.clusters)
     // affected hashes: a changed key's OLD hash (its group shrank or
     // died — one feed-bounded key join) plus every upsert's NEW hash
-    val affectedHashes = persisted(
+    val affectedHashes = Caching.persist(
       prev.sigs.join(changedKeys, Seq(idCol), "left_semi")
         .select(col("simhash").as("h"))
         .unionByName(upsSigs.select(col("simhash").as("h")))
@@ -1235,10 +1199,9 @@ object Dedup {
     val liveAffected = affectedHashes
       .join(nextSigs.select(col("simhash").as("h")), Seq("h"), "left_semi")
     // persisted: feeds nextPairs AND (twice) the touched-hash set
-    val freshPairs = persisted(
+    val freshPairs = Caching.persist(
       hashScreen(liveAffected, nextSigs, "simhash", maxHamming, chunks))
-    val nextPairs = persisted(
-      carriedPairs.unionByName(freshPairs))
+    val nextPairs = Caching.persist(carriedPairs.unionByName(freshPairs))
     // the pair home's delta: every stored pair touching an affected
     // hash that the screen did NOT re-derive is a delete; the screen's
     // fresh pairs are the upserts (a fresh pair that already existed
@@ -1273,7 +1236,7 @@ object Dedup {
       .distinct()
     // persisted: consumed by the carried-cluster anti-join AND the
     // member semi-join — one scan of the corpus-sized map, not two
-    val affected = persisted(
+    val affected = Caching.persist(
       prevClusters.join(touched, Seq(idCol), "left_semi")
         .select(col("cluster_id")).distinct())
     val carriedClusters = prevClusters
@@ -1306,7 +1269,7 @@ object Dedup {
     // checkpoint added an eager barrier for a frame this projection
     // reproduces exactly.
     val memberSigs = Caching.localCheckpoint(
-      nextSigs.join(memberIds, Seq(idCol), "left_semi"), tracker)
+      nextSigs.join(memberIds, Seq(idCol), "left_semi"))
     val members = memberSigs.select(col(idCol))
     val memberHashes = memberSigs.select(col("simhash")).distinct()
     val inducedHashPairs = nextPairs
@@ -1315,9 +1278,8 @@ object Dedup {
       .join(memberHashes.select(col("simhash").as("h_b")), Seq("h_b"),
         "left_semi")
     val inducedEdges = Caching.localCheckpoint(
-      docEdges(memberSigs, idCol, "simhash", inducedHashPairs), tracker)
-    val recomputed = connectedComponents(members, idCol, inducedEdges,
-      tracker = tracker)
+      docEdges(memberSigs, idCol, "simhash", inducedHashPairs))
+    val recomputed = connectedComponents(members, idCol, inducedEdges)
       .select(col(idCol), col("cluster_id"))
     // the cluster home's delta: the affected clusters' NEW membership
     // as upserts, their vanished members (deleted docs, and docs whose

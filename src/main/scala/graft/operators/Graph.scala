@@ -91,11 +91,10 @@ object Graph {
     *
     * Reference: /root/reference/sqlengine.py has no graph surface
     * (extension per the brief's quality-weighting family). */
-  def triangleCounts(pairs: DataFrame, aCol: String, bCol: String,
-      persist: Boolean = true): DataFrame = {
-    val p = (df: DataFrame) => Caching.maybePersist(df, persist)
-    val (deg, oriented) =
-      orientEdges(canonicalWeighted(pairs, aCol, bCol, None), p, p)
+  def triangleCounts(pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
+    val (deg, oriented) = orientEdges(
+      canonicalWeighted(pairs, aCol, bCol, None),
+      Caching.persist, Caching.persist)
     val perVertex = enumTriangles(oriented)
       .select(explode(array(col("s"), col("x"), col("y"))).as("id"))
       .groupBy("id").agg(count(lit(1)).as("n_tri"))
@@ -193,10 +192,10 @@ object Graph {
     * (multiplicity unchanged: the oriented frame holds exactly one
     * row per undirected edge). */
   def weightedTriangleCounts(pairs: DataFrame, aCol: String, bCol: String,
-      wCol: String, persist: Boolean = true): DataFrame = {
-    val p = (df: DataFrame) => Caching.maybePersist(df, persist)
-    val (deg, oriented) =
-      orientEdges(canonicalWeighted(pairs, aCol, bCol, Some(wCol)), p, p)
+      wCol: String): DataFrame = {
+    val (deg, oriented) = orientEdges(
+      canonicalWeighted(pairs, aCol, bCol, Some(wCol)),
+      Caching.persist, Caching.persist)
     val perVertex = enumTriangles(oriented)
       .select(explode(array(col("s"), col("x"), col("y"))).as("id"),
         col("__mw"))

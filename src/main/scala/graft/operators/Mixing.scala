@@ -118,13 +118,13 @@ object Mixing {
     * token t of the document for t ∈ [doc_from, doc_to) lands at
     * position seq_off + (t − doc_from) of sequence seq_id. */
   def packSpans(df: DataFrame, idCol: String, tokenCol: String,
-      seqLen: Long, buckets: Int = 256, persist: Boolean = true): DataFrame = {
+      seqLen: Long, buckets: Int = 256): DataFrame = {
     require(seqLen > 0, s"packSpans: seqLen must be > 0, got $seqLen")
     require(buckets >= 1 && (buckets & (buckets - 1)) == 0,
       s"packSpans: buckets must be a power of two (range-bucketing " +
         s"shifts the hash's top bits), got $buckets")
     val k = java.lang.Integer.numberOfTrailingZeros(buckets)
-    val base = Caching.maybePersist(
+    val base = Caching.persist(
       df.select(col(idCol), col(tokenCol).cast("long").as("__n"))
         .filter(col("__n") > 0)
         .withColumn("__hs", xxhash64(col(idCol)))
@@ -135,8 +135,7 @@ object Mixing {
           if (k == 0) lit(0L)
           else shiftrightunsigned(col("__hs"), 64 - k))
         // signed order of (hs XOR sign bit) == unsigned order of hs
-        .withColumn("__hu", col("__hs").bitwiseXOR(lit(Long.MinValue))),
-      persist)
+        .withColumn("__hu", col("__hs").bitwiseXOR(lit(Long.MinValue))))
     val wLoc = Window.partitionBy("__b")
       .orderBy(col("__hu").asc, col(idCol).asc)
       .rowsBetween(Window.unboundedPreceding, -1)

@@ -752,17 +752,16 @@ object Profiling {
     * 1-row aggregates. Output: (probe_permille, n, exact_q,
     * within_bound). */
   def approxQuantileEval(df: DataFrame, valueCol: Column,
-      probesPermille: Seq[Int], accuracy: Int = 1000,
-      persist: Boolean = true): DataFrame = {
+      probesPermille: Seq[Int], accuracy: Int = 1000): DataFrame = {
     require(probesPermille.nonEmpty &&
       probesPermille.forall(p => p > 0 && p < 1000),
       s"approxQuantileEval: probes must be in (0, 1000), got $probesPermille")
     require(accuracy >= 1,
       s"approxQuantileEval: accuracy must be >= 1, got $accuracy")
     val spark = df.sparkSession
-    val v = Caching.maybePersist(
+    val v = Caching.persist(
       df.select(valueCol.cast("double").as("__v"))
-        .filter(col("__v").isNotNull), persist)
+        .filter(col("__v").isNotNull))
     val fracs = probesPermille.map(p => s"${p / 1000.0}D").mkString(", ")
     // one row: sketch values, exact quantiles, count — bounded collect
     // (|probes| doubles), the windowedValueDrift literal-shipping idiom

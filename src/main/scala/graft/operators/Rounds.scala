@@ -29,7 +29,8 @@ import scala.collection.mutable.ArrayBuffer
   *    job, registered with the loop before that job runs.
   *  - RELEASE: a round's checkpoints are freed once the next round's
   *    have materialized. When the operator returns, every checkpoint
-  *    the loop made is freed except those its result reads, and every
+  *    the loop made is freed except those its result reads, which go
+  *    to the enclosing query scope ([[Caching]]), and every
   *    [[Loop.persist]] is unpersisted. When anything inside throws,
   *    every checkpoint and persist is released before the exception
   *    propagates.
@@ -73,7 +74,7 @@ private[graft] object Rounds {
     val loop = new Loop(spark.sparkContext)
     try {
       val out = body(loop)
-      loop.freeUnread(out)
+      loop.handOver(out)
       out
     } catch {
       case t: Throwable => loop.freeAll(); throw t
@@ -148,13 +149,14 @@ private[graft] object Rounds {
     private def free(ckpts: Iterable[DataFrame]): Unit =
       ckpts.toList.foreach { c => Caching.freeLocalCheckpoint(c); drop(live, c) }
 
-    private[Rounds] def freeUnread(out: DataFrame): Unit = {
+    private[Rounds] def handOver(out: DataFrame): Unit = {
       val read = out.queryExecution.analyzed
         .collect { case lr: LogicalRDD => lr.rdd.id }.toSet
       free(live.filterNot(_.queryExecution.logical match {
         case lr: LogicalRDD => read(lr.rdd.id)
         case _ => false
       }))
+      live.foreach(Caching.owner.addCheckpoint)
     }
 
     private[Rounds] def freeAll(): Unit = free(live)

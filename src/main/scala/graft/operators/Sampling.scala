@@ -166,11 +166,10 @@ object Sampling {
     * histogram broadcast + one explode scan) is the part that carries.
     */
   def importanceResample(df: DataFrame, idCol: String, textCol: String,
-      isTarget: Column, k: Int, buckets: Int = 64,
-      persist: Boolean = true): DataFrame = {
+      isTarget: Column, k: Int, buckets: Int = 64): DataFrame = {
     require(buckets >= 2 && Integer.bitCount(buckets) == 1,
       s"buckets must be a power of two, got $buckets")
-    val toks = Caching.maybePersist(
+    val toks = Caching.persist(
       df.select(col(idCol), isTarget.as("__tgt"),
           explode(TextAnalysis.tokens(col(textCol))).as("__tok"))
         // bucket on the 8-char token PREFIX: the DuckDB oracle's staged
@@ -181,7 +180,7 @@ object Sampling {
         // histogram is just as valid a hashed feature space)
         .withColumn("__b",
           pmod(xxhash64(substring(col("__tok"), 1, 8)), lit(buckets.toLong)))
-        .select(col(idCol), col("__tgt"), col("__b")), persist)
+        .select(col(idCol), col("__tgt"), col("__b")))
     val hist = toks.groupBy("__b").agg(
       count(lit(1)).as("__sc"),
       sum(when(col("__tgt"), 1L).otherwise(0L)).as("__tc"))

@@ -421,8 +421,7 @@ object Similarity {
   def cosinePairs(df: DataFrame, idCol: String, vecCol: String,
       threshold: Double, bands: Int = 8, planesPerBand: Int = 8,
       dim: Int = 64, seed: Long = 42L, maxBucket: Long = 10000L,
-      planeGen: (Int, Int, Long) => Seq[Seq[Double]] = randomPlanes,
-      persist: Boolean = true): DataFrame = {
+      planeGen: (Int, Int, Long) => Seq[Seq[Double]] = randomPlanes): DataFrame = {
     val v = df.select(col(idCol), asDouble(col(vecCol)).as("v"))
     val bandKeys = array((0 until bands).map { r =>
       val ps = planeGen(planesPerBand, dim, seed + r.toLong * planesPerBand * dim)
@@ -432,11 +431,10 @@ object Similarity {
     // BOTH self-join sides; without the cache the bands×planes
     // hyperplane dots and the (interpreted-HOF) double cast re-run up
     // to 4× over the corpus. ~bands× the vector data in cache — cheap
-    // next to re-scanning. Cache ownership as documented on
-    // Dedup.minhashNearDuplicates.
+    // next to re-scanning.
     val buckets0 = v.select(col(idCol), col("v"), explode(bandKeys).as("bk"))
       .select(col(idCol), col("v"), col("bk.band").as("band"), col("bk.key").as("key"))
-    val buckets = Caching.maybePersist(buckets0, persist)
+    val buckets = Caching.persist(buckets0)
     val keptBuckets = buckets.groupBy("band", "key")
       .agg(count(lit(1)).as("__n"))
       .filter(col("__n") <= maxBucket).select("band", "key")
@@ -466,10 +464,9 @@ object Similarity {
       threshold: Double, maxDegree: Long, bands: Int = 8,
       planesPerBand: Int = 8, dim: Int = 64, seed: Long = 42L,
       maxBucket: Long = 10000L,
-      planeGen: (Int, Int, Long) => Seq[Seq[Double]] = randomPlanes,
-      persist: Boolean = true): DataFrame = {
+      planeGen: (Int, Int, Long) => Seq[Seq[Double]] = randomPlanes): DataFrame = {
     val pairs = cosinePairs(df, idCol, vecCol, threshold, bands,
-      planesPerBand, dim, seed, maxBucket, planeGen, persist)
+      planesPerBand, dim, seed, maxBucket, planeGen)
     val deg = pairs.select(col("a").as(idCol))
       .unionAll(pairs.select(col("b").as(idCol)))
       .groupBy(idCol).agg(count(lit(1)).as("degree"))
@@ -515,10 +512,9 @@ object Similarity {
     * emb_srp_hamming query before trusting a threshold at scale.
     * Output: (a, b, hamming). */
   def srpNearPairs(df: DataFrame, idCol: String, vecCol: String,
-      maxHamming: Int = 7, dim: Int = 64, seed: Long = 300000L,
-      persist: Boolean = true): DataFrame =
+      maxHamming: Int = 7, dim: Int = 64, seed: Long = 300000L): DataFrame =
     Dedup.hammingNearPairsMih(srpSketch(df, idCol, vecCol, 64, dim, seed),
-      idCol, "sketch", maxHamming, chunks = 4, persist = persist)
+      idCol, "sketch", maxHamming, chunks = 4)
 
   /** Exact second-moment (gram) matrix of an embedding column — the
     * input to corpus-level PCA/whitening (SemDeDup and most embedding
@@ -936,8 +932,8 @@ object Similarity {
     * Scale shape: each round is ONE map-only scan of the corpus (the
     * new center rides along as a literal array — no join, no
     * shuffle) plus a TakeOrdered(1) reduction; the running min-
-    * distance column is materialized each round (eager
-    * localCheckpoint, previous round freed), so round r really costs
+    * distance column is materialized each round (a [[Rounds]]
+    * checkpoint, previous round freed), so round r really costs
     * one NEW dot product per point — O(n·k) total, with O(1)-deep
     * lineage however large k grows. Driver state is k rows (the
     * selected centers) — bounded by construction.
@@ -956,10 +952,10 @@ object Similarity {
       s"kCenterSelect: $idCol must be LONG (the greedy rounds carry " +
         s"ids driver-side as longs), got ${df.schema(idCol).dataType}")
     val spark = df.sparkSession
-    val v = df.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-      .withColumn("xx", normSq(col("v")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Rounds(spark) { loop =>
+      val v = loop.persist(df.select(col(idCol).as("id"),
+          asDouble(col(vecCol)).as("v"))
+        .withColumn("xx", normSq(col("v"))))
       // xx − 2.0·dot(x, c) + cc, with cc folded driver-side in the
       // same left-to-right order as ArrayDotProduct (bit-equal)
       def d2(c: Seq[Double]): Column = {
@@ -974,28 +970,23 @@ object Similarity {
       val seed = seedRows.head
       val selected = scala.collection.mutable.ArrayBuffer(
         (1L, seed.getLong(0), 0.0))
-      // the running min-distance column is MATERIALIZED each round
-      // (eager localCheckpoint, previous round's blocks freed) —
+      // the running min-distance column is MATERIALIZED each round —
       // chained least(..) expressions would re-evaluate every prior
       // center's dot product on each round's argmax action, turning
-      // the claimed O(n·k) into O(n·k²)
-      var cur = v.withColumn("d", d2(seed.getSeq[Double](1)))
-        .localCheckpoint(true)
-      var r = 2
-      while (r <= k) {
+      // the claimed O(n·k) into O(n·k²); the last pick needs no
+      // further distance column
+      loop.rounds("kCenterSelect", k - 1,
+          loop.checkpoint(v.withColumn("d", d2(seed.getSeq[Double](1)))))(
+          Rounds.never) { (cur, i) =>
         val pick = cur.orderBy(col("d").desc, col("id").asc).limit(1)
           .select("id", "v", "d").collect().head
-        selected += ((r.toLong, pick.getLong(0), pick.getDouble(2)))
-        val prev = cur
-        cur = cur.withColumn("d",
-          least(col("d"), d2(pick.getSeq[Double](1))))
-          .localCheckpoint(true)
-        Caching.freeLocalCheckpoint(prev)
-        r += 1
+        selected += ((i + 1L, pick.getLong(0), pick.getDouble(2)))
+        if (i == k - 1) cur
+        else loop.checkpoint(cur.withColumn("d",
+          least(col("d"), d2(pick.getSeq[Double](1)))))
       }
-      Caching.freeLocalCheckpoint(cur)
       import spark.implicits._
       selected.toSeq.toDF("sel_round", "vec_id", "dist2")
-    } finally v.unpersist()
+    }
   }
 }

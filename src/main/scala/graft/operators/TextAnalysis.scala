@@ -361,8 +361,8 @@ object TextAnalysis {
     * ("aaaa" + (a,a) → "{aa}{aa}"). See [[bpeTrainWithRounds]] for
     * the `batch` contract. */
   def bpeTrain(df: DataFrame, textCol: String, merges: Int,
-      persist: Boolean = true, batch: Int = 1): DataFrame =
-    bpeTrainWithRounds(df, textCol, merges, persist, batch)._1
+      batch: Int = 1): DataFrame =
+    bpeTrainWithRounds(df, textCol, merges, batch)._1
 
   /** [[bpeTrain]] plus the number of count→select→rewrite ROUNDS it
     * ran — the cost driver a caller sizing a tokenizer fit cares
@@ -388,7 +388,7 @@ object TextAnalysis {
     * promoted a new pair; TextAnalysisSpec pins both the equivalence
     * on a disjoint-pair corpus and the ≤-rounds batching win. */
   def bpeTrainWithRounds(df: DataFrame, textCol: String, merges: Int,
-      persist: Boolean = true, batch: Int = 1): (DataFrame, Int) = {
+      batch: Int = 1): (DataFrame, Int) = {
     val spark = df.sparkSession
     import spark.implicits._
     require(merges >= 1, s"merges must be positive, got $merges")
@@ -410,7 +410,7 @@ object TextAnalysis {
     var prevCached: DataFrame = null
     while (learned < merges && !exhausted) {
       val take = math.min(batch, merges - learned)
-      val cached = Caching.maybePersist(words, persist)
+      val cached = Caching.persist(words)
       // over-collect 4× the batch (bounded driver state): candidates
       // skipped for symbol overlap still leave enough to fill the
       // round in the common case; anything beyond waits a round
@@ -669,10 +669,9 @@ object TextAnalysis {
     * self-join rounds (a 1-row bounded driver agg picks the horizon)
     * instead of the round-17 O(max word length) cursor loop: a
     * pathological 300-char token is 9 rounds, not 300 jobs. Each
-    * round is one equi-join on the grid with per-round
-    * localCheckpoint + freeing (the [[graft.operators.Graph
-    * .pageRank]] lineage discipline); steps saturate at word end, so
-    * the final table read at position 0 IS the per-word token count.
+    * round is one equi-join on the grid, checkpointed on [[Rounds]];
+    * steps saturate at word end, so the final table read at position 0
+    * IS the per-word token count.
     * The per-document rollup joins words to their counts — one
     * shuffle on the word key, partial-aggregated. */
   def wordpieceTokenCounts(df: DataFrame, idCol: String, textCol: String,
@@ -731,32 +730,30 @@ object TextAnalysis {
     // steps). After ⌈log₂ maxLen⌉ squarings 2^i ≥ maxLen ≥ every
     // word's jump count, so the row at position 0 carries the word's
     // exact total token count.
-    var tbl = jump
-      .select(col("__w"), col("__len"), col("__pos"), col("__next"),
-        lit(1L).as("__steps"))
-      .localCheckpoint(true)
-    var span = 1L
-    while (span < maxLen) {
-      val prev = tbl
-      tbl = prev.as("a")
-        .join(prev.as("b").select(col("__w").as("__bw"),
-            col("__pos").as("__bpos"), col("__next").as("__bnext"),
-            col("__steps").as("__bsteps")),
-          col("a.__w") === col("__bw") && col("a.__next") === col("__bpos"),
-          "left")
-        .select(col("a.__w").as("__w"), col("a.__len").as("__len"),
-          col("a.__pos").as("__pos"),
-          coalesce(col("__bnext"), col("a.__next")).as("__next"),
-          (col("a.__steps") + coalesce(col("__bsteps"), lit(0L)))
-            .as("__steps"))
-        .localCheckpoint(true)
-      graft.operators.Caching.freeLocalCheckpoint(prev)
-      span *= 2
+    val squarings = Iterator.iterate(1L)(_ * 2).takeWhile(_ < maxLen).size
+    Rounds(df.sparkSession) { loop =>
+      val seed = loop.checkpoint(jump
+        .select(col("__w"), col("__len"), col("__pos"), col("__next"),
+          lit(1L).as("__steps")))
+      val tbl = loop.rounds("wordpieceTokenCounts", squarings, seed)(
+          Rounds.never) { (prev, _) =>
+        loop.checkpoint(prev.as("a")
+          .join(prev.as("b").select(col("__w").as("__bw"),
+              col("__pos").as("__bpos"), col("__next").as("__bnext"),
+              col("__steps").as("__bsteps")),
+            col("a.__w") === col("__bw") && col("a.__next") === col("__bpos"),
+            "left")
+          .select(col("a.__w").as("__w"), col("a.__len").as("__len"),
+            col("a.__pos").as("__pos"),
+            coalesce(col("__bnext"), col("a.__next")).as("__next"),
+            (col("a.__steps") + coalesce(col("__bsteps"), lit(0L)))
+              .as("__steps")))
+      }.state
+      val counts = tbl.filter(col("__pos") === 0)
+        .select(col("__w"), col("__steps").as("__cnt"))
+      words.join(counts, Seq("__w"))
+        .groupBy(col(idCol)).agg(sum(col("__cnt")).as("n_wp_tokens"))
     }
-    val counts = tbl.filter(col("__pos") === 0)
-      .select(col("__w"), col("__steps").as("__cnt"))
-    words.join(counts, Seq("__w"))
-      .groupBy(col(idCol)).agg(sum(col("__cnt")).as("n_wp_tokens"))
   }
 
   /** The ExactSubstr EDIT step (Lee et al. '21 §4.1's ExactSubstrDedup
@@ -784,8 +781,7 @@ object TextAnalysis {
     * document was duplicated mass (the row survives so the caller
     * sees what was dropped — the segmentDedup contract). */
   def removeDuplicatedSpans(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, minSpanTokens: Int = 5,
-      persist: Boolean = true): DataFrame = {
+      n: Int = 3, minSpanTokens: Int = 5): DataFrame = {
     require(minSpanTokens >= n,
       s"minSpanTokens=$minSpanTokens must be >= the window width n=$n " +
         "(no span shorter than one window exists)")
@@ -794,9 +790,9 @@ object TextAnalysis {
     // meant three tokenizer passes over the raw corpus (r20; the
     // cached frame is ~the tokenized text, the minhashNearDuplicates
     // shingle-set persist contract)
-    val toks = Caching.maybePersist(df
+    val toks = Caching.persist(df
       .select(col(idCol), tokens(col(textCol)).as("__toks"))
-      .filter(size(col("__toks")) > 0), persist)
+      .filter(size(col("__toks")) > 0))
     val pos = toks.select(col(idCol),
       posexplode(col("__toks")).as(Seq("__p", "__tok")))
     // qualifying spans → covered positions [start, start+len)
@@ -1042,15 +1038,14 @@ object TextAnalysis {
     * maintainable under streaming update. At 100 TB the only
     * corpus-sized stages are the token explode and one groupBy. */
   def cmsTokenCounts(df: DataFrame, textCol: String,
-      depth: Int = 4, width: Int = 16, persist: Boolean = true): DataFrame = {
+      depth: Int = 4, width: Int = 16): DataFrame = {
     require(depth >= 1 && width >= 2, s"bad sketch shape $depth x $width")
     // the bucket frame feeds BOTH the sketch build and the estimate
     // probe; persisting it (vocab-sized × depth, bounded by vocabulary
     // not corpus) keeps the corpus-sized explode+groupBy to ONE scan
-    val buckets = Caching.maybePersist(
+    val buckets = Caching.persist(
       cmsBucketed(df.select(explode(tokens(col(textCol))).as("token"))
-        .groupBy("token").agg(count(lit(1)).as("cnt")), depth, width),
-      persist)
+        .groupBy("token").agg(count(lit(1)).as("cnt")), depth, width))
     val sketch = buckets.groupBy("__r", "__bucket").agg(sum("cnt").as("__tot"))
     buckets.join(sketch, Seq("__r", "__bucket"))
       .groupBy("token", "cnt").agg(min("__tot").as("est"))
@@ -1153,12 +1148,11 @@ object TextAnalysis {
     * both sides, so it is persisted under the [[Caching]] ownership
     * contract. */
   def corpusFrequency(df: DataFrame, idCol: String, textCol: String,
-      rareMax: Long = 2L, persist: Boolean = true): DataFrame = {
-    val tf = Caching.maybePersist(
+      rareMax: Long = 2L): DataFrame = {
+    val tf = Caching.persist(
       df.select(col(idCol), explode(tokens(col(textCol))).as("__tok"))
         .groupBy(col(idCol), col("__tok"))
-        .agg(count(lit(1)).as("__tf")),
-      persist)
+        .agg(count(lit(1)).as("__tf")))
     val vocab = tf.groupBy(col("__tok")).agg(sum(col("__tf")).as("__cnt"))
     // tf·cnt widens to DECIMAL(38,0) before multiply and sum: cnt is a
     // CORPUS count (≈10¹³ for "the" at 100 TB), so Σ tf·cnt per doc
@@ -1200,17 +1194,15 @@ object TextAnalysis {
     * equi-join back. Documents with < 2 tokens have no bigram and are
     * absent by definition. Output: (idCol, n_bigrams,
     * sum_cond_micro, mean_cond_micro). */
-  def bigramLmScore(df: DataFrame, idCol: String, textCol: String,
-      persist: Boolean = true): DataFrame = {
-    val tf = Caching.maybePersist(
+  def bigramLmScore(df: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val tf = Caching.persist(
       df.select(col(idCol), tokens(col(textCol)).as("__toks"))
         .filter(size(col("__toks")) >= 2)
         .select(col(idCol), explode(
           expr("transform(sequence(1, size(__toks) - 1), " +
             "i -> struct(__toks[i - 1] AS w1, __toks[i] AS w2))")).as("__b"))
         .groupBy(col(idCol), col("__b.w1").as("__w1"), col("__b.w2").as("__w2"))
-        .agg(count(lit(1)).as("__tf")),
-      persist)
+        .agg(count(lit(1)).as("__tf")))
     val c2 = tf.groupBy(col("__w1"), col("__w2")).agg(sum(col("__tf")).as("__c2"))
     val c1 = c2.groupBy(col("__w1")).agg(sum(col("__c2")).as("__c1"))
     val q = c2.join(c1, "__w1")

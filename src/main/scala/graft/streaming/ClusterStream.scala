@@ -73,10 +73,8 @@ object ClusterStream {
     def carried(home: String, empty: DataFrame, keys: Seq[String]) =
       DeltaStore.stateSoFar(s.spark, s"$rootDir/$home", s.id, empty, keys)
     Dedup.ClusterIndexState(
-      Caching.maybePersist(carried("sig", emptySigs(batch), SigKeys),
-        persist = true, s.tracker),
-      Caching.maybePersist(carried("pairs", emptyPairs(batch), PairKeys),
-        persist = true, s.tracker),
+      Caching.persist(carried("sig", emptySigs(batch), SigKeys)),
+      Caching.persist(carried("pairs", emptyPairs(batch), PairKeys)),
       carried("cl", emptyClusters(batch), ClKeys))
   }
 
@@ -110,7 +108,7 @@ object ClusterStream {
         compactEvery) { s =>
       val upd = Dedup.clustersMaintainUpdate(
         indexSoFar(s, rootDir, batch), batch, "id", "text",
-        "seq", "op", maxHamming, chunks, tracker = s.tracker)
+        "seq", "op", maxHamming, chunks)
       s.delta(upd.deltas.sigs, s"$rootDir/sig", SigKeys)
       s.delta(upd.deltas.pairs, s"$rootDir/pairs", PairKeys)
       s.delta(upd.deltas.clusters, s"$rootDir/cl", ClKeys)

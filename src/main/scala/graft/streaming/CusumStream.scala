@@ -50,8 +50,7 @@ object CusumStream {
   /** [[readState]] pinned against the prune window
     * ([[SnapshotStore.readPinned]]): materialized at read time, so
     * the frame outlives any number of further commits — the read an
-    * alerting poll should take when it holds results across batches.
-    * Release with [[graft.operators.Caching.freeLocalCheckpoint]]. */
+    * alerting poll should take when it holds results across batches. */
   def readStatePinned(spark: SparkSession, stateDir: String): DataFrame =
     SnapshotStore.readPinned(spark, stateDir, "CUSUM")
 

@@ -69,19 +69,12 @@ object DedupStream {
       idCol, textCol, p)
     val index = indexSoFar(spark, indexDir, id, emptyIndex)
     val hits = Dedup.screenAgainstIndex(docs, idCol, textCol, index,
-      threshold, p, persist = false)
-      .select(col(idCol)).distinct()
-    // survivors of the history screen, then near-dup-dedup WITHIN them.
-    // persist=false per the Caching contract: a long-running stream
-    // constructs fresh plans every batch — operator-internal persists
-    // would pile up one cache entry per batch; `rem` is the one
-    // multi-consumer frame, released with the batch scope
-    val rem = Caching.maybePersist(docs.join(hits, Seq(idCol), "left_anti"),
-      persist = true, s.tracker)
+      threshold, p).select(col(idCol)).distinct()
+    // survivors of the history screen, then near-dup-dedup WITHIN them
+    val rem = Caching.persist(docs.join(hits, Seq(idCol), "left_anti"))
     val pairs = Dedup.minhashNearDuplicates(rem, idCol, textCol,
-      threshold, p, persist = false)
-    val kept = Dedup.connectedComponents(rem.select(col(idCol)), idCol, pairs,
-        tracker = s.tracker)
+      threshold, p)
+    val kept = Dedup.connectedComponents(rem.select(col(idCol)), idCol, pairs)
       .filter(col("keep")).select(col(idCol))
       .join(rem, Seq(idCol))
     kept.write.mode("overwrite").parquet(s"$keptDir/b=$id")

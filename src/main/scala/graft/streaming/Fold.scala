@@ -31,11 +31,11 @@ import graft.operators.Caching
   *    consistent prior versions. The frontier has its own home because
   *    every state home can be legitimately empty while the feed
   *    advances (a view whose groups all folded to zero).
-  *  - BATCH SCOPE: one [[Caching.PersistTracker]] per batch, released
-  *    in a `finally` — Spark retries a failed batch with a FRESH step
-  *    call, so a fold that persists and then throws would otherwise
-  *    leak one cache entry per attempt for the stream's lifetime — and
-  *    the one compaction cadence: every `compactEvery`-th batch (id >
+  *  - BATCH SCOPE: one query scope ([[Caching.scoped]]) per batch —
+  *    Spark retries a failed batch with a FRESH step call, so a fold
+  *    that persists and then throws would otherwise leak one cache
+  *    entry per attempt for the stream's lifetime — and the one
+  *    compaction cadence: every `compactEvery`-th batch (id >
   *    0) runs the compactions its fold registered. In-batch compaction
   *    is replay-safe: the newest version (the one batch Structured
   *    Streaming can still replay) is never merged, and `foreachBatch`
@@ -57,12 +57,11 @@ object Fold {
       .foreachBatch { (batch: DataFrame, id: Long) => step(batch, id) }
       .start()
 
-  /** One batch of a fold: its persist tracker, and the commits that
-    * keep the frontier first and register compactions. */
+  /** One batch of a fold: the commits that keep the frontier first and
+    * register compactions. */
   private[streaming] final class Scope(batch: DataFrame, val id: Long,
       retainBelow: Int, private var frontier: Option[(DataFrame, String)]) {
     val spark: SparkSession = batch.sparkSession
-    val tracker = new Caching.PersistTracker
     private[Fold] val compactions =
       scala.collection.mutable.ArrayBuffer.empty[() => Unit]
 
@@ -92,11 +91,11 @@ object Fold {
   }
 
   private def run(s: Scope, compactEvery: Int)(body: Scope => Unit): Unit =
-    try {
+    Caching.scoped {
       body(s)
       if (compactEvery > 0 && s.id > 0 && s.id % compactEvery == 0)
         s.compactions.foreach(_())
-    } finally s.tracker.release()
+    }
 
   /** Run a fold body in batch scope, with no feed frontier. */
   private[streaming] def batch(batch: DataFrame, id: Long,

@@ -169,11 +169,8 @@ object IvmStream {
       .select((Seq("seq", "op") ++ bCols).map(col(_)): _*)
     val aNext = Cdc.applyChanges(aPrev, aCh, aKey, "seq", "op")
     val bNext = Cdc.applyChanges(bPrev, bCh, joinCol, "seq", "op")
-    // persist = false: a long-lived stream would leak one pinned
-    // affected-key frame per micro-batch; recomputing it is one
-    // max_by aggregation of the (small) batch per consumer
     val viewNext = Cdc.maintainJoinView(viewPrev, aPrev, aCh, aKey,
-      bPrev, bCh, joinCol, "seq", "op", persist = false)
+      bPrev, bCh, joinCol, "seq", "op")
     s.snapshot(aNext, s"$rootDir/a")
     s.snapshot(bNext, s"$rootDir/b")
     s.snapshot(viewNext, s"$rootDir/view")

@@ -98,7 +98,6 @@ object ManifestStream {
     Fold.guarded(batch, id, rootDir, "ManifestStream", retainBelow,
         compactEvery) { s =>
       val spark = s.spark
-      val tracker = s.tracker
       // gate once, consume thrice (cluster fold, meta delta, and the
       // maintenance-internal key reductions) — the checkpoint keeps the
       // batch-bounded curated feed from re-classifying per consumer; a
@@ -106,12 +105,11 @@ object ManifestStream {
       // still releases it with gateFeed's winner-reduction persist
       val gated = Caching.localCheckpoint(Cdc.gateFeed(
         batch.select(col("seq"), col("op"), col("id"), col("text"),
-          col("lang")), "id", "seq", "op", tracker = tracker)(classify),
-        tracker)
+          col("lang")), "id", "seq", "op")(classify))
       val upd = Dedup.clustersMaintainUpdate(
         ClusterStream.indexSoFar(s, rootDir, batch),
         gated.select(col("seq"), col("op"), col("id"), col("text")),
-        "id", "text", "seq", "op", maxHamming, chunks, tracker = tracker)
+        "id", "text", "seq", "op", maxHamming, chunks)
       // the meta home's delta IS the gated winner set: one row per
       // changed key (gateFeed reduces the batch), upserts carrying
       // (lang, score-of-the-new-image), deletes their key alone —
@@ -122,7 +120,7 @@ object ManifestStream {
         col("id"), col("lang"), score.as("__score"))
       // the cluster delta feeds its own commit AND the incremental
       // survivorship below — checkpoint once (feed-bounded)
-      val clDelta = Caching.localCheckpoint(upd.deltas.clusters, tracker)
+      val clDelta = Caching.localCheckpoint(upd.deltas.clusters)
       s.delta(upd.deltas.sigs, s"$rootDir/sig", SigKeys)
       s.delta(upd.deltas.pairs, s"$rootDir/pairs", PairKeys)
       s.delta(clDelta, s"$rootDir/cl", ClKeys)
@@ -146,16 +144,14 @@ object ManifestStream {
       // both feed-bounded (restricted to the affected clusters'
       // members), persisted so the restricted delta reconstruction and
       // the keep-best algebra run once per batch (r21)
-      val metaNow = Caching.maybePersist(
+      val metaNow = Caching.persist(
         DeltaStore.stateSoFar(spark, s"$rootDir/meta", id + 1,
           emptyMeta(batch, score), MetaKeys,
-          restrictTo = Some(recomputedMap.select(col("id")))),
-        persist = true, tracker)
-      val keepers = Caching.maybePersist(
+          restrictTo = Some(recomputedMap.select(col("id")))))
+      val keepers = Caching.persist(
         Dedup.keepBestFromClusters(recomputedMap,
             metaNow.select(col("id"), col("__score")), "id")
-          .filter(col("keep")).select(col("id")),
-        persist = true, tracker)
+          .filter(col("keep")).select(col("id")))
       val keeperRows = Sampling.assignSplits(
           keepers.join(metaNow.select(col("id"), col("lang")), Seq("id")),
           "id", splits)

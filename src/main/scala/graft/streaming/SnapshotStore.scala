@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Caching
+
 /** The versioned-snapshot exactly-once protocol shared by the
   * cumulative-state streaming twins ([[EwmaStream]], [[CusumStream]])
   * — ONE home for the contract so a protocol fix cannot silently miss
@@ -64,15 +66,15 @@ private[streaming] object SnapshotStore {
     * at read time, so the returned frame is served from executor-held
     * blocks and survives however many further batches prune the
     * directory underneath it. Costs one pass over the key-space-sized
-    * state; the caller releases the blocks via
-    * [[graft.operators.Caching.freeLocalCheckpoint]] when done.
+    * state; the blocks belong to the enclosing query scope
+    * ([[graft.operators.Caching]]).
     * (The narrow residue: the version must still exist at the moment
     * of the checkpointing pass itself — i.e. the read races only a
     * writer that commits AND prunes `retainBelow` further batches
     * within this single action, not an arbitrarily lazy consumer.) */
   def readPinned(spark: SparkSession, stateDir: String,
       what: String): DataFrame =
-    readLatest(spark, stateDir, what).localCheckpoint(true)
+    Caching.localCheckpoint(readLatest(spark, stateDir, what))
 
   /** The global monotone-seq frontier guard of every feed-keyed fold
     * ([[Fold.guarded]], which commits it first): bound the batch's seq

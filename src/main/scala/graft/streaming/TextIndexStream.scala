@@ -52,8 +52,7 @@ object TextIndexStream {
     * doc's new tf scored against its stale dl, with no error. This
     * reader pins both frames to the HIGHEST id committed in BOTH
     * homes and materializes them ([[SnapshotStore.readPinned]]
-    * semantics — release via
-    * [[graft.operators.Caching.freeLocalCheckpoint]]). */
+    * semantics). */
   def readIndex(spark: SparkSession, rootDir: String)
       : (DataFrame, DataFrame) = {
     val common = Fold.committed(spark, s"$rootDir/post").toSet
@@ -61,8 +60,8 @@ object TextIndexStream {
     if (common.isEmpty) throw new IllegalStateException(
       s"no batch committed in BOTH text-index homes under $rootDir")
     val k = common.max
-    (spark.read.parquet(s"$rootDir/post/b=$k").localCheckpoint(true),
-      spark.read.parquet(s"$rootDir/len/b=$k").localCheckpoint(true))
+    (Caching.localCheckpoint(spark.read.parquet(s"$rootDir/post/b=$k")),
+      Caching.localCheckpoint(spark.read.parquet(s"$rootDir/len/b=$k")))
   }
 
   /** Single-frame convenience views. For any read that pairs the two
@@ -90,8 +89,7 @@ object TextIndexStream {
     // the batch reduction runs ONCE and is persisted across the two
     // frame expansions — each home's commit is its own action, so an
     // unshared plan would re-reduce the batch per home
-    val latest = Caching.maybePersist(
-      Cdc.latestChanges(ch, "doc_id", "seq", "op"), persist = true, s.tracker)
+    val latest = Caching.persist(Cdc.latestChanges(ch, "doc_id", "seq", "op"))
     val postNext = Cdc.applyGroupedFromLatest(postPrev, latest, "doc_id")(
       c => TextAnalysis.tokenIndex(c, "doc_id", "text"))
     val lenNext = Cdc.applyGroupedFromLatest(lenPrev, latest, "doc_id")(

@@ -113,7 +113,7 @@ class CdcSpec extends SparkSpec {
     ).toDF("g", "seq", "op", "bname")
     val viewPrev = aSnap.join(bSnap, "g").select("k", "g", "pay", "bname")
     val got = Cdc.maintainJoinView(viewPrev, aSnap, aCh, "k",
-        bSnap, bCh, "g", "seq", "op", persist = false)
+        bSnap, bCh, "g", "seq", "op")
       .orderBy("k").as[(Long, Long, String, String)].collect().toSeq
     val recomputed = Cdc.applyChanges(aSnap, aCh, "k", "seq", "op")
       .join(Cdc.applyChanges(bSnap, bCh, "g", "seq", "op"), "g")
@@ -139,7 +139,7 @@ class CdcSpec extends SparkSpec {
     val poisoned = Seq((1L, 10L, "x1", "ten"), (3L, 20L, "POISON", "POISON"))
       .toDF("k", "g", "pay", "bname")
     val got = Cdc.maintainJoinView(poisoned, aSnap, aCh, "k",
-        bSnap, bCh, "g", "seq", "op", persist = false)
+        bSnap, bCh, "g", "seq", "op")
       .orderBy("k").as[(Long, Long, String, String)].collect().toSeq
     assert(got == Seq((1L, 10L, "x1u", "ten"),
       (3L, 20L, "POISON", "POISON")),
@@ -169,7 +169,7 @@ class CdcSpec extends SparkSpec {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val gated = Cdc.maintainJoinView(viewPrev, aSnap, aCh, "k",
-        bSnap, bCh, "g", "seq", "op", persist = false,
+        bSnap, bCh, "g", "seq", "op",
         broadcastKeyLimit = 0L)
       val plan = gated.queryExecution.executedPlan.toString
       assert(!plan.contains("Broadcast"),

@@ -40,7 +40,7 @@ class ChunkLmSpec extends SparkSpec {
   test("corpusFrequency: exact integer fixture") {
     val docs = Seq((1L, "a a b"), (2L, "b c")).toDF("doc_id", "text")
     val got = TextAnalysis.corpusFrequency(docs, "doc_id", "text",
-        rareMax = 1L, persist = false)
+        rareMax = 1L)
       .orderBy("doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
     // vocab: a=2, b=2, c=1

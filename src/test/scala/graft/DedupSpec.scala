@@ -597,14 +597,14 @@ class DedupSpec extends SparkSpec {
     val sup = sub + " epsilon zeta eta theta iota kappa lambda mu nu xi omicron pi"
     val df = Seq((1L, sub), (2L, sup)).toDF("doc_id", "text")
     val cont = Dedup.ngramContainmentPairs(df, "doc_id", "text",
-      n = 5, threshold = 0.9, maxDf = 1000, persist = false)
+      n = 5, threshold = 0.9, maxDf = 1000)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     // every 5-gram of the short doc appears in the long doc → C = 1.0
     // in the sub→sup direction ONLY
     assert(cont.toSeq == Seq((1L, 2L, 1.0)))
     // ...while symmetric jaccard misses the pair even at 0.5
     val j = Dedup.ngramJaccardPairs(df, "doc_id", "text",
-      n = 5, threshold = 0.5, maxDf = 1000, persist = false).count()
+      n = 5, threshold = 0.5, maxDf = 1000).count()
     assert(j == 0, "jaccard should miss the subsumption pair")
   }
 

@@ -84,7 +84,7 @@ class MixingSpec extends SparkSpec {
       (6L, 0L)) // zero-token doc must vanish
       .toDF("doc_id", "n_tokens")
     val spans = Mixing.packSpans(docs, "doc_id", "n_tokens",
-        seqLen = 4L, buckets = 4, persist = false)
+        seqLen = 4L, buckets = 4)
       .as[(Long, Long, Long, Long, Long)].collect().toSeq
     assert(!spans.exists(_._2 == 6L), "zero-token doc must emit no span")
     // total tokens 20 → sequences 0..4, each EXACTLY tiled: per seq,
@@ -118,14 +118,14 @@ class MixingSpec extends SparkSpec {
     val docs = (1L to 200L).map(i => (i, 1L + rnd.nextInt(9).toLong))
       .toDF("doc_id", "n_tokens")
     def run(b: Int) = Mixing.packSpans(docs, "doc_id", "n_tokens",
-        seqLen = 16L, buckets = b, persist = false)
+        seqLen = 16L, buckets = b)
       .as[(Long, Long, Long, Long, Long)].collect().toSet
     val one = run(1)
     assert(run(8) == one && run(64) == one,
       "bucket count must not change the layout")
     // and the layout is partitioning-invariant
     val repart = Mixing.packSpans(docs.repartition(13), "doc_id",
-        "n_tokens", seqLen = 16L, buckets = 8, persist = false)
+        "n_tokens", seqLen = 16L, buckets = 8)
       .as[(Long, Long, Long, Long, Long)].collect().toSet
     assert(repart == one)
   }

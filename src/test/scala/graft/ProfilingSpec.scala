@@ -390,7 +390,7 @@ class ProfilingSpec extends SparkSpec {
     val vals = (1 to 1000).map(i => (i.toLong, i.toDouble))
       .toDF("id", "v")
     val got = Profiling.approxQuantileEval(vals, col("v"),
-        Seq(250, 500, 750), accuracy = 100, persist = false)
+        Seq(250, 500, 750), accuracy = 100)
       .orderBy("probe_permille")
       .as[(Long, Long, Double, Boolean)].collect().toSeq
     // exact interpolated quantiles of 1..1000
@@ -401,13 +401,13 @@ class ProfilingSpec extends SparkSpec {
     // the sketch differs under a different merge order; the verdict
     // and the exact columns must not
     val re = Profiling.approxQuantileEval(vals.repartition(13), col("v"),
-        Seq(250, 500, 750), accuracy = 100, persist = false)
+        Seq(250, 500, 750), accuracy = 100)
       .orderBy("probe_permille")
       .as[(Long, Long, Double, Boolean)].collect().toSeq
     assert(re == got)
     // empty input: no rows, not a crash
     assert(Profiling.approxQuantileEval(vals.filter(lit(false)), col("v"),
-      Seq(500), accuracy = 100, persist = false).count() == 0L)
+      Seq(500), accuracy = 100).count() == 0L)
   }
 
   test("cusumSeasonal: hand fold — residuals score the pre-update forecast; kappa drains; jump alarms") {

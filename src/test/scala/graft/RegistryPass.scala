@@ -10,7 +10,9 @@ import org.apache.spark.sql.execution.FormattedMode
   * being built (measured at sf0.001 on a 4 vCPU host: 278 of 288, and
   * 249.7 s of a 260.9 s pass, against 11.2 s for every
   * `explainString` and ~0 s for analysis). `Test / fork` runs every
-  * suite in one JVM, so the pass runs once per test run. */
+  * suite in one JVM, so the pass runs once per test run. Each query is
+  * built and explained in its own query scope, so the pass holds no
+  * query's persists or checkpoints past its own. */
 object RegistryPass {
 
   /** One query's outcome: the failure to build or analyze it, else its
@@ -28,7 +30,7 @@ object RegistryPass {
         entries
       case None =>
         val entries = SparkEntry.all.map { q =>
-          try {
+          try graft.operators.Caching.scoped {
             val qe = q.run(spark, dir).queryExecution
             qe.analyzed
             Entry(q.name, None,

@@ -252,7 +252,7 @@ class SimilaritySpec extends SparkSpec {
     }
     val df = rows.toDF("vec_id", "embedding")
     val pairs = Similarity.srpNearPairs(df, "vec_id", "embedding",
-      maxHamming = 7, persist = false)
+      maxHamming = 7)
       .select("a", "b").as[(Long, Long)].collect().toSet
     for (k <- 0 until 8)
       assert(pairs.contains((k.toLong, 100L + k)), s"planted pair $k missed")

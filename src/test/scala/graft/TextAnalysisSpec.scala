@@ -486,8 +486,7 @@ class TextAnalysisSpec extends SparkSpec {
     // q(ba)=q(bc)=1e6·1 div 2=500_000
     val docs = Seq((1L, "a b a b c"), (2L, "a b"), (3L, "c"))
       .toDF("doc_id", "text")
-    val got = TextAnalysis.bigramLmScore(docs, "doc_id", "text",
-        persist = false)
+    val got = TextAnalysis.bigramLmScore(docs, "doc_id", "text")
       .orderBy("doc_id").as[(Long, Long, Long, Double)].collect().toSeq
     assert(got == Seq(
       (1L, 4L, 3000000L, 750000.0), // 2·1e6 + 5e5 + 5e5 over 4
@@ -496,7 +495,7 @@ class TextAnalysisSpec extends SparkSpec {
     assert(!got.exists(_._1 == 3L))
     // integer pipeline ⇒ bit-identical under repartitioning
     val re = TextAnalysis.bigramLmScore(docs.repartition(7), "doc_id",
-        "text", persist = false)
+        "text")
       .orderBy("doc_id").as[(Long, Long, Long, Double)].collect().toSeq
     assert(re == got)
   }

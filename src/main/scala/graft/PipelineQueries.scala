@@ -2432,9 +2432,9 @@ object PipelineQueries {
       },
       Some(pairStateOracle)),
     // The capstone's STREAMING twin as a driver-checked row (r19):
-    // the same change feed folded through ManifestStream's six
-    // SnapshotStore homes (gate ∘ cluster fold ∘ meta snapshot ∘
-    // keep-best ∘ splits, frontier-first) — batch 0 is the bootstrap
+    // the same change feed folded through ManifestStream's five
+    // DeltaStore homes plus its `f/` frontier snapshot (gate ∘ cluster
+    // fold ∘ meta delta ∘ keep-best ∘ splits, frontier-first) — batch 0 is the bootstrap
     // corpus as inserts (maintaining from empty state ≡ bootstrap:
     // every home is a pure function of the folded prefix), batch 1
     // the change batch. Constant score ⇒ min-id keepers, so the

@@ -45,7 +45,7 @@ object CdcStream {
   def currentSnapshot(spark: SparkSession, snapshotDir: String,
       initial: DataFrame): DataFrame =
     versions(spark, snapshotDir).lastOption match {
-      case Some(v) => spark.read.parquet(s"$snapshotDir/v=$v")
+      case Some(v) => Fold.read(spark, snapshotDir, Seq(v), "v=")
       case None    => initial
     }
 
@@ -59,7 +59,7 @@ object CdcStream {
       "retain >= 2: the previous version must survive for batch replay")
     val spark = batch.sparkSession
     val prev = versions(spark, snapshotDir).filter(_ < id).lastOption match {
-      case Some(v) => spark.read.parquet(s"$snapshotDir/v=$v")
+      case Some(v) => Fold.read(spark, snapshotDir, Seq(v), "v=")
       case None    => initial
     }
     Cdc.applyChanges(prev, batch, keyCol, seqCol, opCol)

@@ -65,7 +65,7 @@ object ClusterStream {
     * batch scope (r21): the maintenance fold reads each TWICE (sigs:
     * next-state anti-join + affected-hash semi-join; pairs:
     * carried-pair anti-joins + the pair delta), and an unpersisted
-    * stateSoFar re-runs its latest-wins delta reconstruction — a union
+    * stateSoFar re-runs its latest-wins delta reconstruction — a scan
     * + per-key shuffle over every committed delta partition — once per
     * consumer, growing with batch count. */
   private[streaming] def indexSoFar(s: Fold.Scope, rootDir: String,

@@ -43,12 +43,8 @@ object DedupStream {
       empty: DataFrame): DataFrame =
     Fold.committed(spark, indexDir).filter(_ < belowBatch) match {
       case Seq() => empty
-      case vs => union(spark, indexDir, vs)
+      case vs => Fold.read(spark, indexDir, vs)
     }
-
-  private def union(spark: SparkSession, dir: String,
-      vs: Seq[Long]): DataFrame =
-    vs.map(v => spark.read.parquet(s"$dir/b=$v")).reduce(_.unionByName(_))
 
   /** One foreachBatch step, factored out so a spec can drive replay
     * directly: screen batch `id`, commit survivors + their signature
@@ -57,8 +53,8 @@ object DedupStream {
     * `compactEvery > 0` runs [[compactIndex]] on every Nth batch
     * ([[Fold]]'s cadence) — without it a long-lived stream accrues one
     * index delta per batch, and [[indexSoFar]]'s per-batch cost (one
-    * listing + one `_SUCCESS` probe + one union branch per delta)
-    * grows linearly over the stream's lifetime. */
+    * `_SUCCESS` probe and one scanned directory per delta) grows
+    * linearly over the stream's lifetime. */
   def screenBatch(batch: DataFrame, id: Long, indexDir: String,
       keptDir: String, idCol: String, textCol: String, threshold: Double,
       p: MinHashParams = MinHashParams(),
@@ -80,7 +76,7 @@ object DedupStream {
     kept.write.mode("overwrite").parquet(s"$keptDir/b=$id")
     // the delta re-reads kept from ITS OWN committed files: the
     // signature write must not race the kept write's lazy plan
-    val keptBack = spark.read.parquet(s"$keptDir/b=$id")
+    val keptBack = Fold.read(spark, keptDir, Seq(id))
     Dedup.minhashSignatures(keptBack, idCol, textCol, p)
       .write.mode("overwrite").parquet(s"$indexDir/b=$id")
     s.onCompact(compactIndex(spark, indexDir))
@@ -101,7 +97,7 @@ object DedupStream {
     Fold.committed(spark, keptDir) match {
       case Seq() => throw new IllegalStateException(
         s"no committed kept batches under $keptDir")
-      case vs => union(spark, keptDir, vs)
+      case vs => Fold.read(spark, keptDir, vs)
     }
 
   /** [[Fold.compact]] of the index with the DISTINCT-union merge:
@@ -111,5 +107,5 @@ object DedupStream {
     * ingest's own step (`compactEvery`) or a maintenance window, never
     * beside a live reader. */
   def compactIndex(spark: SparkSession, indexDir: String): Unit =
-    Fold.compact(spark, indexDir)(union(spark, indexDir, _).distinct())
+    Fold.compact(spark, indexDir)(Fold.read(spark, indexDir, _).distinct())
 }

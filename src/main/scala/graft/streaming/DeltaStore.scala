@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   *  - [[compact]] periodically merges every delta strictly below the
   *    newest committed batch into the oldest merged id
   *    ([[Fold.compact]]), bounding the partition count a
-  *    reconstruction unions. 'D' winners are dropped from the
+  *    reconstruction scans. 'D' winners are dropped from the
   *    compacted base — nothing below the base exists for them to mask.
   *
   * Write contract: a delta partition carries AT MOST ONE row per key
@@ -47,31 +47,31 @@ private[graft] object DeltaStore {
 
   private val MarkerName = "_graft_layout"
 
+  /** The version column [[Fold.read]] adds to a multi-version read of
+    * the `b=<id>` directories. */
+  private val VersionCol = "b"
+
   /** Latest-wins reconstruction over the given delta versions,
     * KEEPING the `__dop` column (callers drop 'D' winners or not —
-    * [[compact]] needs them absent, reads need them filtered). With a
-    * `restrictTo` key frame, each partition is key-pruned BEFORE the
-    * reduction — per-key latest-wins commutes with key filtering, so
-    * a touched-keys read costs O(|keys| · partitions) reduce input,
-    * not O(state). */
+    * [[compact]] needs them absent, reads need them filtered). The
+    * versions are ONE scan ([[Fold.read]]) whose [[VersionCol]] carries
+    * each row's version. With a `restrictTo` key frame the scan is
+    * key-pruned BEFORE the reduction — per-key latest-wins commutes
+    * with key filtering, so a touched-keys read costs O(|keys| ·
+    * versions) reduce input, not O(state). */
   private def winners(spark: SparkSession, dir: String, vs: Seq[Long],
       keyCols: Seq[String], restrictTo: Option[DataFrame]): DataFrame = {
     require(vs.nonEmpty, s"winners over zero delta versions under $dir")
-    def restricted(df: DataFrame): DataFrame = restrictTo match {
-      case None => df
-      case Some(keys) =>
-        df.join(keys.select(keyCols.map(col(_)): _*), keyCols, "left_semi")
-    }
-    val parts = vs.sorted.map(v =>
-      restricted(spark.read.parquet(s"$dir/b=$v")).withColumn("__dv", lit(v)))
-    val all = parts.reduce(_.unionByName(_))
-    if (vs.sizeIs == 1) all.drop("__dv")
+    val scan = Fold.read(spark, dir, vs, versioned = true)
+    val all = restrictTo.fold(scan)(keys =>
+      scan.join(keys.select(keyCols.map(col(_)): _*), keyCols, "left_semi"))
+    if (vs.sizeIs == 1) all
     else {
       val valueCols = all.columns.toSeq
-        .filterNot(c => keyCols.contains(c) || c == DopCol || c == "__dv")
+        .filterNot(c => keyCols.contains(c) || c == DopCol || c == VersionCol)
       val packed = struct((DopCol +: valueCols).map(col(_)): _*)
       all.groupBy(keyCols.map(col(_)): _*)
-        .agg(max_by(packed, col("__dv")).as("__w"))
+        .agg(max_by(packed, col(VersionCol)).as("__w"))
         .select(keyCols.map(col(_)) ++
           (DopCol +: valueCols).map(c => col(s"__w.$c").as(c)): _*)
     }

@@ -1,9 +1,12 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{DataType, LongType, StructType}
 
 import graft.operators.Caching
 
@@ -40,9 +43,10 @@ import graft.operators.Caching
   *    is replay-safe: the newest version (the one batch Structured
   *    Streaming can still replay) is never merged, and `foreachBatch`
   *    serialization means no reader of the stream races the swap.
-  *  - VERSION LISTING AND COMPACTION: [[versions]] is the one listing
-  *    of a home's `b=`/`v=` versions, and [[compact]] the one staged
-  *    compaction with its crash heal, given the home's merge. */
+  *  - VERSION LISTING, READING AND COMPACTION: [[versions]] is the one
+  *    listing of a home's `b=`/`v=` versions, [[read]] the one reader
+  *    of them, and [[compact]] the one staged compaction with its crash
+  *    heal, given the home's merge. */
 object Fold {
 
   /** Run `step(batch, id)` on every micro-batch of `changes`, recovering
@@ -143,6 +147,71 @@ object Fold {
       prefix: String = "b="): Seq[Long] =
     versions(spark, dir, prefix)._1
 
+  /** The one reader of a state home: committed versions `vs` of `dir`
+    * as ONE file scan, whatever their count.
+    *
+    * SCHEMA RULE: the schema is the Spark row schema stored in the
+    * footer of the first part file of the oldest version that has one
+    * (key `org.apache.spark.sql.parquet.row.metadata`), read on the
+    * driver. Spark's own parquet inference (without `mergeSchema`)
+    * reads that same key from one part file, but in a Spark job, and
+    * the file relation makes every field nullable either way. So for
+    * Spark-written files, which every home holds, the scan is the one
+    * inference would build, without the job. The parquet reader
+    * resolves columns by name, so versions written with different
+    * column orders read alike, in the oldest version's order. A
+    * zero-row version still has a schema-only part file.
+    *
+    * A single version reads its leaf directory and adds no column.
+    * With `versioned` and more than one version, the scan adds the
+    * version id as a `LongType` column named after the prefix (`b` for
+    * `b=`), by partition discovery under `dir`; a home whose own data
+    * has a column of that name is rejected, since the version column
+    * would overwrite it. */
+  private[streaming] def read(spark: SparkSession, dir: String, vs: Seq[Long],
+      prefix: String = "b=", versioned: Boolean = false): DataFrame = {
+    require(vs.nonEmpty, s"read of zero versions under $dir")
+    val leaves = vs.sorted.map(v => s"$dir/$prefix$v")
+    scan(spark, leaves,
+      Option.when(versioned && leaves.sizeIs > 1)(prefix.stripSuffix("=")))
+  }
+
+  /** [[read]] over leaf directories that share one parent: versions,
+    * or a compaction's staging copy. `versionCol` names the column
+    * partition discovery fills from the `<versionCol>=<id>` names. */
+  private def scan(spark: SparkSession, leaves: Seq[String],
+      versionCol: Option[String]): DataFrame = {
+    val schema = footerSchema(spark, leaves)
+    val dir = new Path(leaves.head).getParent.toString
+    versionCol.foreach(vc => require(
+      !schema.fieldNames.exists(_.equalsIgnoreCase(vc)),
+      s"state home $dir has a data column named '$vc', the version " +
+        s"column a multi-version read of its $vc=<id> directories adds: " +
+        "rename the column"))
+    spark.read.schema(versionCol.fold(schema)(schema.add(_, LongType)))
+      .options(versionCol.map(_ => "basePath" -> dir).toMap)
+      .parquet(leaves: _*)
+  }
+
+  private val RowSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** The Spark row schema from the footer of the first part file under
+    * `leaves` ([[read]]'s schema rule). */
+  private def footerSchema(spark: SparkSession,
+      leaves: Seq[String]): StructType = {
+    val f = fs(spark, leaves.head)
+    val part = leaves.iterator.flatMap(l => f.listStatus(new Path(l)).iterator
+        .map(_.getPath).filter(_.getName.startsWith("part-")))
+      .nextOption().getOrElse(throw new IllegalStateException(
+        s"no part file under ${leaves.mkString(", ")}"))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(part,
+      spark.sparkContext.hadoopConfiguration))
+    val json = try reader.getFooter.getFileMetaData.getKeyValueMetaData
+      .get(RowSchemaKey) finally reader.close()
+    require(json != null, s"$part carries no Spark row schema ($RowSchemaKey)")
+    DataType.fromJson(json).asInstanceOf[StructType]
+  }
+
   /** Compact a delta home: `merge` every committed `b=` version STRICTLY
     * BELOW the newest into the OLDEST merged id, then drop the rest.
     * Read semantics are unchanged: every future batch id is above all
@@ -170,7 +239,8 @@ object Fold {
     val staging = s"$dir/compact_staging"
     if (f.exists(new Path(s"$staging/_SUCCESS"))) {
       versions(spark, dir)._2.headOption.foreach { v =>
-        spark.read.parquet(staging).write.mode("overwrite").parquet(s"$dir/b=$v")
+        scan(spark, Seq(staging), None).write.mode("overwrite")
+          .parquet(s"$dir/b=$v")
       }
       f.delete(new Path(staging), true)
     }
@@ -178,7 +248,7 @@ object Fold {
     if (vs.length < 3) return // newest untouchable; need >= 2 below it
     val mergeIds = vs.dropRight(1)
     merge(mergeIds).write.mode("overwrite").parquet(staging)
-    spark.read.parquet(staging)
+    scan(spark, Seq(staging), None)
       .write.mode("overwrite").parquet(s"$dir/b=${mergeIds.head}")
     mergeIds.tail.foreach(v => f.delete(new Path(s"$dir/b=$v"), true))
     f.delete(new Path(staging), true)

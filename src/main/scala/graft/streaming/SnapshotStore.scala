@@ -39,7 +39,7 @@ private[streaming] object SnapshotStore {
       empty: DataFrame): DataFrame =
     Fold.committed(spark, stateDir).filter(_ < belowBatch).lastOption match {
       case None => empty
-      case Some(v) => spark.read.parquet(s"$stateDir/b=$v")
+      case Some(v) => Fold.read(spark, stateDir, Seq(v))
     }
 
   /** The latest committed state — the consumer read. Throws when no
@@ -57,7 +57,7 @@ private[streaming] object SnapshotStore {
     Fold.committed(spark, stateDir).lastOption match {
       case None => throw new IllegalStateException(
         s"no committed $what state under $stateDir")
-      case Some(v) => spark.read.parquet(s"$stateDir/b=$v")
+      case Some(v) => Fold.read(spark, stateDir, Seq(v))
     }
 
   /** [[readLatest]] MATERIALIZED inside the prune window — the

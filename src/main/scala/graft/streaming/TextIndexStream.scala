@@ -60,8 +60,8 @@ object TextIndexStream {
     if (common.isEmpty) throw new IllegalStateException(
       s"no batch committed in BOTH text-index homes under $rootDir")
     val k = common.max
-    (Caching.localCheckpoint(spark.read.parquet(s"$rootDir/post/b=$k")),
-      Caching.localCheckpoint(spark.read.parquet(s"$rootDir/len/b=$k")))
+    (Caching.localCheckpoint(Fold.read(spark, s"$rootDir/post", Seq(k))),
+      Caching.localCheckpoint(Fold.read(spark, s"$rootDir/len", Seq(k))))
   }
 
   /** Single-frame convenience views. For any read that pairs the two
